@@ -64,15 +64,6 @@ def _pad_to_blocks(ch: np.ndarray) -> np.ndarray:
     return np.pad(ch, ((0, ph), (0, pw)), mode="edge")
 
 
-def _blockify(ch: np.ndarray) -> np.ndarray:
-    h, w = ch.shape
-    return ch.reshape(h // _DCT_N, _DCT_N, w // _DCT_N, _DCT_N).transpose(0, 2, 1, 3)
-
-
-def _unblockify(blocks: np.ndarray, h: int, w: int) -> np.ndarray:
-    return blocks.transpose(0, 2, 1, 3).reshape(h, w)
-
-
 def encode_dctq(img: np.ndarray) -> bytes:
     """All-channel fused path: one broadcast matmul pair over
     (c, by, bx, 8, 8) instead of a per-channel einsum loop — ~5× fewer

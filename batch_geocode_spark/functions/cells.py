@@ -248,13 +248,3 @@ def np_polyfill_bbox(w: float, s: float, e: float, n: float, res: int):
     xx, yy = np.meshgrid(xs, ys)
     return (res * _RES_SHIFT + yy.ravel() * _Y_SHIFT + xx.ravel()).astype(np.int64)
 
-
-def pick_cover_res(w: float, s: float, e: float, n: float, max_cells: int = 256) -> int:
-    """Finest resolution whose bbox cover stays under ``max_cells``."""
-    for res in range(MAX_RES, -1, -1):
-        grid = 2**res
-        nx = max(1, int((e - w) / 360.0 * grid) + 2)
-        ny = max(1, int((n - s) / 180.0 * grid) + 2)
-        if nx * ny <= max_cells:
-            return res
-    return 0

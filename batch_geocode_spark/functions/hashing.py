@@ -27,12 +27,3 @@ def hash60(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
-
-def hash60_spark_sql(expr: str) -> str:
-    """Spark SQL text for hash60 (for shared derivation SQL)."""
-    return f"CAST(conv(substr(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def hash60_duckdb_sql(expr: str) -> str:
-    """DuckDB SQL text computing the identical value."""
-    return f"CAST(CAST(('0x' || substr(md5({expr}), 1, 15)) AS UBIGINT) AS BIGINT)"

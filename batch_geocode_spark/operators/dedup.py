@@ -281,22 +281,6 @@ def _perm_params(num_perm: int, seed: int = 42) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def minhash_signatures(
-    docs: DataFrame, n: int = 4, num_perm: int = 64, seed: int = 42,
-    base_hash: str = "xxhash64",
-) -> DataFrame:
-    """(doc_id, perm, sig): MinHash signature rows — explode shingle base
-    hashes through affine permutations, keyed min-aggregate (map-side
-    combine keeps shuffle volume at num_perm rows/doc).
-
-    ``base_hash='md5_60'`` switches the shingle base hash to the
-    cross-engine md5-derived hash so a DuckDB oracle can reproduce the
-    signatures value-for-value; xxhash64 stays the production default."""
-    return _minhash_signatures_from_shingles(
-        word_shingles(docs, n=n), num_perm=num_perm, seed=seed, base_hash=base_hash
-    )
-
-
 def _grouped_shingle_hashes(
     sh: DataFrame, base_hash: str = "xxhash64"
 ) -> DataFrame:
@@ -355,25 +339,6 @@ def _batch_signature_matrices(
             vals = (a_arr[p] * flat + b_arr[p]) % MERSENNE_P31
             sig_mat[:, p] = np.minimum.reduceat(vals, offsets)
         yield pdf["doc_id"].to_numpy(np.int64), sig_mat
-
-
-def _minhash_signatures_from_shingles(
-    sh: DataFrame, num_perm: int = 64, seed: int = 42, base_hash: str = "xxhash64"
-) -> DataFrame:
-    grouped = _grouped_shingle_hashes(sh, base_hash=base_hash)
-
-    def sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        perm_idx = np.arange(num_perm, dtype=np.int32)
-        for doc_ids, sig_mat in _batch_signature_matrices(it, num_perm, seed):
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(doc_ids, num_perm),
-                    "perm": np.tile(perm_idx, len(doc_ids)),
-                    "sig": sig_mat.ravel(),
-                }
-            )
-
-    return grouped.mapInPandas(sig, schema="doc_id long, perm int, sig long")
 
 
 def _banded_keys_from_grouped(

@@ -6,7 +6,7 @@ result types (geocode/query_funcs.py:464). shapely/STRtree are
 unavailable, so the exact test is vectorized numpy even-odd ray
 casting; the STRtree role is played by a geocell-cover prefilter:
 
-    polygons --mapInPandas--> (cell, admin_id) cover at res R
+    polygons --driver numpy--> (cell, admin_id) cover at res R
     points   --cell_encode--> cell at res R
     points ⋈_broadcast cover on cell        -- candidate pairs only
     candidates ⋈_broadcast polygons(rings)  -- attach geometry
@@ -26,48 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from batch_geocode_spark.functions.cells import cell_encode, np_polyfill_bbox
-
-
-def polygon_cell_cover(
-    polygons: DataFrame, res: int, driver_side: bool = True
-) -> DataFrame:
-    """(admin_id, cell) for every res-cell intersecting each polygon bbox.
-
-    The polygon side is broadcast downstream, so it is small by design;
-    ``driver_side=True`` computes the cover with driver numpy (4 doubles
-    per polygon in, no Python-worker stage). Set False to distribute via
-    mapInPandas for very large polygon sets.
-    """
-    bbox_only = polygons.select("admin_id", "bb_w", "bb_s", "bb_e", "bb_n")
-
-    if driver_side:
-        pdf = bbox_only.toPandas()
-        ids, cells_out = [], []
-        for row in pdf.itertuples():
-            cc = np_polyfill_bbox(row.bb_w, row.bb_s, row.bb_e, row.bb_n, res)
-            ids.append(np.full(len(cc), row.admin_id, dtype=np.int64))
-            cells_out.append(cc)
-        out = pd.DataFrame(
-            {
-                "admin_id": np.concatenate(ids) if ids else np.asarray([], dtype=np.int64),
-                "cell": np.concatenate(cells_out) if ids else np.asarray([], dtype=np.int64),
-            }
-        )
-        return polygons.sparkSession.createDataFrame(out, schema="admin_id long, cell long")
-
-    def cover(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cells_out = [], []
-            for row in pdf.itertuples():
-                cc = np_polyfill_bbox(row.bb_w, row.bb_s, row.bb_e, row.bb_n, res)
-                ids.append(np.full(len(cc), row.admin_id, dtype=np.int64))
-                cells_out.append(cc)
-            if ids:
-                yield pd.DataFrame(
-                    {"admin_id": np.concatenate(ids), "cell": np.concatenate(cells_out)}
-                )
-
-    return bbox_only.mapInPandas(cover, schema="admin_id long, cell long")
 
 
 _EDGE_POINT_BUDGET = 4_000_000  # max edges×points elements materialized at once
@@ -127,10 +85,8 @@ def pip_join(
     and never duplicate ring structs through Arrow.
     """
     spark = points.sparkSession
-    # ONE driver collect feeds cover, attributes AND rings (r7: this was
-    # two separate polygon-side jobs — a bbox toPandas in
-    # polygon_cell_cover plus a rings collect); the polygon side is
-    # driver-sized by contract, so all three derivations are local.
+    # ONE driver collect feeds cover, attributes AND rings; the polygon
+    # side is driver-sized by contract, so all three derivations are local.
     poly_rows = polygons.select(
         "admin_id", "iso2", "admin_level", "name", "bb_w", "bb_s", "bb_e", "bb_n", "rings"
     ).collect()

@@ -34,12 +34,41 @@ def _default_local_dir() -> str:
     return os.path.join(tempfile.gettempdir(), "spark-local")
 
 
+def default_driver_memory(mem_total_kb: int | None) -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: half of the
+    host's RAM, at most 16g (16g when RAM is unknown). Half leaves room
+    for the OS and the Python workers; the cap keeps GC pauses short."""
+    cap_mb = 16 << 10
+    if not mem_total_kb:
+        return f"{cap_mb}m"
+    return f"{min(mem_total_kb // 2048, cap_mb)}m"
+
+
+def _mem_total_kb() -> int | None:
+    """MemTotal from /proc/meminfo in KiB; None where it is absent."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "batch_geocode_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Get or create the engine's SparkSession.
+
+    Spark's generated-class cache is a JVM-wide singleton sized on first
+    use, so the ``spark.sql.codegen.cache.maxEntries`` set here holds
+    only when this function creates the JVM's first session; later
+    sessions in the same JVM share the cache as it was first sized.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -88,7 +117,19 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # NOTE: empirically a 48g local heap triggers ~100s GC stalls on
         # this workload; 16g is ample for sf0.1 and keeps pauses short
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(_mem_total_kb()),
+        )
+        # generated classes are cached per JVM, LRU, 100 by default. One
+        # warm geo_spatial perfbench iteration needs 131 classes, a
+        # curate_docs one about 90, and the 60-query queries() battery
+        # at sf0.01 about 850, so at 100 the cache evicts in a cycle and
+        # every warm pass Janino-compiles, loads and JITs its classes
+        # again (99-118 per geo_spatial iteration, about 1,300 per
+        # battery pass). 2000 is over twice the largest working set; a
+        # full battery pass costs about 6 MB more Metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # G1's concurrent cycles collapse (10-40x slowdowns, huge
         # variance) under the humongous-allocation storm of Arrow binary
         # batches; throughput-oriented ParallelGC is stable and fast here

@@ -7,6 +7,7 @@ Usage: python scripts/check_correctness.py [sf_dir] [query_prefix...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -31,11 +32,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     prefixes = tuple(sys.argv[2:]) or ("",)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from batch_geocode_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8, app_name="correctness")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
+    spark = get_spark(master=f"local[{cpus}]", app_name="correctness")
     con = duckdb.connect()
     for t in [
         "region",

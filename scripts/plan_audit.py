@@ -41,7 +41,8 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from batch_geocode_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8, app_name="plan_audit")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
+    spark = get_spark(master=f"local[{cpus}]", app_name="plan_audit")
     rows = []
     # rows whose constructor runs Spark jobs by documented eager contract
     eager = {"d04", "d05", "c01", "e04", "g18", "g19", "g20", "t07"}
@@ -58,7 +59,7 @@ def main() -> int:
     lines = [
         "# PLANS — physical-plan shape audit (generated by scripts/plan_audit.py)",
         "",
-        f"EXECUTED (AQE-final) plans over `{sf_dir}` on local[8] — what",
+        f"EXECUTED (AQE-final) plans over `{sf_dir}` on local[{cpus}] — what",
         "actually ran, not the static pre-AQE guess. Counters: shuffle /",
         "broadcast / reused exchanges, broadcast-hash / sort-merge /",
         "nested-loop / cartesian joins, parquet scans, whole-stage-codegen",
