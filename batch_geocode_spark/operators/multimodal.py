@@ -12,9 +12,6 @@ no state; partition sizing is governed by
 Keep the ``bytes`` column OUT of every non-pixel pipeline (select early)
 so Parquet column pruning drops the payload — at 10^12 rows the payload
 is the table; see SURVEY.md §4 'column pruning'.
-
-Audio/video decoding is stubbed (no codec libs in this container) behind
-clearly-marked NotImplementedError with the real operator signature.
 """
 
 from __future__ import annotations
@@ -366,23 +363,4 @@ def image_near_dup_pairs(
         F.col("doc_a").alias("image_a"),
         F.col("doc_b").alias("image_b"),
         "hamming",
-    )
-
-
-def decode_audio(df: DataFrame, fmt_col: str = "fmt") -> DataFrame:
-    """STUB — audio codecs unavailable in this container. Real signature:
-    (id, bytes, fmt) → (id, samples array<float>, sample_rate int) via
-    the same mapInPandas shape as validate_images."""
-    raise NotImplementedError(
-        "audio decode requires a codec library not present in this environment; "
-        "the Spark plumbing matches validate_images (mapInPandas over binary)"
-    )
-
-
-def sample_video_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """STUB — video codecs unavailable. Real signature: (id, bytes, fmt)
-    → exploded (id, frame_no int, frame binary) rows."""
-    raise NotImplementedError(
-        "video frame sampling requires a codec library not present here; "
-        "plumbing = mapInPandas emitting multiple rows per input row"
     )

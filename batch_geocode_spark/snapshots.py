@@ -341,7 +341,6 @@ def upsert_snapshotted(
     DELETE contract, still bucket-pruned."""
     spark = df.sparkSession
     job_id = job_id or f"upsert-{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     cur = table.current()
     if cur is not None:
         committed = table.committed_buckets()
@@ -378,7 +377,9 @@ def upsert_snapshotted(
     # hazard), and the post-write count must not re-scan deleted files.
     # The checkpoint holds only the affected buckets — small by design.
     merged = merged.localCheckpoint()
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(table.data_dir)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(table.data_dir)
     counts = {
         str(int(r["bucket"])): int(r["count"])
         for r in merged.groupBy("bucket").count().collect()
@@ -421,18 +422,19 @@ def compact_table(
     if layout not in ("namespace", "plain"):
         raise ValueError(f"unknown layout {layout!r}")
     df = table.read(spark).drop("ns", "bucket")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bucketed = df.withColumn("bucket", bucket_expr(key_col, n_buckets))
     if layout == "namespace":
         ns = f"compact-{cur['snapshot_id'] + 1}"
         bucketed = bucketed.withColumn("ns", F.lit(ns))
-        bucketed.write.mode("overwrite").partitionBy("ns", "bucket").parquet(
-            table.data_dir
-        )
+        bucketed.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("ns", "bucket").parquet(table.data_dir)
         key_of = lambda b: f"{ns}/{b}"  # noqa: E731
     else:
         bucketed = bucketed.localCheckpoint()
-        bucketed.write.mode("overwrite").partitionBy("bucket").parquet(table.data_dir)
+        bucketed.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(table.data_dir)
         key_of = str
     counts = {
         key_of(int(r["bucket"])): int(r["count"])
@@ -481,9 +483,7 @@ def write_snapshotted(
     the SAME per-group aggregate that already computes bucket counts,
     so enabling them adds no extra job.
     """
-    spark = df.sparkSession
     job_id = job_id or uuid.uuid4().hex[:12]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     bucketed = df.withColumn("bucket", bucket_expr(key_col, n_buckets))
     part_cols = ["bucket"]
@@ -515,7 +515,9 @@ def write_snapshotted(
     last = table.current() or {}
     for gi, group in enumerate(groups):
         part = source.filter(F.col("bucket").isin([int(b) for b in group]))
-        part.write.mode("overwrite").partitionBy(*part_cols).parquet(table.data_dir)
+        part.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*part_cols).parquet(table.data_dir)
         aggs = [F.count(F.lit(1)).alias("count")]
         for c in stats_cols or []:
             aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]

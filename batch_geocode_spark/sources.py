@@ -132,30 +132,6 @@ def read_csv_bytes(
     return df, enc
 
 
-def read_excel_via_driver(
-    spark: SparkSession, path: str, schema: str | None = None, **read_excel_kwargs
-) -> DataFrame:
-    """Excel ingest (reference utilities.py:174): Spark has no native
-    Excel reader, so this is a driver-side pandas pass-through —
-    gated behind an import-try because no Excel engine (openpyxl/xlrd)
-    ships in this container. The Spark hand-off is real; only the
-    byte-level parse is environment-blocked."""
-    import pandas as pd
-
-    try:
-        pdf = pd.read_excel(path, **read_excel_kwargs)
-    except ImportError as ex:  # no openpyxl/xlrd in this environment
-        raise NotImplementedError(
-            "Excel parsing needs an engine (openpyxl/xlrd) not present in "
-            "this container; plumbing mirrors read_csv_bytes"
-        ) from ex
-    return (
-        spark.createDataFrame(pdf, schema=schema)
-        if schema is not None
-        else spark.createDataFrame(pdf)
-    )
-
-
 def read_csv_with_encoding_sweep(
     spark: SparkSession,
     path: str,

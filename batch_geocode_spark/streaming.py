@@ -29,6 +29,58 @@ IMAGES_SCHEMA = (
 )
 
 
+def _image_stream(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """File-stream source over image parquet drops in ``input_dir``."""
+    reader = spark.readStream.schema(IMAGES_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_dir)
+
+
+def _start(stream: DataFrame, process_batch, checkpoint_dir: str, available_now: bool):
+    """Start a foreachBatch query: ``process_batch(batch_df, batch_id)``
+    runs once per micro-batch, and the checkpoint records source offsets
+    so a restart replays only the last uncommitted batch."""
+    writer = (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _snapshot_delta_batch(
+    gazetteer: DataFrame, table: SnapshotTable, key_col: str, job_prefix: str, to_delta
+):
+    """foreachBatch body shared by the snapshot sinks: geocode the batch,
+    turn its best rows into a delta with ``to_delta(best)``, and append
+    the delta under the batch-scoped namespace ``batch-<id>``. Later
+    batches never collide with earlier ones, and a replayed batch reuses
+    its namespace, whose committed buckets ``write_snapshotted`` skips —
+    so a replay leaves exactly one copy of the batch's rows."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        _, best = G.geocode_images(batch_df, gazetteer)
+        delta = to_delta(best).withColumn("batch_id", F.lit(int(batch_id)))
+        write_snapshotted(
+            delta,
+            table,
+            key_col=key_col,
+            n_buckets=8,
+            group_size=8,
+            job_id=f"{job_prefix}-{batch_id}",
+            namespace=f"batch-{batch_id}",
+        )
+
+    return process_batch
+
+
 def stream_geocode_to_snapshots(
     spark: SparkSession,
     input_dir: str,
@@ -48,36 +100,14 @@ def stream_geocode_to_snapshots(
     aggregate the deltas with ``read_density``. Restart safety =
     streaming checkpoint (source offsets) + snapshot manifest (committed
     output): a replayed batch reuses its namespace and is idempotent."""
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _, best = G.geocode_images(batch_df, gazetteer)
-        delta = T.cell_density(best, res=res).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        write_snapshotted(
-            delta,
-            table,
-            key_col="cell",
-            n_buckets=8,
-            group_size=8,
-            job_id=f"stream-batch-{batch_id}",
-            namespace=f"batch-{batch_id}",
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    process_batch = _snapshot_delta_batch(
+        gazetteer, table, "cell", "stream-batch",
+        lambda best: T.cell_density(best, res=res),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(
+        _image_stream(spark, input_dir, max_files_per_trigger),
+        process_batch, checkpoint_dir, available_now,
+    )
 
 
 def stream_exact_dedup(
@@ -121,10 +151,7 @@ def stream_pip_matches(
     shape) instead."""
     from batch_geocode_spark.operators import pip as PIP
 
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
+    stream = _image_stream(spark, input_dir, max_files_per_trigger)
     vetted = G.vet_candidates(G.build_candidates(stream, gazetteer))
     return PIP.pip_join(
         vetted, polygons, res=res, id_col="image_id",
@@ -155,20 +182,10 @@ def stream_knn_to_parquet(
     overwrite its own partition and nothing else — the same idempotence
     contract stream_geocode_to_snapshots gets from per-batch snapshot
     namespaces."""
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    process_batch = _knn_batch_writer(gazetteer, out_dir, k)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start(
+        _image_stream(spark, input_dir, max_files_per_trigger),
+        _knn_batch_writer(gazetteer, out_dir, k), checkpoint_dir, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _knn_batch_writer(gazetteer: DataFrame, out_dir: str, k: int):
@@ -180,13 +197,12 @@ def _knn_batch_writer(gazetteer: DataFrame, out_dir: str, k: int):
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         vetted = G.vet_candidates(G.build_candidates(batch_df, gazetteer))
         (
             KNN.knn_within_image(vetted, k=k)
             .withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(out_dir)
         )
@@ -237,36 +253,14 @@ def stream_geocode_to_pyramid(
     scoped snapshot namespaces make replays idempotent."""
     from batch_geocode_spark.operators.rollups import tile_pyramid
 
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _, best = G.geocode_images(batch_df, gazetteer)
-        delta = tile_pyramid(
-            T.cell_density(best, res=levels[0]), levels=levels
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        write_snapshotted(
-            delta,
-            table,
-            key_col="cell",
-            n_buckets=8,
-            group_size=8,
-            job_id=f"stream-pyr-batch-{batch_id}",
-            namespace=f"batch-{batch_id}",
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    process_batch = _snapshot_delta_batch(
+        gazetteer, table, "cell", "stream-pyr-batch",
+        lambda best: tile_pyramid(T.cell_density(best, res=levels[0]), levels=levels),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(
+        _image_stream(spark, input_dir, max_files_per_trigger),
+        process_batch, checkpoint_dir, available_now,
+    )
 
 
 def read_pyramid(spark: SparkSession, table: SnapshotTable) -> DataFrame:
@@ -307,36 +301,16 @@ def stream_zonal_deltas(
     (batch-scoped snapshot namespaces make replays idempotent)."""
     from batch_geocode_spark.operators.rollups import zonal_cells
 
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _, best = G.geocode_images(batch_df, gazetteer)
-        delta = zonal_cells(
+    process_batch = _snapshot_delta_batch(
+        gazetteer, table, "cell", "stream-zonal-batch",
+        lambda best: zonal_cells(
             T.cell_density(best, res=res), polygons, res=res, pip_res=pip_res
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        write_snapshotted(
-            delta,
-            table,
-            key_col="cell",
-            n_buckets=8,
-            group_size=8,
-            job_id=f"stream-zonal-batch-{batch_id}",
-            namespace=f"batch-{batch_id}",
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(
+        _image_stream(spark, input_dir, max_files_per_trigger),
+        process_batch, checkpoint_dir, available_now,
+    )
 
 
 def read_zonal(spark: SparkSession, table: SnapshotTable) -> DataFrame:
@@ -375,42 +349,20 @@ def stream_site_weights(
     per-batch increment; clustering itself runs at READ time on the
     folded site table — gazetteer-scale, thousands of rows at 100 TB —
     so recompute-on-read serving is cheap and always consistent."""
-
-    reader = spark.readStream.schema(IMAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _, best = G.geocode_images(batch_df, gazetteer)
-        delta = (
+    process_batch = _snapshot_delta_batch(
+        gazetteer, table, "site_key", "stream-sites-batch",
+        lambda best: (
             best.groupBy(
                 F.col("best_lat").alias("lat"), F.col("best_long").alias("lng")
             )
             .agg(F.min("image_id").alias("site_id"), F.count(F.lit(1)).alias("w"))
             .withColumn("site_key", F.concat_ws(",", "lat", "lng"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-        )
-        write_snapshotted(
-            delta,
-            table,
-            key_col="site_key",
-            n_buckets=8,
-            group_size=8,
-            job_id=f"stream-sites-batch-{batch_id}",
-            namespace=f"batch-{batch_id}",
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(
+        _image_stream(spark, input_dir, max_files_per_trigger),
+        process_batch, checkpoint_dir, available_now,
+    )
 
 
 def read_spatial_clusters(
@@ -612,7 +564,6 @@ def ewma_cell_density(
     gazetteer: DataFrame,
     alpha: float = 0.5,
     res: int = 9,
-    api: str = "auto",
 ):
     """CUSTOM stateful operator: per-cell exponentially-decayed image
     density across micro-batches — an evolving heatmap no built-in
@@ -620,84 +571,17 @@ def ewma_cell_density(
 
     state per cell: (ewma, n_batches). Each trigger folds the batch
     count c in as ewma' = alpha*c + (1-alpha)*ewma. Emits the updated
-    row per touched cell every trigger (update mode).
-
-    ``api='transformWithState'`` uses Spark 4's maintained stateful API
-    (transformWithStateInPandas over the RocksDB state store — state
-    spills to disk, the contract an unbounded keyspace needs). Its
-    Python side requires the ``protobuf`` package; ``api='auto'``
-    (default) picks it when protobuf is importable and otherwise falls
-    back to the legacy ``applyInPandasWithState`` GroupState path
-    (this container ships no protobuf — ENV-BLOCKED, the same honest
-    gate as the Excel/audio codecs). Both paths produce identical
-    output.
+    row per touched cell every trigger (update mode), through
+    ``applyInPandasWithState`` (GroupState).
     """
-    if api == "auto":
-        api = (
-            "transformWithState" if _has_protobuf() else "applyInPandasWithState"
-        )
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
     keyed = (
         images_stream.select("image_id", G.extract_loc_key(F.col("caption")).alias("loc_key"))
         .join(F.broadcast(gazetteer.filter(F.col("api_rank") == 1)),
               F.col("loc_key") == F.col("name_norm"), "inner")
         .select("image_id", cell_encode_col(res))
     )
-
-    out_schema = "cell long, ewma double, n_batches int"
-    state_schema = "ewma double, n_batches int"
-
-    if api == "transformWithState":
-        if not _has_protobuf():
-            raise NotImplementedError(
-                "transformWithStateInPandas requires the 'protobuf' package "
-                "(pyspark's state-server protocol), which is not installed in "
-                "this container; use api='applyInPandasWithState' (identical "
-                "semantics) or install protobuf"
-            )
-        import pandas as pd
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        alpha_v = float(alpha)
-
-        class EwmaProcessor(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._state = handle.getValueState("ewma_state", state_schema)
-
-            def handleInputRows(self, key, rows, timerValues):
-                count = sum(len(pdf) for pdf in rows)
-                if self._state.exists():
-                    ewma, n = self._state.get()
-                else:
-                    ewma, n = 0.0, 0
-                ewma = alpha_v * count + (1.0 - alpha_v) * ewma
-                n = int(n) + 1
-                self._state.update((float(ewma), n))
-                yield pd.DataFrame(
-                    {"cell": [key[0]], "ewma": [float(ewma)], "n_batches": [n]}
-                )
-
-            def close(self) -> None:
-                pass
-
-        # transformWithState requires the RocksDB state store provider
-        keyed.sparkSession.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        return keyed.groupBy("cell").transformWithStateInPandas(
-            statefulProcessor=EwmaProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-    if api != "applyInPandasWithState":
-        raise ValueError(f"unknown api {api!r}")
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
@@ -716,20 +600,11 @@ def ewma_cell_density(
 
     return keyed.groupBy("cell").applyInPandasWithState(
         update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
+        outputStructType="cell long, ewma double, n_batches int",
+        stateStructType="ewma double, n_batches int",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def cell_encode_col(res: int):

@@ -151,14 +151,18 @@ def stress_chain_dedup(spark) -> dict:
     }
 
 
-def run(sf_dir: str, cpus: str) -> dict:
-    spark = get_spark(master=f"local[{cpus}]", app_name="bench")
-    # warm the JVM (codegen, broadcast machinery, parquet footers) and the
-    # Python UDF workers once so timings measure steady-state query cost
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM (codegen, broadcast machinery, parquet footers) and the
+    Python UDF workers once so timings measure steady-state query cost."""
     EQ._views(spark, sf_dir)
     spark.table("orders").count()
     EQ.g03_cell_assign(spark, sf_dir).count()
-    EQ.g05_admin_pip(spark, sf_dir).count()  # spins up the 32 Arrow workers
+    EQ.g05_admin_pip(spark, sf_dir).count()  # spins up the Arrow workers
+
+
+def run(sf_dir: str, cpus: str) -> dict:
+    spark = get_spark(master=f"local[{cpus}]", app_name="bench")
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     measurement: dict[str, dict] = {}

@@ -23,44 +23,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from batch_geocode_spark import entry_queries as EQ  # noqa: E402
 from batch_geocode_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "g02_composite_best",
-    "g04_tile_density",
-    "g05_admin_pip",
-    "g08_knn_within_image",
-    "q01_pricing_summary",
-    "q05_revenue_by_nation",
-    "e01_cosine_topk",
-    "e02_cosine_near_dup",
-    "d05_minhash_lsh",
-    "t02_quality_scores",
-    "c01_curation_pipeline",
-    "g18_spatial_clusters",
-]
+from bench import HEADLINE, wait_for_quiet, warm_up  # noqa: E402
 
 
 def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def wait_quiet(max_load: float = 4.0, timeout_s: int = 90) -> float:
-    t0 = time.time()
-    while True:
-        load = os.getloadavg()[0]
-        if load <= max_load or time.time() - t0 > timeout_s:
-            return load
-        time.sleep(5)
-
-
 def timed(spark, label, action, attempts=3):
     ts = []
     for _ in range(attempts):
-        wait_quiet()
+        wait_for_quiet()
         spark.sparkContext.setJobDescription(label)
         t0 = time.perf_counter()
         action()
@@ -71,11 +46,7 @@ def timed(spark, label, action, attempts=3):
 
 def _session(sf_dir, cpus):
     spark = get_spark(master=f"local[{cpus}]", app_name="bench_extra")
-    # same warmup as the frozen bench: JVM codegen + Arrow workers
-    EQ._views(spark, sf_dir)
-    spark.table("orders").count()
-    EQ.g03_cell_assign(spark, sf_dir).count()
-    EQ.g05_admin_pip(spark, sf_dir).count()
+    warm_up(spark, sf_dir)
     return spark
 
 

@@ -69,13 +69,6 @@ def test_extract_features_shape(images):
     assert arr.std(axis=0).min() > 0  # no constant/degenerate dims
 
 
-def test_audio_video_stubs():
-    with pytest.raises(NotImplementedError):
-        MM.decode_audio(None)
-    with pytest.raises(NotImplementedError):
-        MM.sample_video_frames(None)
-
-
 def test_validate_images_null_metadata(spark):
     """ADVICE r3: null w/h/phash (nullable parquet schema) must not cast
     NaN → INT64_MIN and report decode_ok=True with garbage hamming; such

@@ -426,3 +426,20 @@ def test_stats_prune_type_mismatch_keeps_bucket(spark, tmp_path_factory):
         t.live_bucket_keys(snap)
     got = t.read(spark, prune={"tag": (100, 200)}).count()
     assert got == 10
+
+
+def test_snapshotted_write_leaves_session_overwrite_mode(spark, best_df, tmp_path_factory):
+    """Snapshotted writes ask for dynamic partition overwrite per write:
+    the session conf stays as it was, so a later plain partitioned
+    overwrite in the caller's session still replaces the directory."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    t = SnapshotTable(str(tmp_path_factory.mktemp("conf_snap")))
+    write_snapshotted(best_df, t, n_buckets=4, group_size=2)
+    assert spark.conf.get(key) == before
+
+    out = str(tmp_path_factory.mktemp("plain_overwrite")) + "/t"
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, p string")
+    df.write.partitionBy("p").parquet(out)
+    df.filter("p = 'a'").write.mode("overwrite").partitionBy("p").parquet(out)
+    assert [r["p"] for r in spark.read.parquet(out).collect()] == ["a"]

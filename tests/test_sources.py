@@ -89,23 +89,3 @@ def test_read_csv_bytes_upload(spark):
     assert enc == "latin-1"
     got = {r["id"]: r["name"] for r in df.collect()}
     assert got == {1: "café", 2: "naïve"}
-
-
-def test_read_excel_is_environment_blocked(spark, tmp_path):
-    """S2: honestly stubbed — raises NotImplementedError when no Excel
-    engine (openpyxl/xlrd) is installed, instead of pretending. A valid
-    zip container gets past pandas' format sniff so the failure is the
-    engine import itself."""
-    import zipfile
-
-    p = tmp_path / "x.xlsx"
-    with zipfile.ZipFile(p, "w") as z:
-        z.writestr("xl/workbook.xml", "<workbook/>")  # sniffs as xlsx
-    try:
-        import openpyxl  # noqa: F401
-
-        pytest.skip("an Excel engine is installed here; stub not exercised")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError):
-        sources.read_excel_via_driver(spark, str(p))

@@ -122,23 +122,12 @@ def test_sessionize_matches_pandas_oracle(spark, sf_dir):
     assert g["n_events"].tolist() == w["n_events"].tolist()
 
 
-@pytest.mark.parametrize("api", ["auto", "transformWithState", "applyInPandasWithState"])
-def test_ewma_cell_density_stateful(spark, tmp_path_factory, api):
+@pytest.mark.parametrize("kwargs, alpha", [pytest.param({}, 0.5, id="auto"),
+                                           pytest.param({"alpha": 0.25}, 0.25, id="applyInPandasWithState")])
+def test_ewma_cell_density_stateful(spark, tmp_path_factory, kwargs, alpha):
     """Custom stateful op across two micro-batches: the second batch
-    must see the first batch's state (n_batches == 2, decayed EWMA).
-    Runs on the maintained transformWithState API (RocksDB state store)
-    when protobuf is available, the legacy GroupState path, and the
-    auto selector — identical semantics. When protobuf is absent
-    (this container), forcing transformWithState must raise the honest
-    env-blocked NotImplementedError, and 'auto' falls back."""
-    if api == "transformWithState" and not streaming._has_protobuf():
-        gaz = datagen.gazetteer_to_spark(spark)
-        stream = spark.readStream.schema(streaming.IMAGES_SCHEMA).parquet(
-            str(tmp_path_factory.mktemp("ewma_na"))
-        )
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming.ewma_cell_density(stream, gaz, api=api)
-        return
+    must see the first batch's state (n_batches == 2, decayed EWMA),
+    at the operator's default alpha ("auto") and at a passed-in one."""
     in_dir = str(tmp_path_factory.mktemp("ewma_in"))
     ckpt = str(tmp_path_factory.mktemp("ewma_ckpt"))
     images = datagen.images_to_spark(spark, 120, with_bytes=False)
@@ -150,8 +139,8 @@ def test_ewma_cell_density_stateful(spark, tmp_path_factory, api):
     stream = spark.readStream.schema(streaming.IMAGES_SCHEMA).option(
         "maxFilesPerTrigger", 1
     ).parquet(in_dir)
-    out = streaming.ewma_cell_density(stream, gaz, alpha=0.5, res=6, api=api)
-    name = f"ewma_{api[:9].lower()}"
+    out = streaming.ewma_cell_density(stream, gaz, res=6, **kwargs)
+    name = f"ewma_a{int(alpha * 100)}"
     q = (
         out.writeStream.format("memory")
         .queryName(name)
@@ -166,12 +155,11 @@ def test_ewma_cell_density_stateful(spark, tmp_path_factory, api):
     # rows from the second trigger prove cross-batch state
     second = got[got["n_batches"] == 2]
     assert len(second) > 0
-    # per-batch count c identical in both drops => ewma = 0.5c + 0.25c... 
-    # second-trigger ewma = 0.5*c + 0.5*(0.5*c) = 0.75c > first (0.5c)
+    # same count c in both drops: ewma alpha*c, then (2-alpha)*alpha*c
     first = got[got["n_batches"] == 1].set_index("cell")["ewma"]
     for r in second.itertuples():
         if r.cell in first.index:
-            assert r.ewma == pytest.approx(1.5 * first[r.cell], rel=1e-9)
+            assert r.ewma == pytest.approx((2 - alpha) * first[r.cell], rel=1e-9)
 
 
 def test_stream_multi_batch_deltas_accumulate(spark, tmp_path_factory):
@@ -310,24 +298,73 @@ def test_stream_knn_matches_batch(spark, tmp_path_factory):
     assert got["dist_km"].tolist() == want["dist_km"].tolist()
 
 
+def _assert_replay_idempotent(process_batch, images, total):
+    """Structured Streaming re-runs the last uncommitted batch after a
+    restart: delivering batch 0 twice must leave exactly one copy of its
+    rows (``total`` unchanged), and a new batch 1 must still accumulate."""
+    process_batch(images, 0)
+    once = total()
+    assert once > 0
+    process_batch(images, 0)  # replayed delivery of the same batch
+    assert total() == once
+    process_batch(images.limit(10), 1)
+    assert total() > once
+
+
 def test_stream_knn_replay_is_idempotent(spark, tmp_path_factory):
-    """Crash-replay contract (ADVICE r2): Structured Streaming re-runs
-    the last uncommitted batch after a restart; the kNN sink keys its
-    write by batch_id with dynamic partition overwrite, so delivering
-    the same batch twice must leave exactly one copy of its rows."""
+    """Crash-replay contract (ADVICE r2): the kNN sink keys its write by
+    batch_id with dynamic partition overwrite, so a replayed batch
+    overwrites its own partition and nothing else."""
     out_dir = str(tmp_path_factory.mktemp("knn_replay")) + "/results"
     images = datagen.images_to_spark(spark, 80, with_bytes=False)
     gaz = datagen.gazetteer_to_spark(spark)
+    _assert_replay_idempotent(
+        streaming._knn_batch_writer(gaz, out_dir, k=3),
+        images,
+        lambda: spark.read.parquet(out_dir).count(),
+    )
 
-    writer = streaming._knn_batch_writer(gaz, out_dir, k=3)
-    writer(images, 0)
-    once = spark.read.parquet(out_dir).count()
-    assert once > 0
-    writer(images, 0)  # replayed delivery of the same batch
-    assert spark.read.parquet(out_dir).count() == once
-    # a genuinely new batch still accumulates
-    writer(images.limit(10), 1)
-    assert spark.read.parquet(out_dir).count() > once
+
+@pytest.mark.parametrize("sink", ["density", "pyramid", "zonal", "sites"])
+def test_snapshot_sink_replay_is_idempotent(spark, tmp_path_factory, monkeypatch, sink):
+    """The same replay contract for the four snapshot sinks: a replayed
+    batch reuses its ``batch-<id>`` namespace, whose committed buckets
+    are skipped. Each case drives the sink's own foreachBatch body,
+    captured from ``_start``, and measures the sink's serving read."""
+    monkeypatch.setattr(streaming, "_start", lambda stream, process_batch, *_: process_batch)
+    in_dir = str(tmp_path_factory.mktemp("replay_in"))
+    ckpt = str(tmp_path_factory.mktemp("replay_ckpt"))
+    table = SnapshotTable(str(tmp_path_factory.mktemp("replay_snap")))
+    images = datagen.images_to_spark(spark, 80, with_bytes=False)
+    gaz = datagen.gazetteer_to_spark(spark)
+    polys = _admin_polys_local(spark)
+    start, read, mass_col = {
+        "density": (
+            lambda: streaming.stream_geocode_to_snapshots(spark, in_dir, gaz, table, ckpt),
+            lambda: streaming.read_density(spark, table),
+            "n_images",
+        ),
+        "pyramid": (
+            lambda: streaming.stream_geocode_to_pyramid(spark, in_dir, gaz, table, ckpt),
+            lambda: streaming.read_pyramid(spark, table),
+            "n_images",
+        ),
+        "zonal": (
+            lambda: streaming.stream_zonal_deltas(spark, in_dir, gaz, polys, table, ckpt),
+            lambda: streaming.read_zonal(spark, table),
+            "n_images",
+        ),
+        "sites": (
+            lambda: streaming.stream_site_weights(spark, in_dir, gaz, table, ckpt),
+            lambda: streaming.read_spatial_clusters(
+                spark, table, eps_km=2100.0, min_pts=1, res=3
+            ),
+            "w",
+        ),
+    }[sink]
+    _assert_replay_idempotent(
+        start(), images, lambda: read().agg(F.sum(mass_col)).first()[0]
+    )
 
 
 def test_stream_exact_dedup_across_batches(spark, sf_dir, tmp_path_factory):
