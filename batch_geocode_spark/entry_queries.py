@@ -1912,20 +1912,12 @@ def t05_bigram_stats(spark, sf_dir):
     """Corpus-wide top-20 word bigrams (vocabulary statistics): explode →
     count → top-k with unique tiebreak — the classic n-gram profile over
     the documents table."""
+    from batch_geocode_spark.operators.dedup import shingle_array
+
     _views(spark, sf_dir)
     docs = spark.table("documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    idx = F.when(
-        F.size(toks) >= 2, F.sequence(F.lit(1), F.size(toks) - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    bigrams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i.cast("int")), F.element_at(toks, (i + 1).cast("int"))
-        ),
-    )
     return (
-        docs.select(F.explode(bigrams).alias("bigram"))
+        docs.select(F.explode(shingle_array(2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))

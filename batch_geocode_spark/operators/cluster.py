@@ -156,13 +156,15 @@ def cluster_sites(
     from batch_geocode_spark.operators.dedup import connected_components
 
     if eager:
-        # lazy checkpoints (r7): construction no longer runs any job —
-        # the FIRST downstream action (the connected-components size
-        # probe) materializes sites and nbr once, and every later
-        # branch (ring-join a/b sides, eps-mass, core edges, border
-        # attach, final attach) reads the cached copies. Previously the
-        # two eager checkpoints cost two synchronous job barriers
-        # before the CC probe added a third.
+        # lazy checkpoints: the checkpointed partitions are written
+        # by the FIRST downstream action (the connected-components size
+        # probe), and every later branch (ring-join a/b sides,
+        # eps-mass, core edges, border attach, final attach) reads the
+        # cached copies. Under adaptive execution each call still runs
+        # jobs: it builds the adaptive plan's RDD, which executes any
+        # shuffle and broadcast stages of the plan there and then. What
+        # it saves over an eager checkpoint is the extra pass that
+        # writes the partitions before the CC probe.
         sites = sites.localCheckpoint(eager=False)
     nbr = eps_site_pairs(sites, eps_km, res)
     if eager:

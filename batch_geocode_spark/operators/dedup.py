@@ -45,20 +45,24 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # ----------------------------------------------------------------- shingles
 def shingle_array(n: int = 4, text_col: str = "text"):
     """Column expression: the (possibly repeating) word n-gram array of
-    one row's text — pure Column exprs (sequence/transform/element_at),
-    no UDF. Row-local, so it is stream-safe (streaming.py uses it for
-    the stateless decontamination map)."""
+    one row's text — pure Column exprs (sequence/transform/slice), no
+    UDF. Row-local, so it is stream-safe (streaming.py uses it for the
+    stateless decontamination map).
+
+    The text is split ONCE per row: the token array is bound as the
+    variable of an outer one-element ``transform``. Referenced directly
+    inside the per-shingle lambda, the split would be re-evaluated for
+    every shingle (the interpreted lambda does not share it)."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    # guard: Spark sequence(1, 0) would be DESCENDING, not empty
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(n)]
-        ),
-    )
+
+    def from_tokens(t):
+        # guard: Spark sequence(1, 0) would be DESCENDING, not empty
+        idx = F.when(
+            F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))
+        ).otherwise(F.array().cast("array<int>"))
+        return F.transform(idx, lambda i: F.array_join(F.slice(t, i, n), " "))
+
+    return F.element_at(F.transform(F.array(toks), from_tokens), 1)
 
 
 def word_shingles(docs: DataFrame, n: int = 4, text_col: str = "text") -> DataFrame:
@@ -471,9 +475,11 @@ def minhash_lsh_pairs(
         # checkpoint the signature mapInPandas kernel and its whole
         # upstream run once per reference (guide §2.4/§5: materialize a
         # small reused intermediate instead of recomputing it). Lazy:
-        # the terminal localCheckpoint below is the materializing
-        # action. bands×docs rows of (id, band, 8-byte key) — tiny
-        # relative to the corpus at any scale.
+        # the partitions are written by the terminal localCheckpoint
+        # below, though under adaptive execution this call already runs
+        # the shuffle stages of the shingle/signature upstream as jobs.
+        # bands×docs rows of (id, band, 8-byte key) — tiny relative to
+        # the corpus at any scale.
         banded = banded.localCheckpoint(eager=False)
     cand = _banded_candidates(banded, max_band_df)
     # exact verify per candidate pair via array_intersect on the two
@@ -604,10 +610,12 @@ def connected_components(
     count+hash aggregate, not a join.
     """
     # eager=False everywhere in this loop: the fixed-point probe's
-    # aggregate is then the action that materializes the checkpoint, so
-    # each round costs ONE driver round-trip, not two (checkpoint count
-    # + probe). Lineage still truncates at the first action on the
-    # checkpointed frame, which is always the probe immediately below.
+    # aggregate is then the action that writes the checkpoint, so a
+    # round has no separate materializing count. It is not one job per
+    # round: under adaptive execution each localCheckpoint call runs
+    # the round's shuffle stages as jobs before the probe does. Lineage
+    # still truncates at the first action on the checkpointed frame,
+    # which is always the probe immediately below.
     raw = pairs.select(
         F.greatest(F.col(id_a), F.col(id_b)).alias("a"),
         F.least(F.col(id_a), F.col(id_b)).alias("b"),

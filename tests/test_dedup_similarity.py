@@ -60,6 +60,55 @@ def test_exact_duplicates(spark):
     assert len(got) == 2
 
 
+# Edge texts for the shingle kernel. F.trim strips only spaces, and
+# Java's \s is ASCII-only, so a tab at either end leaves an empty
+# token and a no-break space (U+00A0) joins two words into one.
+_EDGE_TEXTS = [
+    "",
+    "   ",
+    "\t a  b\n\nc \t",
+    "one",
+    " ".join(f"w{i}" for i in range(1, 11)),
+    "  caf\u00e9  na\u00efve\u00a0d\u00e9j\u00e0 \U0001f600 \U0001f680x  ",
+    "  lead and trail  ",
+    None,
+]
+
+
+def _w_windows(n):
+    return [" ".join(f"w{i}" for i in range(s, s + n)) for s in range(1, 12 - n)]
+
+
+_NBSP_WORD = "na\u00efve\u00a0d\u00e9j\u00e0"
+# shingle_array(n) over _EDGE_TEXTS, by n; a null text has no shingles
+_EDGE_SHINGLES = {
+    1: [[""], [""], ["", "a", "b", "c", ""], ["one"], _w_windows(1),
+        ["caf\u00e9", _NBSP_WORD, "\U0001f600", "\U0001f680x"],
+        ["lead", "and", "trail"], []],
+    2: [[], [], [" a", "a b", "b c", "c "], [], _w_windows(2),
+        [f"caf\u00e9 {_NBSP_WORD}", f"{_NBSP_WORD} \U0001f600",
+         "\U0001f600 \U0001f680x"],
+        ["lead and", "and trail"], []],
+    4: [[], [], [" a b c", "a b c "], [], _w_windows(4),
+        [f"caf\u00e9 {_NBSP_WORD} \U0001f600 \U0001f680x"], [], []],
+    8: [[], [], [], [], _w_windows(8), [], [], []],
+    13: [[]] * 8,
+}
+
+
+def test_shingle_array_edge_texts(spark):
+    df = spark.createDataFrame(list(enumerate(_EDGE_TEXTS)), "id int, text string")
+    for n, want in _EDGE_SHINGLES.items():
+        rows = df.select("id", D.shingle_array(n).alias("s")).orderBy("id").collect()
+        assert [r["s"] for r in rows] == want, n
+
+
+def test_shingle_array_splits_once():
+    """The tokenizer appears once in the expression: inside the
+    per-shingle lambda it would run once per shingle."""
+    assert str(D.shingle_array(8)).count("split(") == 1
+
+
 def test_ngram_jaccard_matches_bruteforce(docs):
     got = D.ngram_jaccard_pairs(docs, n=4, threshold=0.3).toPandas()
     truth = _true_jaccard(docs.toPandas())

@@ -1,5 +1,6 @@
-"""Session defaults: generated classes are compiled once per JVM, and
-the default driver heap follows the host's RAM."""
+"""Session defaults: generated classes are compiled once per JVM, the
+default driver heap follows the host's RAM, and adaptive execution is
+on (which makes a lazy localCheckpoint run jobs when it is called)."""
 
 from pyspark.sql import functions as F
 
@@ -62,3 +63,24 @@ def test_default_driver_memory_is_half_of_ram_capped():
     assert default_driver_memory(4 << 20) == "2048m"
     assert default_driver_memory(256 << 20) == "16384m"
     assert default_driver_memory(None) == "16384m"
+
+
+def test_lazy_local_checkpoint_runs_stages_at_call_under_aqe(spark):
+    """With adaptive execution on, ``localCheckpoint(eager=False)`` builds
+    the adaptive plan's RDD when it is called, and that runs the plan's
+    shuffle and broadcast stages as jobs there and then. A lazy
+    checkpoint is therefore not jobless; audits of checkpoint costs
+    must count these jobs."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    keys = spark.range(1000).select((F.col("id") % 7).alias("k"), "id")
+    counts = keys.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+    plan = keys.join(counts, "k")  # one shuffle (groupBy) + one broadcast
+
+    sc = spark.sparkContext
+    sc.setJobGroup("lazy-checkpoint-probe", "lazy localCheckpoint call")
+    try:
+        plan.localCheckpoint(eager=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("lazy-checkpoint-probe")
+    assert len(jobs) > 0
