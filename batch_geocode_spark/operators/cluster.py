@@ -112,7 +112,6 @@ def spatial_clusters(
     pt_id: str = "pt_id",
     lat: str = "lat",
     lng: str = "lng",
-    eager: bool = True,
 ) -> DataFrame:
     """DBSCAN cluster assignment: (site_id, lat, lng, w, cluster,
     is_core) — one row per non-noise SITE (distinct coordinate); every
@@ -127,14 +126,10 @@ def spatial_clusters(
         eps_km=eps_km,
         min_pts=min_pts,
         res=res,
-        eager=eager,
     )
 
 
-def cluster_sites(
-    sites: DataFrame, eps_km: float, min_pts: int, res: int,
-    eager: bool = True,
-) -> DataFrame:
+def cluster_sites(sites: DataFrame, eps_km: float, min_pts: int, res: int) -> DataFrame:
     """DBSCAN over a prebuilt weighted-site table (site_id, lat, lng,
     w) — the tail of ``spatial_clusters``, exposed separately so
     incrementally-maintained site weights (``streaming.
@@ -146,29 +141,24 @@ def cluster_sites(
     pure lineage would recompute the whole upstream (at worst a full
     corpus geocode) once per branch. Both tables are SMALL by this
     operator's own scale design (sites are gazetteer-scale, pairs are
-    ring-bounded candidates), so ``eager=True`` (default)
-    localCheckpoints them at call time: one upstream computation,
-    branches read the materialized tables. Same contract note as
-    ``dedup.minhash_lsh_pairs``: construction runs Spark jobs and
-    checkpointed partitions are not fault-tolerant — long-lived
-    cluster jobs that must survive executor loss pass ``eager=False``
-    for a pure-lineage plan."""
+    ring-bounded candidates), so both are localCheckpointed at call
+    time: one upstream computation, branches read the materialized
+    tables. Same contract note as ``dedup.minhash_lsh_pairs``:
+    construction runs Spark jobs and checkpointed partitions are not
+    fault-tolerant."""
     from batch_geocode_spark.operators.dedup import connected_components
 
-    if eager:
-        # lazy checkpoints: the checkpointed partitions are written
-        # by the FIRST downstream action (the connected-components size
-        # probe), and every later branch (ring-join a/b sides,
-        # eps-mass, core edges, border attach, final attach) reads the
-        # cached copies. Under adaptive execution each call still runs
-        # jobs: it builds the adaptive plan's RDD, which executes any
-        # shuffle and broadcast stages of the plan there and then. What
-        # it saves over an eager checkpoint is the extra pass that
-        # writes the partitions before the CC probe.
-        sites = sites.localCheckpoint(eager=False)
-    nbr = eps_site_pairs(sites, eps_km, res)
-    if eager:
-        nbr = nbr.localCheckpoint(eager=False)
+    # lazy checkpoints: the checkpointed partitions are written by the
+    # FIRST downstream action (the connected-components size probe), and
+    # every later branch (ring-join a/b sides, eps-mass, core edges,
+    # border attach, final attach) reads the cached copies. Under
+    # adaptive execution each call still runs jobs: it builds the
+    # adaptive plan's RDD, which executes any shuffle and broadcast
+    # stages of the plan there and then. What it saves over an eager
+    # checkpoint is the extra pass that writes the partitions before the
+    # CC probe.
+    sites = sites.localCheckpoint(eager=False)
+    nbr = eps_site_pairs(sites, eps_km, res).localCheckpoint(eager=False)
 
     mass = nbr.groupBy("a_id").agg(F.sum("b_w").alias("eps_mass"))
     cores = mass.filter(F.col("eps_mass") >= min_pts).select(
@@ -214,10 +204,10 @@ def cluster_sites(
         "is_core",
     )
     # cluster_summary references this table three times (distinct-lng
-    # gap search x2, the rollup itself); a lazy checkpoint on the eager
-    # path computes the assignment joins once at the first downstream
-    # action (r7) — site-scale rows, trivially materializable
-    return out.localCheckpoint(eager=False) if eager else out
+    # gap search x2, the rollup itself); a lazy checkpoint computes the
+    # assignment joins once at the first downstream action (r7) —
+    # site-scale rows, trivially materializable
+    return out.localCheckpoint(eager=False)
 
 
 def hull_ring(points: list[tuple[float, float]]) -> list[tuple[float, float]]:

@@ -79,7 +79,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int = 1000,
     text_col: str = "text",
-    eager: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
@@ -96,23 +95,20 @@ def ngram_jaccard_pairs(
     Jaccard value) has probability ~|union|²/2⁶⁴ per pair.
 
     The plan references the (doc, hash) table five times (sizes, df
-    counts, rare index, both self-join sides); with ``eager=True``
-    (default) it is persisted spill-safe for the duration of the call
-    and the small pair result is materialized eagerly (the
-    ``minhash_lsh_pairs`` contract — construction runs Spark jobs,
-    the persisted table is unpersisted before returning).
-    ``eager=False`` keeps a pure-lineage plan whose branches each
-    recompute the explode.
+    counts, rare index, both self-join sides), so it is persisted
+    spill-safe for the duration of the call and the small pair result is
+    materialized eagerly (the ``minhash_lsh_pairs`` contract —
+    construction runs Spark jobs, the persisted table is unpersisted
+    before returning).
     """
+    from pyspark import StorageLevel
+
     sh = (
         docs.select("doc_id", F.explode(shingle_array(n, text_col)).alias("shingle"))
         .select("doc_id", F.xxhash64("shingle").alias("x"))
         .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if eager:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     df_counts = sh.groupBy("x").agg(F.count(F.lit(1)).alias("df"))
     rare = sh.join(
@@ -145,10 +141,9 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("doc_a", "doc_b", "n_inter", "size_a", "size_b", F.round("jaccard", 6).alias("jaccard"))
+        .localCheckpoint()
     )
-    if eager:
-        out = out.localCheckpoint()
-        sh.unpersist()
+    sh.unpersist()
     return out
 
 
@@ -157,7 +152,6 @@ def decontamination_flags(
     eval_docs: DataFrame,
     n: int = 8,
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Test-set decontamination: flag corpus docs sharing ANY word
     n-gram with an eval/benchmark set — the classic training-data
@@ -172,8 +166,7 @@ def decontamination_flags(
     its distinct (shingle, eval_doc) table is the BROADCAST side; the
     corpus side streams shingle-exploded through a broadcast hash join
     and aggregates per doc — no corpus-side shuffle before the (small,
-    post-filter) per-doc agg. ``broadcast_eval=False`` falls back to a
-    shuffle join for eval sets too big to broadcast (rare)."""
+    post-filter) per-doc agg."""
     # corpus side: RAW exploded shingles, deliberately NOT distinct —
     # word_shingles' per-doc dedup is a full shuffle of wide strings,
     # and the countDistinct aggregates below are insensitive to
@@ -185,9 +178,7 @@ def decontamination_flags(
     eval_sh = word_shingles(eval_docs, n=n, text_col=text_col).select(
         "shingle", F.col("doc_id").alias("eval_doc_id")
     )
-    if broadcast_eval:
-        eval_sh = F.broadcast(eval_sh)
-    hits = corpus_sh.join(eval_sh, "shingle")
+    hits = corpus_sh.join(F.broadcast(eval_sh), "shingle")
     return hits.groupBy("doc_id").agg(
         F.countDistinct("shingle").alias("n_shared_shingles"),
         F.countDistinct("eval_doc_id").alias("n_eval_docs"),
@@ -199,7 +190,6 @@ def decontamination_ids(
     eval_docs: DataFrame,
     n: int = 8,
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Just the contaminated doc ids — the curation-pipeline shape
     (r7): when the caller only anti-joins the flagged set, the per-doc
@@ -216,9 +206,11 @@ def decontamination_ids(
         eval_docs.select(F.explode(shingle_array(n, text_col)).alias("shingle"))
         .distinct()
     )
-    if broadcast_eval:
-        eval_sh = F.broadcast(eval_sh)
-    return corpus_sh.join(eval_sh, "shingle", "left_semi").select("doc_id").distinct()
+    return (
+        corpus_sh.join(F.broadcast(eval_sh), "shingle", "left_semi")
+        .select("doc_id")
+        .distinct()
+    )
 
 
 # ------------------------------------------------------------ MinHash + LSH
@@ -388,9 +380,7 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    cache_shingles: bool | None = None,
     base_hash: str = "xxhash64",
-    eager: bool = True,
     max_band_df: int | None = None,
 ) -> DataFrame:
     """Candidate pairs from banded MinHash signatures, then EXACT Jaccard
@@ -409,25 +399,17 @@ def minhash_lsh_pairs(
     perturb a Jaccard value) has probability ~|union|²/2⁶⁰ ≈ 1e-12 per
     pair — and would surface as a d05 oracle mismatch, since the DuckDB
     oracle verifies over the raw shingle strings.
-    With ``cache_shingles`` (default auto: on exactly
-    when ``eager``) the grouped table is persisted (memory+disk,
-    spill-safe) so it computes once, the verified pairs are
-    materialized EAGERLY at call time (localCheckpoint — they are tiny
-    relative to the corpus), and the table is unpersisted before
-    returning: repeated calls in one session (benchmark loops, the
+    The grouped table is persisted (memory+disk, spill-safe) so it
+    computes once, the verified pairs are materialized EAGERLY at call
+    time (localCheckpoint — they are tiny relative to the corpus), and
+    the table is unpersisted before returning: repeated calls in one session (benchmark loops, the
     query suite) must not accumulate cached partitions until executor
     storage is exhausted.
 
-    API contract note: the eager default means CONSTRUCTION runs Spark
-    jobs, and localCheckpoint'ed partitions are NOT fault-tolerant — on
-    a real cluster, losing an executor after the call loses the result
-    (no lineage to recompute from). Callers who need a lazy,
-    fully-recomputable plan (e.g. long-lived cluster jobs that tolerate
-    executor churn) pass ``eager=False``: the returned plan is then pure
-    lineage and the shingle subtree is simply computed by both branches
-    (persisting it couldn't be safely unpersisted under a lazy
-    contract — explicitly requesting ``cache_shingles=True`` together
-    with ``eager=False`` raises).
+    API contract note: CONSTRUCTION runs Spark jobs, and
+    localCheckpoint'ed partitions are NOT fault-tolerant — on a real
+    cluster, losing an executor after the call loses the result (no
+    lineage to recompute from).
 
     ``base_hash='md5_60'`` makes the WHOLE pipeline cross-engine
     deterministic: md5-derived shingle hashes + an md5-of-sorted-sigs
@@ -440,24 +422,12 @@ def minhash_lsh_pairs(
     bucket switches to linear star pairing against its min doc_id (see
     ``_banded_candidates`` for the exact recall trade). Default off —
     results are then identical to the uncapped pipeline."""
-    if cache_shingles is None:  # auto: cache exactly when eager
-        cache_shingles = eager
-    elif cache_shingles and not eager:
-        # A lazy plan is pure lineage: a persist could never be safely
-        # unpersisted, so honoring an EXPLICIT cache request is
-        # impossible. Coercing silently would drop it (ADVICE r4) —
-        # make the conflict loud instead.
-        raise ValueError(
-            "cache_shingles=True requires eager=True: a lazy plan cannot "
-            "safely persist/unpersist the shingle subtree; leave "
-            "cache_shingles unset (or False) with eager=False"
-        )
-    raw = docs.select("doc_id", F.explode(shingle_array(n, "text")).alias("shingle"))
-    grouped = _grouped_shingle_hashes(raw, base_hash=base_hash)
-    if cache_shingles:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
+    raw = docs.select("doc_id", F.explode(shingle_array(n, "text")).alias("shingle"))
+    grouped = _grouped_shingle_hashes(raw, base_hash=base_hash).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # band keys come straight out of the signature kernel (one row per
     # doc per band) — no explode to num_perm rows/doc + re-group. The
     # md5_60 key is md5 of the band's perm-ordered sig csv, exactly what
@@ -467,25 +437,24 @@ def minhash_lsh_pairs(
     # within a band matters).
     bsigs = _banded_keys_from_grouped(grouped, num_perm=num_perm, bands=bands, seed=seed)
     band_key = F.md5("sig_csv") if base_hash == "md5_60" else F.xxhash64("sig_csv")
-    banded = bsigs.select("doc_id", "band", band_key.alias("band_key"))
-    if eager:
-        # the band self-join references this table TWICE (both join
-        # sides project different columns, so their exchanges are not
-        # reused) and the hot-bucket cap a third time — without a
-        # checkpoint the signature mapInPandas kernel and its whole
-        # upstream run once per reference (guide §2.4/§5: materialize a
-        # small reused intermediate instead of recomputing it). Lazy:
-        # the partitions are written by the terminal localCheckpoint
-        # below, though under adaptive execution this call already runs
-        # the shuffle stages of the shingle/signature upstream as jobs.
-        # bands×docs rows of (id, band, 8-byte key) — tiny relative to
-        # the corpus at any scale.
-        banded = banded.localCheckpoint(eager=False)
+    # the band self-join references this table TWICE (both join sides
+    # project different columns, so their exchanges are not reused) and
+    # the hot-bucket cap a third time — without a checkpoint the
+    # signature mapInPandas kernel and its whole upstream run once per
+    # reference (guide §2.4/§5: materialize a small reused intermediate
+    # instead of recomputing it). Lazy: the partitions are written by
+    # the terminal localCheckpoint below, though under adaptive
+    # execution this call already runs the shuffle stages of the
+    # shingle/signature upstream as jobs. bands×docs rows of (id, band,
+    # 8-byte key) — tiny relative to the corpus at any scale.
+    banded = bsigs.select("doc_id", "band", band_key.alias("band_key")).localCheckpoint(
+        eager=False
+    )
     cand = _banded_candidates(banded, max_band_df)
     # exact verify per candidate pair via array_intersect on the two
     # docs' hash sets — O(candidates), not an inverted-index self-join
     # over the whole corpus (that shape is for all-pairs queries, see
-    # ngram_jaccard_pairs); reuses the (possibly cached) grouped table
+    # ngram_jaccard_pairs); reuses the cached grouped table
     sa = grouped.select(F.col("doc_id").alias("doc_a"), F.col("xs").alias("sh_a"))
     sb = grouped.select(F.col("doc_id").alias("doc_b"), F.col("xs").alias("sh_b"))
     joined = cand.join(sa, "doc_a").join(sb, "doc_b")
@@ -495,11 +464,9 @@ def minhash_lsh_pairs(
         joined.withColumn("jaccard", F.round(jac, 6))
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("doc_a", "doc_b", "jaccard")
+        .localCheckpoint()
     )
-    if eager:
-        out = out.localCheckpoint()
-    if cache_shingles:
-        grouped.unpersist()
+    grouped.unpersist()
     return out
 
 

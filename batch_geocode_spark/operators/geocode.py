@@ -23,9 +23,12 @@ Scale notes (10^12-row design):
   shuffles for the join itself.
 - `select` drops the `bytes` payload before the join so column pruning
   actually removes the image payload from the geocode path.
-- duplicate-work elimination: identical captions are geocoded once via
-  `distinct(loc_key)` and re-joined (the reference re-queries per row,
-  geocode/batch_geocode.py:173-182) — controlled by `dedup_keys`.
+- no key dedup: every row probes the broadcast gazetteer, identical
+  captions included. The reference re-queries per row too
+  (geocode/batch_geocode.py:173-182), but there each lookup is an HTTP
+  call; here it is a hash probe, and geocoding `distinct(loc_key)` then
+  re-joining measured ~2.7× SLOWER at sf0.1 (it scans and regexes the
+  input twice and adds a full-input distinct shuffle).
 """
 
 from __future__ import annotations
@@ -56,21 +59,13 @@ def build_candidates(
     images: DataFrame,
     gazetteer: DataFrame,
     n_results: int = DEFAULT_RESULTS_PER_SOURCE,
-    dedup_keys: bool = False,
 ) -> DataFrame:
     """Long-form candidates: one row per (image_id, source, rank).
 
     Plan shape: [images: extract key, drop payload] ⋈_broadcast
     [gazetteer: rank ≤ n per (name, source)] — a single broadcast hash
-    join, no shuffle on the big side.
-
-    ``dedup_keys=True`` geocodes distinct keys then re-joins — the
-    reference re-queries per row (geocode/batch_geocode.py:173-182) and
-    there each lookup is an HTTP call, so dedup is a huge win. Here the
-    lookup is a broadcast hash probe, so dedup only pays when key
-    extraction is expensive relative to the probe; measured at sf0.1 the
-    dedup plan is ~2.7× SLOWER (it scans+regexes the input twice and
-    adds a full-input distinct shuffle), hence default False.
+    join, no shuffle on the big side, one probe per row (see the module
+    notes for why keys are not deduplicated).
     """
     gaz = gazetteer.withColumn(
         "rank",
@@ -81,15 +76,6 @@ def build_candidates(
     gaz = _candidate_geometry(gaz)
 
     keyed = images.select("image_id", extract_loc_key(F.col("caption")).alias("loc_key"))
-
-    if dedup_keys:
-        # geocode O(distinct keys) instead of O(rows), then re-join
-        keys = keyed.select("loc_key").where(F.col("loc_key").isNotNull()).distinct()
-        hits = keys.join(F.broadcast(gaz), keys.loc_key == gaz.name_norm, "inner")
-        return (
-            keyed.join(F.broadcast(hits), "loc_key", "inner")
-            .drop("loc_key", "name_norm")
-        )
     joined = keyed.join(F.broadcast(gaz), keyed.loc_key == gaz.name_norm, "inner")
     return joined.drop("loc_key", "name_norm")
 

@@ -218,7 +218,6 @@ def unigram_logprob_scores(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    eager: bool = True,
 ) -> DataFrame:
     """Per-doc mean unigram log-probability under the corpus's OWN
     unigram distribution — the classic perplexity-proxy quality filter
@@ -231,31 +230,29 @@ def unigram_logprob_scores(
     reduces it to the vocab-scale frequency table; pass 2 re-explodes
     and joins that table, scoring each doc with the count-weighted mean
     (algebraically identical to averaging over raw token instances).
-    With ``eager=True`` (default) the grand token total — ONE number —
-    is collected at call time and folded in as a literal, so the plan
-    has exactly two corpus passes and zero cross joins; ``eager=False``
-    keeps a fully-recomputable lazy plan (the total rides a 1-row
-    broadcast cross join; each lazy branch recomputes its own explode).
-    No UDFs; log runs JVM-side."""
+    The grand token total — ONE number — is collected at call time and
+    folded in as a literal, so the plan has exactly two corpus passes
+    and zero cross joins; construction therefore runs Spark jobs. No
+    UDFs; log runs JVM-side."""
 
     def per_doc_counts() -> DataFrame:
         toks = docs.select(id_col, F.explode(_tokens(F.col(text_col))).alias("tok"))
         return toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("cnt"))
 
-    freq = per_doc_counts().groupBy("tok").agg(F.sum("cnt").alias("tf"))
-    if eager:
-        # lazy checkpoint + the total collect as its materializing
-        # action: pass 1 runs exactly once and the scoring action reads
-        # the (vocab-scale) checkpointed table instead of re-exploding
-        freq = freq.localCheckpoint(eager=False)
-        total = freq.agg(F.sum("tf")).collect()[0][0]
-        scored = per_doc_counts().join(freq, "tok")
-        logp = F.log(F.col("tf") / F.lit(float(total)))
-    else:
-        tot = freq.agg(F.sum("tf").alias("n_total"))
-        scored = per_doc_counts().join(freq, "tok").crossJoin(F.broadcast(tot))
-        logp = F.log(F.col("tf") / F.col("n_total"))
-    return scored.groupBy(id_col).agg(
+    # lazy checkpoint + the total collect as its materializing action:
+    # pass 1 runs exactly once and the scoring action reads the
+    # (vocab-scale) checkpointed table instead of re-exploding
+    freq = (
+        per_doc_counts()
+        .groupBy("tok")
+        .agg(F.sum("cnt").alias("tf"))
+        .localCheckpoint(eager=False)
+    )
+    # an empty corpus sums to null; its join below is empty, so any
+    # positive total will do
+    total = freq.agg(F.sum("tf")).collect()[0][0] or 1
+    logp = F.log(F.col("tf") / F.lit(float(total)))
+    return per_doc_counts().join(freq, "tok").groupBy(id_col).agg(
         F.sum("cnt").cast("bigint").alias("n_tokens"),
         F.round(F.sum(F.col("cnt") * logp) / F.sum("cnt"), 6).alias("avg_logprob"),
     )

@@ -44,6 +44,13 @@ def default_driver_memory(mem_total_kb: int | None) -> str:
     return f"{min(mem_total_kb // 2048, cap_mb)}m"
 
 
+def default_cpus() -> int:
+    """Local worker threads when no master is given: ``SPARK_GRAFT_CPUS``,
+    else the host's core count. More threads than cores only
+    oversubscribe the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def _mem_total_kb() -> int | None:
     """MemTotal from /proc/meminfo in KiB; None where it is absent."""
     try:
@@ -69,8 +76,7 @@ def get_spark(
     only when this function creates the JVM's first session; later
     sessions in the same JVM share the cache as it was first sized.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
         if master.startswith("local[") and master[6:-1].isdigit():
             shuffle_partitions = max(int(master[6:-1]), 4)

@@ -1,5 +1,6 @@
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's core count).
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -22,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from batch_geocode_spark import entry_queries as EQ  # noqa: E402
-from batch_geocode_spark.session import get_spark  # noqa: E402
+from batch_geocode_spark.session import default_cpus, get_spark  # noqa: E402
 
 HEADLINE = [
     "g02_composite_best",
@@ -160,7 +161,7 @@ def warm_up(spark, sf_dir: str) -> None:
     EQ.g05_admin_pip(spark, sf_dir).count()  # spins up the Arrow workers
 
 
-def run(sf_dir: str, cpus: str) -> dict:
+def run(sf_dir: str, cpus: int) -> dict:
     spark = get_spark(master=f"local[{cpus}]", app_name="bench")
     warm_up(spark, sf_dir)
 
@@ -193,7 +194,7 @@ def run(sf_dir: str, cpus: str) -> dict:
         "n_images": n_images,
         "flagship_sec": round(flagship_sec, 3),
         "images_per_sec": round(n_images / flagship_sec, 1),
-        "cpus": int(cpus),
+        "cpus": cpus,
         "stress": stress,
         # self-proving measurement evidence: per-query attempt times,
         # 1-min load at each gate release, and gate-timeout flags.
@@ -208,8 +209,7 @@ def run(sf_dir: str, cpus: str) -> dict:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    rep = run(sf_dir, cpus)
+    rep = run(sf_dir, default_cpus())
     # The driver captures only the tail of stdout (~2000 chars): the full
     # per-attempt measurement evidence goes to a sidecar file and the
     # LAST line printed is the compact headline JSON (round-4 BENCH came

@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from batch_geocode_spark import entry_queries as EQ  # noqa: E402
-from batch_geocode_spark.session import get_spark  # noqa: E402
+from batch_geocode_spark.session import default_cpus, get_spark  # noqa: E402
 from bench import HEADLINE, wait_for_quiet, warm_up  # noqa: E402
 
 
@@ -108,7 +108,7 @@ def mode_backbone(sf_dir, cpus):
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     if mode == "time":
         names = sys.argv[2:] or HEADLINE

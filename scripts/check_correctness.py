@@ -36,8 +36,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from batch_geocode_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-    spark = get_spark(master=f"local[{cpus}]", app_name="correctness")
+    spark = get_spark(app_name="correctness")
     con = duckdb.connect()
     for t in [
         "region",

@@ -41,8 +41,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from batch_geocode_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-    spark = get_spark(master=f"local[{cpus}]", app_name="plan_audit")
+    spark = get_spark(app_name="plan_audit")
     rows = []
     # rows whose constructor runs Spark jobs by documented eager contract
     eager = {"d04", "d05", "c01", "e04", "g18", "g19", "g20", "t07"}

@@ -566,15 +566,6 @@ def test_minhash_hot_band_cap_preserves_cold_pairs(spark, docs):
     assert (fam["doc_a"] == 100000).all()
 
 
-def test_minhash_cap_explicit_conflict_raises(docs):
-    """Explicit cache request under the lazy contract must be loud, not
-    silently dropped (ADVICE r4)."""
-    with pytest.raises(ValueError, match="cache_shingles"):
-        D.minhash_lsh_pairs(docs, eager=False, cache_shingles=True)
-    # auto default under the lazy contract is fine
-    D.minhash_lsh_pairs(docs, eager=False).toPandas()
-
-
 def test_simhash_band_cap_bounds_hot_fingerprint(spark):
     """Identical fingerprints share all four quarter keys — a 5000-copy
     family would emit ~12.5M candidates uncapped; the cap reduces it to

@@ -270,20 +270,30 @@ def test_zonal_stats_broadcasts_polygons(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_minhash_plan_has_no_string_reassembly(spark):
+def test_minhash_plan_has_no_string_reassembly(spark, monkeypatch):
     """The LSH pipeline's shingle table must stay the grouped HASH-SET
     shape: no collect_list + sort_array band reassembly (the old
     explode-to-64-rows/doc + regroup), no string collect_set for the
-    verify branch, never a sort-merge or cartesian join. The lazy plan
-    duplicates the grouped subtree by design (eager=False is pure
-    lineage), so we pin shapes, not subtree counts."""
+    verify branch, never a sort-merge or cartesian join. The returned
+    frame is a checkpoint, so the shapes are read from the two frames
+    the call checkpoints (the band table and the verified pairs)."""
     from batch_geocode_spark.operators import dedup as D
 
     docs = spark.createDataFrame(
         [(i, "w%d x y z a b c d" % (i % 3)) for i in range(30)],
         "doc_id long, text string",
     )
-    plan = _plan(D.minhash_lsh_pairs(docs, eager=False, cache_shingles=False))
+    checkpointed = []
+    real = type(docs).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", spy)
+    D.minhash_lsh_pairs(docs)
+    assert len(checkpointed) == 2
+    plan = "\n".join(checkpointed)
     assert "collect_set" in plan           # the one grouped aggregate
     assert "collect_list" not in plan      # perm-level reassembly gone
     assert "sort_array" not in plan        # band-key sort gone

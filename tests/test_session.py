@@ -1,11 +1,12 @@
 """Session defaults: generated classes are compiled once per JVM, the
-default driver heap follows the host's RAM, and adaptive execution is
-on (which makes a lazy localCheckpoint run jobs when it is called)."""
+default driver heap follows the host's RAM and the default thread count
+its cores, and adaptive execution is on (which makes a lazy
+localCheckpoint run jobs when it is called)."""
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from batch_geocode_spark.session import default_driver_memory
+from batch_geocode_spark.session import default_cpus, default_driver_memory
 
 
 def _compilations(spark) -> int:
@@ -63,6 +64,14 @@ def test_default_driver_memory_is_half_of_ram_capped():
     assert default_driver_memory(4 << 20) == "2048m"
     assert default_driver_memory(256 << 20) == "16384m"
     assert default_driver_memory(None) == "16384m"
+
+
+def test_default_cpus_is_env_else_host_cores(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr("os.cpu_count", lambda: 6)
+    assert default_cpus() == 6
 
 
 def test_lazy_local_checkpoint_runs_stages_at_call_under_aqe(spark):

@@ -121,3 +121,12 @@ def test_unigram_logprob_matches_bruteforce(spark):
         want = sum(math.log(tf[t] / total) for t in ts) / len(ts)
         assert got.loc[i, "n_tokens"] == len(ts)
         assert abs(got.loc[i, "avg_logprob"] - round(want, 6)) < 1e-9
+
+
+def test_unigram_logprob_empty_corpus(spark):
+    """An empty corpus scores no docs: its token total is a null sum,
+    which must not reach the float literal."""
+    from batch_geocode_spark.operators.text import unigram_logprob_scores
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    assert unigram_logprob_scores(docs).collect() == []
