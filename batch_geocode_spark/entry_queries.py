@@ -1485,9 +1485,10 @@ CLUSTER_MIN_PTS = 650
 def g18_spatial_clusters(spark, sf_dir):
     """DBSCAN spatial clustering of geocoded image locations
     (``cluster.spatial_clusters`` — PostGIS ST_ClusterDBSCAN analog):
-    points collapse to weighted sites, candidate pairs come from the
-    cell-ring equi-join, clusters from the alternating-star CC, border
-    sites attach to their minimum reachable core cluster. The oracle
+    points collapse to weighted sites, the site table is collected once
+    and clustered by a numpy kernel on the driver (cell-ring candidate
+    pairs, union-find components of the core sites), border sites
+    attach to their minimum reachable core cluster. The oracle
     reproduces the whole chain — ring-bounded candidates, eps-ball
     point mass, core/border/noise roles, recursive-CTE closure, and
     the decimal-accumulated weighted centroid."""

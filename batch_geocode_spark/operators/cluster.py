@@ -17,15 +17,23 @@ Scale design (the part that matters at 100 TB):
    the pair graph from points² to sites². The map-side-combined groupBy
    is the only full-data pass; everything after runs on the small site
    table.
-2. **Candidate pairs come from the cell-ring equi-join** (same pattern
-   as ``knn.knn_spatial``): each site meets only sites in its cell + 8
-   neighbors at ``res`` — never a cross join. Exact whenever ``eps_km``
-   does not exceed one cell extent (choose ``res`` accordingly; the
-   lat extent of a cell is ~10,007/2**res km).
-3. **Clusters come from the alternating-star connected components**
-   (``dedup.connected_components``) — O(log n) rounds regardless of
-   cluster diameter, the same depth-robust kernel the dedup family
-   uses.
+2. **The site table clusters on the driver.** It is gazetteer-scale by
+   construction (point 1), the same size class as the gazetteer that
+   ``geocode.build_candidates`` already broadcasts, so one capped
+   collect (``MAX_SITES``) brings it to the driver and one vectorized
+   numpy kernel runs DBSCAN there. At this size a distributed plan
+   (ring join, checkpoints, a connected-components loop) costs Spark
+   jobs and JIT-compiled plan code, not compute; the driver path runs
+   only the jobs of that one collect. A table over the cap raises an
+   actionable error instead of running the driver out of memory.
+3. **Candidate pairs come from the cell ring** (same pattern as
+   ``knn.knn_spatial``): each site meets only sites in its cell + 8
+   neighbors at ``res``, found by ``np.searchsorted`` over the
+   cell-sorted sites — never all pairs. Exact whenever ``eps_km`` does
+   not exceed one cell extent (choose ``res`` accordingly; the lat
+   extent of a cell is ~10,007/2**res km). Core-core components come
+   from the driver-local union-find ``dedup.connected_components``
+   uses for small graphs.
 
 Semantics (weighted DBSCAN, deterministic):
 - a site's neighbor mass = sum of weights of all sites within
@@ -44,11 +52,19 @@ Semantics (weighted DBSCAN, deterministic):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
-from batch_geocode_spark.functions.cells import cell_encode, cell_ring_cells
-from batch_geocode_spark.functions.geo import haversine_km
+from batch_geocode_spark.functions.cells import np_cell_encode, np_cell_ring_batch
+from batch_geocode_spark.functions.geo import np_haversine_km
+from batch_geocode_spark.operators import collect_capped
+from batch_geocode_spark.operators.dedup import _union_find_components
+
+MAX_SITES = 1_000_000  # site rows cluster_sites collects to the driver
+_PAIR_BUDGET = 4_000_000  # ring-candidate pairs materialized at once
 
 
 def weighted_sites(
@@ -61,46 +77,6 @@ def weighted_sites(
     site_id = min point id at that coordinate (deterministic)."""
     return points.groupBy(F.col(lat).alias("lat"), F.col(lng).alias("lng")).agg(
         F.min(pt_id).alias("site_id"), F.count(F.lit(1)).alias("w")
-    )
-
-
-def eps_site_pairs(sites: DataFrame, eps_km: float, res: int) -> DataFrame:
-    """Directed candidate pairs (a_id, b_id, a/b coords+weights,
-    dist_km) for sites within ``eps_km``, via the cell-ring equi-join.
-    Includes the self pair (a_id == b_id, dist 0) so that aggregating
-    b-weights per a_id yields the DBSCAN eps-ball point count directly.
-    """
-    if res < 2:
-        raise ValueError("res must be >= 2 (ring cells collide below that)")
-
-    # encode + ring are pure Column exprs (r7: replaced two pandas_udfs
-    # — same integer math, no JVM->Python round trip, no ArrowEvalPython
-    # stage in the plan)
-    b = sites.select(
-        F.col("site_id").alias("b_id"),
-        F.col("lat").alias("b_lat"),
-        F.col("lng").alias("b_lng"),
-        F.col("w").alias("b_w"),
-        cell_encode(F.col("lat"), F.col("lng"), res).alias("cell"),
-    )
-    a = sites.select(
-        F.col("site_id").alias("a_id"),
-        F.col("lat").alias("a_lat"),
-        F.col("lng").alias("a_lng"),
-        F.col("w").alias("a_w"),
-        F.explode(
-            cell_ring_cells(cell_encode(F.col("lat"), F.col("lng"), res), res)
-        ).alias("cell"),
-    ).filter(F.col("cell") >= 0)
-    return (
-        a.join(b, "cell", "inner")
-        .withColumn(
-            "dist_km",
-            haversine_km(
-                F.col("a_lat"), F.col("a_lng"), F.col("b_lat"), F.col("b_lng")
-            ),
-        )
-        .filter(F.col("dist_km") <= eps_km)
     )
 
 
@@ -136,78 +112,100 @@ def cluster_sites(sites: DataFrame, eps_km: float, min_pts: int, res: int) -> Da
     stream_site_weights`` deltas folded at read time) cluster through
     the identical code path as a batch run.
 
-    The plan references ``sites`` and the candidate-pair table three
-    times each (eps-ball mass, core-core edges, border attachment) —
-    pure lineage would recompute the whole upstream (at worst a full
-    corpus geocode) once per branch. Both tables are SMALL by this
-    operator's own scale design (sites are gazetteer-scale, pairs are
-    ring-bounded candidates), so both are localCheckpointed at call
-    time: one upstream computation, branches read the materialized
-    tables. Same contract note as ``dedup.minhash_lsh_pairs``:
-    construction runs Spark jobs and checkpointed partitions are not
-    fault-tolerant."""
-    from batch_geocode_spark.operators.dedup import connected_components
-
-    # lazy checkpoints: the checkpointed partitions are written by the
-    # FIRST downstream action (the connected-components size probe), and
-    # every later branch (ring-join a/b sides, eps-mass, core edges,
-    # border attach, final attach) reads the cached copies. Under
-    # adaptive execution each call still runs jobs: it builds the
-    # adaptive plan's RDD, which executes any shuffle and broadcast
-    # stages of the plan there and then. What it saves over an eager
-    # checkpoint is the extra pass that writes the partitions before the
-    # CC probe.
-    sites = sites.localCheckpoint(eager=False)
-    nbr = eps_site_pairs(sites, eps_km, res).localCheckpoint(eager=False)
-
-    mass = nbr.groupBy("a_id").agg(F.sum("b_w").alias("eps_mass"))
-    cores = mass.filter(F.col("eps_mass") >= min_pts).select(
-        F.col("a_id").alias("site_id")
+    The site table is collected once (at most ``MAX_SITES`` rows, else
+    ``ValueError``) and clustered by :func:`_dbscan` on the driver; the
+    result is a local relation, so downstream branches
+    (``cluster_summary`` reads it three times) never recompute the
+    upstream."""
+    if res < 2:
+        raise ValueError("res must be >= 2 (ring cells collide below that)")
+    sel = sites.select("site_id", "lat", "lng", "w")
+    pdf = collect_capped(
+        sel,
+        MAX_SITES,
+        "cluster_sites' site table",
+        "round the coordinates before clustering so that nearby points "
+        "share a site",
+    )
+    schema = StructType(
+        sel.schema.fields
+        + [
+            StructField("cluster", sel.schema["site_id"].dataType),
+            StructField("is_core", BooleanType()),
+        ]
+    )
+    return sites.sparkSession.createDataFrame(
+        _dbscan(pdf, eps_km, min_pts, res), schema
     )
 
-    core_edges = (
-        nbr.filter(F.col("a_id") != F.col("b_id"))
-        .join(cores.select(F.col("site_id").alias("a_id")), "a_id", "left_semi")
-        .join(cores.select(F.col("site_id").alias("b_id")), "b_id", "left_semi")
-        .select("a_id", "b_id")
-    )
-    cc = connected_components(core_edges, id_a="a_id", id_b="b_id")
-    linked = cc.select(F.col("node").alias("site_id"), "component")
-    # singleton cores: no core neighbor, their own cluster
-    singles = cores.join(linked, "site_id", "left_anti").select(
-        "site_id", F.col("site_id").alias("component")
-    )
-    core_assign = linked.unionByName(singles).withColumn("is_core", F.lit(True))
 
-    border_assign = (
-        nbr.filter(F.col("a_id") != F.col("b_id"))
-        .join(cores.select(F.col("site_id").alias("a_id")), "a_id", "left_anti")
-        .join(
-            core_assign.select(
-                F.col("site_id").alias("b_id"), F.col("component").alias("b_comp")
-            ),
-            "b_id",
-            "inner",
-        )
-        .groupBy(F.col("a_id").alias("site_id"))
-        .agg(F.min("b_comp").alias("component"))
-        .withColumn("is_core", F.lit(False))
-    )
+def _eps_pairs(lat: np.ndarray, lng: np.ndarray, eps_km: float, res: int):
+    """Directed (a, b) index pairs of sites within ``eps_km`` among the
+    ring-bounded candidates: b lies in a's cell or one of its 8
+    neighbors at ``res``. Self pairs are included, so summing b's
+    weights per a gives the eps-ball point count. Candidates are
+    expanded for a block of a-sites at a time, about ``_PAIR_BUDGET``
+    pairs per block, so a hot cell cannot blow driver memory beyond the
+    pairs that survive the distance test."""
+    cell = np_cell_encode(lat, lng, res)
+    order = np.argsort(cell, kind="stable")
+    sorted_cell = cell[order]
+    ring = np_cell_ring_batch(cell, res)  # -1 entries match no cell
+    lo = np.searchsorted(sorted_cell, ring, "left")
+    cnt = np.searchsorted(sorted_cell, ring, "right") - lo
+    ends = np.cumsum(cnt.sum(axis=1))
+    out_a, out_b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    s = 0
+    while s < len(cell):
+        done = ends[s - 1] if s else 0
+        e = max(int(np.searchsorted(ends, done + _PAIR_BUDGET, "right")), s + 1)
+        c = cnt[s:e].ravel()
+        a = np.repeat(np.arange(s, e), cnt[s:e].sum(axis=1))
+        # position of each candidate inside its (site, ring cell) run
+        within = np.arange(len(a)) - np.repeat(np.cumsum(c) - c, c)
+        b = order[np.repeat(lo[s:e].ravel(), c) + within]
+        keep = np_haversine_km(lat[a], lng[a], lat[b], lng[b]) <= eps_km
+        out_a.append(a[keep])
+        out_b.append(b[keep])
+        s = e
+    return np.concatenate(out_a), np.concatenate(out_b)
 
-    assigned = core_assign.unionByName(border_assign)
-    out = sites.join(assigned, "site_id", "inner").select(
-        "site_id",
-        "lat",
-        "lng",
-        "w",
-        F.col("component").alias("cluster"),
-        "is_core",
+
+def _dbscan(pdf: pd.DataFrame, eps_km: float, min_pts: int, res: int) -> pd.DataFrame:
+    """Weighted DBSCAN (module docstring semantics) over a driver-side
+    site table (site_id, lat, lng, w) with unique site ids; returns the
+    non-noise sites with their ``cluster`` and ``is_core``, ordered by
+    site_id. Sites are sorted by site_id first, so a site's row index
+    is its id rank and "minimum id" is "minimum index" throughout."""
+    pdf = (
+        pdf.dropna(subset=["lat", "lng"])
+        .sort_values("site_id", kind="stable")
+        .reset_index(drop=True)
     )
-    # cluster_summary references this table three times (distinct-lng
-    # gap search x2, the rollup itself); a lazy checkpoint computes the
-    # assignment joins once at the first downstream action (r7) —
-    # site-scale rows, trivially materializable
-    return out.localCheckpoint(eager=False)
+    n = len(pdf)
+    a, b = _eps_pairs(
+        pdf["lat"].to_numpy(np.float64), pdf["lng"].to_numpy(np.float64), eps_km, res
+    )
+    mass = np.bincount(a, weights=pdf["w"].to_numpy(np.float64)[b], minlength=n)
+    core = mass >= min_pts
+    # label = row index of the cluster's min core site; -1 = noise.
+    # Singleton cores label themselves; linked cores take their
+    # component's minimum.
+    label = np.where(core, np.arange(n), -1)
+    linked = core[a] & core[b] & (a > b)
+    if linked.any():
+        cc = _union_find_components(pd.DataFrame({"a": a[linked], "b": b[linked]}))
+        label[cc["node"].to_numpy()] = cc["component"].to_numpy()
+    # border sites: the minimum label among the cores they reach
+    attach = ~core[a] & core[b]
+    border = np.full(n, n)
+    np.minimum.at(border, a[attach], label[b[attach]])
+    label = np.where(border < n, border, label)
+    keep = label >= 0
+    out = pdf[keep].copy()
+    out["cluster"] = pdf["site_id"].to_numpy()[label[keep]]
+    out["is_core"] = core[keep]
+    return out
 
 
 def hull_ring(points: list[tuple[float, float]]) -> list[tuple[float, float]]:

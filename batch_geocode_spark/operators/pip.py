@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from batch_geocode_spark.functions.cells import cell_encode, np_polyfill_bbox
+from batch_geocode_spark.operators import collect_capped
 
-
+MAX_POLYGONS = 200_000  # polygon rows pip_join collects to the driver
 _EDGE_POINT_BUDGET = 4_000_000  # max edges×points elements materialized at once
 
 
@@ -80,16 +81,23 @@ def pip_join(
     """Exact PIP join → (point id, admin_id, admin attrs).
 
     The polygon side is small by assumption (it must broadcast either
-    way), so its geometry ships to executors inside the UDF closure as
+    way; more than ``MAX_POLYGONS`` rows raise ``ValueError``), so its
+    geometry ships to executors inside the UDF closure as
     plain numpy arrays — the candidate rows carry only (point, admin_id)
     and never duplicate ring structs through Arrow.
     """
     spark = points.sparkSession
     # ONE driver collect feeds cover, attributes AND rings; the polygon
     # side is driver-sized by contract, so all three derivations are local.
-    poly_rows = polygons.select(
-        "admin_id", "iso2", "admin_level", "name", "bb_w", "bb_s", "bb_e", "bb_n", "rings"
-    ).collect()
+    polys = collect_capped(
+        polygons.select(
+            "admin_id", "iso2", "admin_level", "name", "bb_w", "bb_s", "bb_e", "bb_n", "rings"
+        ),
+        MAX_POLYGONS,
+        "pip_join's polygon table",
+        "filter the polygons to the admin levels and region the points need",
+    )
+    poly_rows = polys.to_dict("records")
     ids, cells_out = [], []
     for row in poly_rows:
         cc = np_polyfill_bbox(row["bb_w"], row["bb_s"], row["bb_e"], row["bb_n"], res)
@@ -105,7 +113,7 @@ def pip_join(
         schema="admin_id long, cell long",
     )
     attrs = spark.createDataFrame(
-        [(row["admin_id"], row["iso2"], row["admin_level"], row["name"]) for row in poly_rows],
+        polys[["admin_id", "iso2", "admin_level", "name"]],
         schema="admin_id long, iso2 string, admin_level int, name string",
     )
     pts = points.select(

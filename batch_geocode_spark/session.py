@@ -15,19 +15,39 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
-def _default_local_dir() -> str:
-    """Shuffle/spill dir: explicit env wins; else tmpfs when it is
-    actually present and big enough (this sandbox's virtual disk does
-    not scale with cores); else the system temp dir — RAM-backed
-    /dev/shm must never be the blind default on hosts where spilling
-    into it would exhaust memory."""
+_TMPFS_MIN = 8 << 30  # bytes of tmpfs, and of RAM beside the heap
+
+
+def shuffle_on_tmpfs(shm_free: int, mem_total_kb: int | None, heap: str) -> bool:
+    """Whether shuffle and spill go to tmpfs: only when it has at least
+    8 GiB free AND the RAM left beside the requested driver heap is at
+    least 8 GiB too. tmpfs pages are RAM, so on a host where the heap
+    already claims most of it, spilling there would exhaust memory; an
+    unknown ``MemTotal`` counts as too small."""
+    if not mem_total_kb or shm_free < _TMPFS_MIN:
+        return False
+    return (mem_total_kb << 10) - _jvm_bytes(heap) >= _TMPFS_MIN
+
+
+def _jvm_bytes(size: str) -> int:
+    """A JVM memory size ("8035m", "16g", "512k", bytes) in bytes."""
+    size = size.strip().lower().rstrip("b")
+    shift = {"k": 10, "m": 20, "g": 30, "t": 40}.get(size[-1:], 0)
+    return int(size[:-1] if shift else size) << shift
+
+
+def _default_local_dir(heap: str) -> str:
+    """Shuffle/spill dir: explicit env wins; else tmpfs when
+    :func:`shuffle_on_tmpfs` allows it beside a ``heap`` driver (this
+    sandbox's virtual disk does not scale with cores); else the system
+    temp dir — RAM-backed /dev/shm must never be the blind default."""
     explicit = os.environ.get("SPARK_LOCAL_DIRS")
     if explicit:
         return explicit
     shm = "/dev/shm"
     try:
         st = os.statvfs(shm)
-        if st.f_bavail * st.f_frsize >= (8 << 30):  # ≥8 GiB free tmpfs
+        if shuffle_on_tmpfs(st.f_bavail * st.f_frsize, _mem_total_kb(), heap):
             return os.path.join(shm, "spark-local")
     except OSError:
         pass
@@ -82,6 +102,7 @@ def get_spark(
             shuffle_partitions = max(int(master[6:-1]), 4)
         else:
             shuffle_partitions = 32
+    heap = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(_mem_total_kb())
 
     builder = (
         SparkSession.builder.master(master)
@@ -123,10 +144,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # NOTE: empirically a 48g local heap triggers ~100s GC stalls on
         # this workload; 16g is ample for sf0.1 and keeps pauses short
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(_mem_total_kb()),
-        )
+        .config("spark.driver.memory", heap)
         # generated classes are cached per JVM, LRU, 100 by default. One
         # warm geo_spatial perfbench iteration needs 131 classes, a
         # curate_docs one about 90, and the 60-query queries() battery
@@ -154,8 +172,9 @@ def get_spark(
         # this sandbox's virtual disk is slow and does not scale with
         # cores; shuffle/spill on tmpfs is the stand-in for the per-node
         # NVMe a real cluster provides (override with SPARK_LOCAL_DIRS;
-        # falls back to the system temp dir when /dev/shm is absent/small)
-        .config("spark.local.dir", _default_local_dir())
+        # falls back to the system temp dir when /dev/shm is absent or
+        # small, or the heap leaves too little RAM beside it)
+        .config("spark.local.dir", _default_local_dir(heap))
         # multi-executor mode (local-cluster / standalone): executor
         # Python workers don't inherit the driver's sys.path, so ship
         # the package location the same way spark-submit --py-files

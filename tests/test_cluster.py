@@ -1,10 +1,15 @@
 """Weighted-site DBSCAN (operators/cluster.py): hand-built fixture
 exercising every role (core / border / noise), singleton-core clusters,
-the antimeridian ring wrap, and the no-cartesian plan shape."""
+the antimeridian ring wrap and the job count; a seeded adversarial site
+set (hot cell, deep chain, duplicates, antimeridian pair) checked
+against a brute-force point DBSCAN; the empty-input and guard paths."""
 
+import numpy as np
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
+from batch_geocode_spark.functions.cells import np_cell_encode
+from batch_geocode_spark.functions.geo import EARTH_RADIUS_KM, np_haversine_km
 from batch_geocode_spark.operators import cluster as C
 
 # res 4 → lat cell extent ~1250 km, lng cell 22.5°; eps 300 km fits
@@ -89,17 +94,154 @@ def test_summary_antimeridian_centroid(assigned, spark):
     assert summ.loc[600, "centroid_lng"] == -30.0
 
 
-def test_no_cartesian_plan(fixture_points):
-    plan = C.spatial_clusters(
-        fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+def test_spatial_clusters_job_count(spark, fixture_points):
+    """The site table is collected once and clustered on the driver: a
+    handful of jobs at call time, not a distributed join, checkpoints
+    and a connected-components loop (16-17 jobs on this fixture)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cluster-job-count", "spatial_clusters call")
+    try:
+        C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cluster-job-count")) <= 3
 
 
 def test_res_guard(fixture_points):
-    with pytest.raises(ValueError):
-        C.eps_site_pairs(C.weighted_sites(fixture_points), 100.0, res=1)
+    with pytest.raises(ValueError, match="res must be >= 2"):
+        C.spatial_clusters(fixture_points, eps_km=100.0, min_pts=MIN_PTS, res=1)
+
+
+def test_site_cap(fixture_points, monkeypatch):
+    monkeypatch.setattr(C, "MAX_SITES", 6)  # the fixture has 7 sites
+    with pytest.raises(ValueError, match=r"more than 6 rows.*round the coordinates"):
+        C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
+
+
+def test_empty_input(spark, fixture_points):
+    want = C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
+    got = C.spatial_clusters(
+        fixture_points.limit(0), eps_km=EPS, min_pts=MIN_PTS, res=RES
+    )
+    assert got.schema == want.schema
+    assert got.count() == 0
+
+
+# adversarial set: res 6 cells are 2.8125° tall (~313 km) and at least
+# 313 km wide below 60° latitude, so eps 40 km makes the ring exact
+ADV_RES, ADV_EPS, ADV_MIN_PTS = 6, 40.0, 4
+
+
+def _east(lat: float, km: float) -> float:
+    """Degrees of longitude spanning ``km`` along the ``lat`` parallel."""
+    return np.degrees(
+        2 * np.arcsin(np.sin(km / (2 * EARTH_RADIUS_KM)) / np.cos(np.radians(lat)))
+    )
+
+
+def _adversarial_points(seed: int = 11) -> pd.DataFrame:
+    """(pt_id, lat, lng) at 30-60° latitude: ~10% of the sites in one
+    res-6 cell, a 200-site chain spaced at 0.98 eps, a border site
+    between two clusters, blobs, sparse background, duplicated
+    coordinates and a pair that meets across the antimeridian."""
+    rng = np.random.default_rng(seed)
+    hot = np.column_stack([rng.uniform(45.5, 46.5, 150), rng.uniform(1.0, 3.0, 150)])
+    # chain along the 40th parallel: neighbours 0.98 eps apart, sites
+    # two apart 1.96 eps apart, so only the chain links it end to end
+    chain = np.column_stack(
+        [np.full(200, 40.0), -100.0 + _east(40.0, 0.98 * ADV_EPS) * np.arange(200)]
+    )
+    # two 4-site clusters 1.6 eps apart, a weight-1 site midway: it
+    # reaches one core of each (mass 3), so it is a border site that
+    # must take the smaller of the two labels
+    sat = [(0.15, 0.4), (-0.15, 0.4), (0.0, 0.6)]  # (dlat, eps fraction)
+    lng_x, lng_b = 60.0 + _east(35.0, 0.8 * ADV_EPS), 60.0 + _east(35.0, 1.6 * ADV_EPS)
+    bridge = [(35.0, lng_x)]
+    for sign, center in ((-1, 60.0), (1, lng_b)):
+        bridge.append((35.0, center))
+        bridge += [(35.0 + dy, center + sign * _east(35.0, f * ADV_EPS)) for dy, f in sat]
+    bridge = np.array(bridge)
+    centers = np.column_stack([rng.uniform(32, 58, 20), rng.uniform(-170, 170, 20)])
+    blobs = np.repeat(centers, 15, axis=0) + rng.normal(0, 0.25, (300, 2))
+    background = np.column_stack([rng.uniform(30, 60, 800), rng.uniform(-180, 180, 800)])
+    wrap = np.array([[45.0, 179.95], [45.0, -179.97]])
+    sites = np.vstack([hot, chain, bridge, blobs, background, wrap])
+    # duplicates: the chain and the wrap pair twice each (weight 2 makes
+    # them core), plus 100 random sites of the hot cell, blobs and
+    # background again
+    loose = np.vstack([hot, blobs, background])
+    pts = np.vstack([sites, chain, wrap, loose[rng.choice(len(loose), 100, replace=False)]])
+    order = rng.permutation(len(pts))  # point ids unrelated to layout
+    return pd.DataFrame({"pt_id": order.astype(np.int64), "lat": pts[:, 0], "lng": pts[:, 1]})
+
+
+def _brute_force_dbscan(pts: pd.DataFrame) -> set:
+    """Classic point DBSCAN over all pairs: core = at least ADV_MIN_PTS
+    points within eps (itself included); clusters grow from cores in
+    point-id order, so each takes its minimum core id; a border point
+    takes the minimum label among its core neighbours. Returned per
+    coordinate as (site_id = min point id, cluster, is_core)."""
+    ids = pts["pt_id"].to_numpy()
+    lat, lng = pts["lat"].to_numpy(), pts["lng"].to_numpy()
+    near = np_haversine_km(lat[:, None], lng[:, None], lat[None, :], lng[None, :]) <= ADV_EPS
+    core = near.sum(axis=1) >= ADV_MIN_PTS
+    label = {}
+    for i in sorted(np.flatnonzero(core), key=lambda i: ids[i]):
+        if i in label:
+            continue
+        label[i], todo = ids[i], [i]
+        while todo:
+            j = todo.pop()
+            for k in np.flatnonzero(near[j] & core):
+                if k not in label:
+                    label[k] = ids[i]
+                    todo.append(k)
+    for i in np.flatnonzero(~core):
+        reach = [label[k] for k in np.flatnonzero(near[i] & core)]
+        if reach:
+            label[i] = min(reach)
+    site_of = pts.groupby(["lat", "lng"])["pt_id"].transform("min").to_numpy()
+    return {(int(site_of[i]), int(c), bool(core[i])) for i, c in label.items()}
+
+
+def test_adversarial_sites_match_brute_force(spark):
+    pts = _adversarial_points()
+    sites = pts.drop_duplicates(["lat", "lng"])
+    in_hot = np_cell_encode(sites["lat"], sites["lng"], ADV_RES) == np_cell_encode(
+        46.0, 2.0, ADV_RES
+    )
+    assert in_hot.mean() >= 0.09
+    got = C.spatial_clusters(
+        spark.createDataFrame(pts), eps_km=ADV_EPS, min_pts=ADV_MIN_PTS, res=ADV_RES
+    ).toPandas()
+    assert got["site_id"].is_unique
+    want = _brute_force_dbscan(pts)
+    assert set(zip(*(got[c].tolist() for c in ("site_id", "cluster", "is_core")))) == want
+    # the fixture holds what it claims: the whole chain in one cluster,
+    # the wrap pair linked, and border sites and noise both present
+    assert got.loc[got["lat"] == 40.0, "cluster"].nunique() == 1
+    assert (got["lat"] == 40.0).sum() == 200
+    assert got.loc[got["lng"].isin([179.95, -179.97]), "cluster"].nunique() == 1
+    # the bridge site is a border site with the smaller of two labels
+    bridge = got[got["lat"] == 35.0].set_index("lng")
+    lng_x = 60.0 + _east(35.0, 0.8 * ADV_EPS)
+    assert bridge["cluster"].nunique() == 2 and not bridge.loc[lng_x, "is_core"]
+    assert bridge.loc[lng_x, "cluster"] == bridge["cluster"].min()
+    assert not got["is_core"].all() and len(got) < len(sites)
+
+
+def test_pair_blocks_do_not_change_the_result(monkeypatch):
+    """Candidate pairs expanded a few dozen at a time (many blocks, some
+    a single hot-cell site) give the same clustering as one block."""
+    pts = _adversarial_points()
+    sites = (
+        pts.groupby(["lat", "lng"], as_index=False)
+        .agg(site_id=("pt_id", "min"), w=("pt_id", "size"))
+        .sample(frac=1.0, random_state=3)
+    )
+    whole = C._dbscan(sites, ADV_EPS, ADV_MIN_PTS, ADV_RES)
+    monkeypatch.setattr(C, "_PAIR_BUDGET", 37)
+    pd.testing.assert_frame_equal(C._dbscan(sites, ADV_EPS, ADV_MIN_PTS, ADV_RES), whole)
 
 
 def test_cluster_hulls_known_shapes(spark):

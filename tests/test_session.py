@@ -1,12 +1,17 @@
 """Session defaults: generated classes are compiled once per JVM, the
 default driver heap follows the host's RAM and the default thread count
-its cores, and adaptive execution is on (which makes a lazy
+its cores, shuffle goes to tmpfs only with room beside the heap, and
+adaptive execution is on (which makes a lazy
 localCheckpoint run jobs when it is called)."""
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
-from batch_geocode_spark.session import default_cpus, default_driver_memory
+from batch_geocode_spark.session import (
+    default_cpus,
+    default_driver_memory,
+    shuffle_on_tmpfs,
+)
 
 
 def _compilations(spark) -> int:
@@ -64,6 +69,16 @@ def test_default_driver_memory_is_half_of_ram_capped():
     assert default_driver_memory(4 << 20) == "2048m"
     assert default_driver_memory(256 << 20) == "16384m"
     assert default_driver_memory(None) == "16384m"
+
+
+def test_shuffle_on_tmpfs_only_beside_room_for_the_heap():
+    """tmpfs pages are RAM: shuffle goes there only when MemTotal minus
+    the driver heap still leaves 8 GiB, whatever tmpfs has free."""
+    mem_16gb = 16456384  # KiB
+    assert not shuffle_on_tmpfs(8 << 30, mem_16gb, default_driver_memory(mem_16gb))
+    assert shuffle_on_tmpfs(32 << 30, 64 << 20, "16g")
+    assert not shuffle_on_tmpfs(4 << 30, 64 << 20, "16g")  # tmpfs too small
+    assert not shuffle_on_tmpfs(32 << 30, None, "16g")  # RAM unknown
 
 
 def test_default_cpus_is_env_else_host_cores(monkeypatch):

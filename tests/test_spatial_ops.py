@@ -76,6 +76,16 @@ def test_pip_join_matches_bbox_oracle(spark, geo):
     assert (lvl == 1).all()
 
 
+def test_pip_join_polygon_cap(spark, geo, monkeypatch):
+    """More polygons than ``MAX_POLYGONS`` fail loudly at call time, with
+    the cap and the remedy in the message, instead of being collected."""
+    _, _, _, best = geo
+    polys = datagen.admin_polygons_to_spark(spark)
+    monkeypatch.setattr(pip, "MAX_POLYGONS", 10)
+    with pytest.raises(ValueError, match=r"more than 10 rows.*filter the polygons"):
+        pip.pip_join(best, polys, res=6)
+
+
 def test_pip_ray_casting_concave():
     # concave "L" polygon with a hole — beyond what rectangles exercise
     outer = [(0, 0), (4, 0), (4, 4), (2, 4), (2, 2), (0, 2), (0, 0)]
