@@ -29,7 +29,8 @@ this module exists for the training-data-pipeline mandate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -68,8 +69,16 @@ def curate_documents(
 ) -> DataFrame | tuple[DataFrame, dict]:
     """Run the full curation chain; returns the curated docs DataFrame
     (doc_id, lang, source), or ``(df, metrics)`` with per-stage
-    surviving row counts when ``with_metrics`` (each count is one
-    lightweight action over id-width intermediates).
+    surviving row counts when ``with_metrics``.
+
+    The counts run no job of their own: each stage frame carries an
+    unnamed ``Observation`` (``DataFrame.observe``) and the jobs that
+    already run fill it. An observation keeps the counts of the FIRST
+    action that runs its frame, so that action must read the whole
+    frame (a ``limit``/``show`` first would record only its prefix).
+    With metrics the call therefore materialises the result itself
+    (one ``localCheckpoint``) and returns it with plain-int counts;
+    without metrics the plan is the bare lineage.
 
     ``embeddings`` (vec_id, embedding) joins on doc_id = vec_id for the
     semantic stage; docs without an embedding pass through it
@@ -80,40 +89,29 @@ def curate_documents(
     from batch_geocode_spark.operators import sampling as SA
     from batch_geocode_spark.operators import similarity as S
 
-    metrics: dict[str, int] = {}
+    observed: dict[str, tuple[Observation, DataFrame]] = {}
 
-    def note(stage: str, df: DataFrame, id_col: str = "doc_id") -> None:
-        if with_metrics:
-            metrics[stage] = df.select(id_col).count()
+    def note(stage: str, df: DataFrame) -> DataFrame:
+        if not with_metrics:
+            return df
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        observed[stage] = (obs, df)
+        return df
 
-    def pin(df: DataFrame) -> DataFrame:
-        # with_metrics replays the lazy pipeline prefix once per
-        # downstream stage count (ADVICE r5: the exact-dedup groupBy
-        # and decontamination joins recompute up to 7x). Lazily
-        # checkpointing each stage's id-width decision table makes its
-        # expensive subtree compute exactly once — the next note()
-        # count is the materializing action. Without metrics there is
-        # a single terminal action, so the plan stays pure lineage
-        # (r7 A/B: checkpointing here too replaced the estimable agg
-        # subtrees with unknown-size leaves, planning the corpus
-        # semi/anti joins as SMJ + extra stage barriers — measurably
-        # slower than the lineage plan at every load level).
-        return df.localCheckpoint(eager=False) if with_metrics else df
-
-    note("input", docs)
+    docs = note("input", docs)
     eval_docs = docs.filter(F.col("doc_id") % eval_mod == 0)
-    corpus0 = docs.filter(F.col("doc_id") % eval_mod != 0)
-    corpus = corpus0
-    note("corpus_after_eval_split", corpus)
+    corpus0 = note(
+        "corpus_after_eval_split", docs.filter(F.col("doc_id") % eval_mod != 0)
+    )
 
     # 1. exact dedup: keep the min doc_id of every identical-text group
-    keep_exact = pin(
-        corpus.groupBy(F.md5(F.col("text")).alias("text_hash"))
+    keep_exact = (
+        corpus0.groupBy(F.md5(F.col("text")).alias("text_hash"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    corpus = corpus.join(keep_exact, "doc_id", "left_semi")
-    note("after_exact_dedup", corpus)
+    corpus = note("after_exact_dedup", corpus0.join(keep_exact, "doc_id", "left_semi"))
 
     # 2. MinHash near-dup clusters: drop every member except the
     # cluster's keep_doc_id (docs in no cluster survive by definition)
@@ -130,13 +128,10 @@ def curate_documents(
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    drop_near = pin(
-        members.join(
-            clusters.select(F.col("keep_doc_id").alias("doc_id")), "doc_id", "left_anti"
-        )
+    drop_near = members.join(
+        clusters.select(F.col("keep_doc_id").alias("doc_id")), "doc_id", "left_anti"
     )
-    corpus = corpus.join(drop_near, "doc_id", "left_anti")
-    note("after_near_dedup", corpus)
+    corpus = note("after_near_dedup", corpus.join(drop_near, "doc_id", "left_anti"))
 
     # 3. n-gram decontamination vs the eval split (broadcast eval side).
     # Flags are computed over the PRE-DEDUP corpus split, not the
@@ -147,27 +142,28 @@ def curate_documents(
     # second time in the plan (r7, guide §2.4: the duplicated subtree
     # cost a repeated md5-dedup aggregate + joins per action; oracle
     # c01 likewise derives `leaks` from the full document set).
-    leaks = pin(D.decontamination_ids(corpus0, eval_docs, n=decon_ngram))
-    corpus = corpus.join(leaks, "doc_id", "left_anti")
-    note("after_ngram_decontamination", corpus)
+    leaks = D.decontamination_ids(corpus0, eval_docs, n=decon_ngram)
+    corpus = note(
+        "after_ngram_decontamination", corpus.join(leaks, "doc_id", "left_anti")
+    )
 
     # 4. semantic decontamination via embeddings (doc_id = vec_id)
     if embeddings is not None:
         eval_vecs = embeddings.filter(F.col("vec_id") % eval_mod == 0)
         corpus_vecs = embeddings.filter(F.col("vec_id") % eval_mod != 0)
-        sem = pin(
-            S.semantic_decontamination(
-                corpus_vecs, eval_vecs, threshold=semantic_threshold
-            ).select(F.col("corpus_id").alias("doc_id"))
-        )
+        sem = S.semantic_decontamination(
+            corpus_vecs, eval_vecs, threshold=semantic_threshold
+        ).select(F.col("corpus_id").alias("doc_id"))
         corpus = corpus.join(sem, "doc_id", "left_anti")
-    note("after_semantic_decontamination", corpus)
+    corpus = note("after_semantic_decontamination", corpus)
 
     # 5. quality gates
-    corpus = quality_filter(
-        corpus, min_tokens=min_tokens, max_stopword_ratio=max_stopword_ratio
+    corpus = note(
+        "after_quality_filter",
+        quality_filter(
+            corpus, min_tokens=min_tokens, max_stopword_ratio=max_stopword_ratio
+        ),
     )
-    note("after_quality_filter", corpus)
 
     # 6. deterministic stratified sample (content-addressed hash)
     out = SA.stratified_hash_sample(
@@ -179,11 +175,21 @@ def curate_documents(
         salt=salt,
         token_hash="md5_60" if base_hash == "md5_60" else "xxhash64",
     ).select("doc_id", "lang", "source")
-    note("after_stratified_sample", out)
 
-    if with_metrics:
-        return out, metrics
-    return out
+    if not with_metrics:
+        return out
+    out = note("after_stratified_sample", out).localCheckpoint()
+    return out, {stage: _observed_rows(*o) for stage, o in observed.items()}
+
+
+def _observed_rows(obs: Observation, df: DataFrame) -> int:
+    """The row count ``obs`` recorded on ``df``. Adaptive execution can
+    skip a frame whose join partner came up empty; the observation then
+    holds no row, and the count is taken with a job of its own."""
+    try:
+        return int(obs.get["n"])
+    except Py4JJavaError:
+        return df.count()
 
 
 def curate_snapshotted(

@@ -37,8 +37,6 @@ def validate_images(images: DataFrame) -> DataFrame:
     per-image Python/numpy dispatch was the dominant CPU cost for
     16-64px images. Malformed payloads and odd shapes fall back to the
     per-row scalar path; values are bit-identical either way."""
-    import struct
-    import zlib
 
     def scalar_row(buf, fmt, w, h, phash):
         try:
@@ -75,56 +73,24 @@ def validate_images(images: DataFrame) -> DataFrame:
             bufs = pdf["bytes"].to_numpy(object)
             fmts = pdf["fmt"].to_numpy(object)
 
-            # group rows by (fmt, payload dims); parse failures → scalar
-            groups: dict[tuple, tuple[list[int], list]] = {}
-            fallback: list[int] = []
-            for i in range(n):
-                if meta_null[i]:
+            # batch path: _group_decode's (fmt, dims) groups whose dims
+            # the batch phash takes (multiples of 8); parse failures and
+            # other dims take the scalar path, null-metadata rows neither
+            rows = np.flatnonzero(~meta_null)
+            groups, fallback = _group_decode(bufs[rows], fmts[rows])
+            fallback = list(rows[fallback])
+            for idx, imgs in groups:
+                ii = rows[idx]
+                h, w = imgs.shape[1:3]
+                if h % 8 or w % 8:
+                    fallback.extend(ii)
                     continue
-                buf, fmt = bufs[i], fmts[i]
-                try:
-                    if fmt == "dctq" and buf[:4] == b"DCTQ":
-                        h, w, c = struct.unpack("<HHB", bytes(buf[4:9]))
-                        raw = np.frombuffer(
-                            zlib.decompress(bytes(buf[9:])), dtype=np.int16
-                        )
-                        ph_, pw_ = h + ((-h) % 8), w + ((-w) % 8)
-                        if len(raw) != c * ph_ * pw_:
-                            raise ValueError("truncated DCTQ payload")
-                        key = ("dctq", h, w, c)
-                        groups.setdefault(key, ([], []))[0].append(i)
-                        groups[key][1].append(raw)
-                    elif fmt == "ppm" and buf[:2] == b"P6":
-                        img = codecs.decode_ppm(bytes(buf))
-                        key = ("ppm",) + img.shape
-                        groups.setdefault(key, ([], []))[0].append(i)
-                        groups[key][1].append(img)
-                    else:
-                        raise ValueError("unknown payload")
-                except Exception:  # noqa: BLE001
-                    fallback.append(i)
-
-            for key, (idx, payloads) in groups.items():
-                fmt, h, w = key[0], key[1], key[2]
-                if key[0] == "dctq":
-                    c = key[3]
-                    if c != 3 or h % 8 or w % 8:
-                        fallback.extend(idx)
-                        continue
-                    imgs = codecs.decode_dctq_batch(payloads, h, w, c)
-                else:
-                    if len(key) != 4 or key[3] != 3 or h % 8 or w % 8:
-                        fallback.extend(idx)
-                        continue
-                    imgs = np.stack(payloads)
-                ii = np.asarray(idx)
                 got_ph = codecs.average_hash_batch(imgs)
                 decode_ok[ii] = True
                 dims_ok[ii] = (meta_h[ii] == h) & (meta_w[ii] == w)
                 phash_match[ii] = got_ph == want_ph[ii]
                 hamming[ii] = codecs.hamming64_batch(got_ph, want_ph[ii])
-                means = imgs.mean(axis=(1, 2, 3))
-                for j, m in zip(idx, means):
+                for j, m in zip(ii, imgs.mean(axis=(1, 2, 3))):
                     mean_px[j] = float(m)
 
             for i in fallback:
@@ -158,8 +124,8 @@ def validate_images(images: DataFrame) -> DataFrame:
 
 def _group_decode(bufs, fmts):
     """Group an Arrow batch's payloads by (fmt, dims) and BATCH-decode
-    each group (fused ``decode_dctq_batch`` / one ``np.stack``) — the
-    same grouping validate_images uses. Returns (groups, fallback):
+    each group (fused ``decode_dctq_batch`` / one ``np.stack``), for
+    validate_images and resize_images. Returns (groups, fallback):
     groups is a list of (row_indices ndarray, (B, h, w, 3) uint8 stack);
     fallback holds the indices of rows that can't join a batchable group
     (malformed header, truncated payload, non-3-channel) for the

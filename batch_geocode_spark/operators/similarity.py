@@ -26,6 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from batch_geocode_spark.operators import collect_capped
+
+MAX_EVAL_VECS = 200_000  # eval vectors semantic_decontamination collects to the driver
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
@@ -352,9 +356,10 @@ def semantic_decontamination(
     it is the SMALL side (executor broadcast variable on the default
     path, broadcast join on the fallback); the corpus streams through
     one Arrow map and never shuffles at all — the per-corpus-row
-    aggregation happens inside the kernel. For very large eval sets,
-    pre-block with ``hyperplane_signatures`` the way ``ann_lsh_topk``
-    does.
+    aggregation happens inside the kernel. The eval set is collected
+    to the driver, so more than ``MAX_EVAL_VECS`` rows raise
+    ``ValueError``; pre-block such a set with ``hyperplane_signatures``
+    the way ``ann_lsh_topk`` does.
 
     ``vectorized=True`` (default, r7): the zip_with/aggregate dot
     products of the fallback path are higher-order functions that run
@@ -386,11 +391,16 @@ def semantic_decontamination(
             )
         )
 
-    rows = eval_vecs.select(id_col, vec_col).collect()
+    evals = collect_capped(
+        eval_vecs.select(id_col, vec_col),
+        MAX_EVAL_VECS,
+        "semantic_decontamination's eval set",
+        "pre-block it with hyperplane_signatures the way ann_lsh_topk does",
+    )
     id_type = corpus.schema[id_col].dataType.simpleString()
-    if rows:
+    if len(evals):
         emat = np.stack(
-            [np.asarray(r[vec_col], dtype=np.float64) for r in rows]
+            [np.asarray(v, dtype=np.float64) for v in evals[vec_col]]
         )  # (m, dim)
         en = _seq_norms(emat)
         bc = corpus.sparkSession.sparkContext.broadcast((emat, en))

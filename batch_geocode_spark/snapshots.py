@@ -16,6 +16,9 @@ manifest commit log:
 - a snapshot = JSON manifest listing committed buckets with per-bucket
   row counts + lineage (parent snapshot id, job id). Manifests are
   written temp-then-rename; ``CURRENT`` is updated last → atomic commit.
+- the per-bucket counts (and ``stats_cols`` min/max) are taken by a
+  ``DataFrame.observe`` on the write itself (``_write_buckets``): no
+  writer reads its rows a second time to count them.
 - writes use Spark dynamic partition overwrite, so a crash mid-group
   leaves partially-written bucket dirs that the retry simply overwrites.
 - resume = read CURRENT → committed bucket set → process only pending
@@ -36,7 +39,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -316,6 +319,44 @@ class SnapshotTable:
             return json.load(f)
 
 
+def _write_buckets(
+    bucketed: DataFrame,
+    table: SnapshotTable,
+    part_cols: list[str],
+    buckets: list[int],
+    key_of,
+    stats_cols: list[str] | tuple = (),
+) -> tuple[dict[str, int], dict[str, dict]]:
+    """Dynamic-overwrite ``bucketed`` (rows of ``buckets`` only) into
+    ``table`` and return what the manifest records of the write:
+    ``{key_of(b): rows}`` for every bucket in ``buckets`` (0 when empty),
+    and ``{key_of(b): {col: [min, max]}}`` over ``stats_cols`` for the
+    non-empty ones. Both come from one ``Observation`` on the write
+    itself, so no second pass reads the rows again."""
+    if not buckets:  # nothing to write (an upsert of no rows)
+        return {}, {}
+    b = F.col("bucket")
+    aggs = [F.count_if(b == i).alias(f"n{i}") for i in buckets]
+    for k, c in enumerate(stats_cols):
+        for i in buckets:
+            v = F.when(b == i, F.col(c))
+            aggs += [F.min(v).alias(f"lo{k}_{i}"), F.max(v).alias(f"hi{k}_{i}")]
+    obs = Observation()
+    bucketed.observe(obs, *aggs).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*part_cols).parquet(table.data_dir)
+    got = obs.get
+    counts = {key_of(i): int(got[f"n{i}"]) for i in buckets}
+    stats = {
+        key_of(i): {
+            c: [got[f"lo{k}_{i}"], got[f"hi{k}_{i}"]] for k, c in enumerate(stats_cols)
+        }
+        for i in buckets
+        if stats_cols and got[f"n{i}"]
+    }
+    return counts, stats
+
+
 def upsert_snapshotted(
     df: DataFrame,
     table: SnapshotTable,
@@ -374,18 +415,11 @@ def upsert_snapshotted(
         merged = keep.select(*incoming.columns).unionByName(incoming)
     # materialize BEFORE overwriting: the merge plan reads the very
     # bucket directories the write replaces (classic self-overwrite
-    # hazard), and the post-write count must not re-scan deleted files.
-    # The checkpoint holds only the affected buckets — small by design.
-    merged = merged.localCheckpoint()
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(table.data_dir)
-    counts = {
-        str(int(r["bucket"])): int(r["count"])
-        for r in merged.groupBy("bucket").count().collect()
-    }
-    for b in affected:
-        counts.setdefault(str(b), 0)
+    # hazard). The checkpoint holds only the affected buckets — small
+    # by design.
+    counts, _ = _write_buckets(
+        merged.localCheckpoint(), table, ["bucket"], affected, str
+    )
     return table.commit(
         counts,
         job_id,
@@ -426,22 +460,15 @@ def compact_table(
     if layout == "namespace":
         ns = f"compact-{cur['snapshot_id'] + 1}"
         bucketed = bucketed.withColumn("ns", F.lit(ns))
-        bucketed.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("ns", "bucket").parquet(table.data_dir)
+        part_cols = ["ns", "bucket"]
         key_of = lambda b: f"{ns}/{b}"  # noqa: E731
     else:
         bucketed = bucketed.localCheckpoint()
-        bucketed.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(table.data_dir)
+        part_cols = ["bucket"]
         key_of = str
-    counts = {
-        key_of(int(r["bucket"])): int(r["count"])
-        for r in bucketed.groupBy("bucket").count().collect()
-    }
-    for b in range(n_buckets):
-        counts.setdefault(key_of(b), 0)
+    counts, _ = _write_buckets(
+        bucketed, table, part_cols, list(range(n_buckets)), key_of
+    )
     return table.commit_replace(
         counts,
         job_id or f"compact-{cur['snapshot_id'] + 1}",
@@ -479,9 +506,9 @@ def write_snapshotted(
 
     ``stats_cols`` records per-bucket min/max for the named columns in
     the manifest (numeric or string, JSON-representable) — the data
-    the read side's ``prune`` uses for bucket skipping. The stats ride
-    the SAME per-group aggregate that already computes bucket counts,
-    so enabling them adds no extra job.
+    the read side's ``prune`` uses for bucket skipping. Counts and stats
+    are observed on the group's write itself (``_write_buckets``), so
+    neither adds a job.
     """
     job_id = job_id or uuid.uuid4().hex[:12]
 
@@ -502,10 +529,11 @@ def write_snapshotted(
     schema_json = bucketed.schema.json()
 
     # materialize the (pending rows of the) derivation ONCE: each group
-    # commit below filters + writes + counts, and without a checkpoint
-    # every one of those re-runs the full upstream DAG (n_buckets /
-    # group_size rescans). The per-group commit stays the crash-resume
-    # granularity; only the recomputation is gone.
+    # commit below filters + writes, and without a checkpoint every
+    # write re-runs the full upstream DAG (n_buckets / group_size
+    # rescans). A single group is one write, so it needs none. The
+    # per-group commit stays the crash-resume granularity; only the
+    # recomputation is gone.
     source = bucketed
     if len(groups) > 1:
         source = bucketed.filter(
@@ -515,26 +543,9 @@ def write_snapshotted(
     last = table.current() or {}
     for gi, group in enumerate(groups):
         part = source.filter(F.col("bucket").isin([int(b) for b in group]))
-        part.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(*part_cols).parquet(table.data_dir)
-        aggs = [F.count(F.lit(1)).alias("count")]
-        for c in stats_cols or []:
-            aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-        rows = part.groupBy("bucket").agg(*aggs).collect()
-        counts = {key_of(int(r["bucket"])): int(r["count"]) for r in rows}
-        stats = (
-            {
-                key_of(int(r["bucket"])): {
-                    c: [r[f"__mn_{c}"], r[f"__mx_{c}"]] for c in stats_cols
-                }
-                for r in rows
-            }
-            if stats_cols
-            else None
+        counts, stats = _write_buckets(
+            part, table, part_cols, group, key_of, stats_cols or ()
         )
-        for b in group:  # empty buckets still count as committed
-            counts.setdefault(key_of(int(b)), 0)
         last = table.commit(
             counts,
             job_id,

@@ -515,6 +515,20 @@ def test_semantic_decontamination_vectorized_bitwise_matches_jvm(spark):
     assert [x.hex() for x in a["max_sim"]] == [x.hex() for x in b["max_sim"]]
 
 
+def test_semantic_decontamination_eval_cap(spark, monkeypatch):
+    """An eval set larger than ``MAX_EVAL_VECS`` fails loudly at call
+    time, with the cap and the pre-blocking remedy in the message,
+    instead of being collected to the driver."""
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(5)], "vec_id long, embedding array<float>"
+    )
+    monkeypatch.setattr(S, "MAX_EVAL_VECS", 3)
+    with pytest.raises(ValueError, match=r"more than 3 rows.*hyperplane_signatures"):
+        S.semantic_decontamination(vecs, vecs, threshold=0.9)
+    # the JVM reference path collects nothing, so the cap does not apply
+    assert S.semantic_decontamination(vecs, vecs, threshold=0.9, vectorized=False).count() == 5
+
+
 # ------------------------------------------------- hot-band caps (VERDICT r4)
 def test_minhash_hot_band_cap_bounds_template_corpus(spark):
     """A 10k-copy template corpus (the boilerplate-crawl common case)

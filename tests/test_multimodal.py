@@ -186,7 +186,26 @@ def test_validate_images_batch_equals_scalar(spark):
             "phash": [0, 0, 0],
         }
     )
-    full = pd.concat([pdf, bad], ignore_index=True)
+    # 20×12 images: a (fmt, dims) group the batch phash cannot take
+    rng = np.random.default_rng(7)
+    odd_img = rng.integers(0, 256, size=(12, 20, 3)).astype(np.uint8)
+    odd = pd.DataFrame(
+        {
+            "image_id": [f"odd_{fmt}" for fmt in ("ppm", "dctq")],
+            "bytes": [codecs.encode_image(odd_img, fmt) for fmt in ("ppm", "dctq")],
+            "w": [20, 20],
+            "h": [12, 12],
+            "fmt": ["ppm", "dctq"],
+            "caption": ["o", "o"],
+            "phash": [
+                codecs.average_hash(
+                    codecs.decode_image(codecs.encode_image(odd_img, fmt), fmt)
+                )
+                for fmt in ("ppm", "dctq")
+            ],
+        }
+    )
+    full = pd.concat([pdf, bad, odd], ignore_index=True)
     df = spark.createDataFrame(
         full,
         "image_id string, bytes binary, w int, h int, fmt string, "
@@ -199,6 +218,7 @@ def test_validate_images_batch_equals_scalar(spark):
             img = codecs.decode_image(r.bytes, r.fmt)
             ph = codecs.average_hash(img)
             assert bool(row["decode_ok"])
+            assert bool(row["dims_ok"]) == (img.shape[:2] == (r.h, r.w))
             assert bool(row["phash_match"]) == (ph == r.phash)
             assert int(row["phash_hamming"]) == bin((ph ^ r.phash) & (2**64 - 1)).count("1")
             assert row["mean_px"] == pytest.approx(float(img.mean()), rel=1e-12)

@@ -4,6 +4,8 @@ bound is pinned here instead of hash-matched), and the adversarial
 chain-shaped near-dup corpus that stresses the LSH → pairs → clusters
 backbone at a component depth far beyond round-2's iteration cap."""
 
+import os
+
 import pytest
 
 from batch_geocode_spark import entry_queries as EQ
@@ -111,3 +113,68 @@ def test_c01_curation_snapshot_metrics(spark, tmp_path_factory):
         .reset_index(drop=True)
     )
     assert got.equals(want)
+
+
+# per-stage counts curate_documents(with_metrics=True) returned on sf0.01
+# when each stage was counted by a count() job of its own
+SF01_STAGE_ROWS = {
+    "input": 500,
+    "corpus_after_eval_split": 428,
+    "after_exact_dedup": 428,
+    "after_near_dedup": 412,
+    "after_ngram_decontamination": 404,
+    "after_semantic_decontamination": 400,
+    "after_quality_filter": 400,
+    "after_stratified_sample": 152,
+}
+
+
+def _jobs_in(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_curation_metrics_ride_the_pipeline_jobs(spark):
+    """with_metrics observes each stage on the jobs the pipeline runs
+    anyway: it runs at most one job more than the call without metrics
+    (materialising the result), and its counts equal the per-stage
+    count() figures."""
+    from batch_geocode_spark.operators import curation as C
+
+    sf = os.path.join(os.path.dirname(SF), "sf0.01")
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    got = {}
+
+    def plain():
+        got["plain"] = C.curate_documents(docs, embeddings=emb).collect()
+
+    def metered():
+        out, got["stages"] = C.curate_documents(docs, embeddings=emb, with_metrics=True)
+        got["metered"] = out.collect()
+
+    n_plain = _jobs_in(spark, "curate-plain", plain)
+    n_metered = _jobs_in(spark, "curate-metered", metered)
+    assert got["stages"] == SF01_STAGE_ROWS
+    assert sorted(got["metered"]) == sorted(got["plain"])
+    assert n_metered <= n_plain + 1, (n_metered, n_plain)
+
+
+def test_curation_metrics_count_stages_adaptive_execution_skips(spark):
+    """An eval-only input leaves the corpus empty, so adaptive execution
+    drops the exact-dedup join together with the observed input frame;
+    that count still comes out exact."""
+    from pyspark.sql import functions as F
+
+    from batch_geocode_spark.operators import curation as C
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(F.col("doc_id") % 7 == 0)
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    out, stages = C.curate_documents(docs, embeddings=emb, with_metrics=True)
+    assert out.count() == 0
+    assert stages == {k: (docs.count() if k == "input" else 0) for k in SF01_STAGE_ROWS}

@@ -260,11 +260,12 @@ def test_compact_plain_layout_enables_upsert(spark, tmp_path_factory):
     assert got["k0"] == -1 and got["k5"] == 5 and len(got) == 20
 
 
-def test_write_snapshotted_single_derivation(spark, tmp_path_factory):
-    """The bucketed frame is checkpointed before the group-commit loop:
-    the upstream derivation must run ONCE, not once per group write +
-    once per group count (round-2 behavior: n_buckets/group_size full
-    rescans)."""
+@pytest.mark.parametrize("group_size", [2, 8])
+def test_write_snapshotted_single_derivation(spark, tmp_path_factory, group_size):
+    """The upstream derivation runs ONCE per call: several groups write
+    from one checkpoint of the bucketed frame, and a single group is one
+    write whose bucket counts are observed on the write itself (no
+    second pass to count them)."""
     from pyspark.sql import functions as F
 
     acc = spark.sparkContext.accumulator(0)
@@ -280,7 +281,7 @@ def test_write_snapshotted_single_derivation(spark, tmp_path_factory):
     derived = base.mapInPandas(derive, schema="image_id string, v int")
 
     t = SnapshotTable(str(tmp_path_factory.mktemp("oncederive")))
-    write_snapshotted(derived, t, key_col="image_id", n_buckets=8, group_size=2)
+    write_snapshotted(derived, t, key_col="image_id", n_buckets=8, group_size=group_size)
     assert t.read(spark).count() == 400
     assert acc.value == 400, f"derivation ran {acc.value / 400:.1f}x, expected once"
 
@@ -443,3 +444,78 @@ def test_snapshotted_write_leaves_session_overwrite_mode(spark, best_df, tmp_pat
     df.write.partitionBy("p").parquet(out)
     df.filter("p = 'a'").write.mode("overwrite").partitionBy("p").parquet(out)
     assert [r["p"] for r in spark.read.parquet(out).collect()] == ["a"]
+
+
+def _manifest_vs_groupby(spark, t, stats_cols=()):
+    """Assert the current manifest's ``buckets``, ``total_rows`` and
+    ``column_stats`` against a groupBy over the committed rows; returns
+    (manifest, {bucket key: reference row})."""
+    from pyspark.sql import functions as F
+
+    snap = t.current()
+    df = t.read(spark)
+    b = F.col("bucket").cast("string")
+    key = F.concat_ws("/", "ns", b) if "ns" in df.columns else b
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for c in stats_cols:
+        aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
+    ref = {r["key"]: r for r in df.groupBy(key.alias("key")).agg(*aggs).collect()}
+    assert set(ref) <= set(snap["buckets"])
+    assert snap["buckets"] == {k: (ref[k]["n"] if k in ref else 0) for k in snap["buckets"]}
+    assert snap["total_rows"] == df.count() == sum(snap["buckets"].values())
+    for k, st in snap.get("column_stats", {}).items():
+        assert st == {c: [ref[k][f"lo_{c}"], ref[k][f"hi_{c}"]] for c in st}, k
+    return snap, ref
+
+
+def test_manifests_match_a_groupby_of_the_committed_rows(spark, tmp_path_factory):
+    """Every writer's manifest (counts observed on the write) equals a
+    groupBy of what it committed: plain and namespaced writes with
+    stats and an empty bucket, an upsert with a tombstone, and a
+    compaction to each layout."""
+    from pyspark.sql import functions as F
+
+    from batch_geocode_spark.snapshots import (
+        bucket_expr,
+        compact_table,
+        upsert_snapshotted,
+    )
+
+    rows = spark.createDataFrame(
+        [(f"k{i}", i, f"t{i % 13:02d}") for i in range(200)],
+        "image_id string, v int, tag string",
+    )
+    no_b3 = rows.filter(bucket_expr("image_id", 8) != 3)  # bucket 3 stays empty
+
+    plain = SnapshotTable(str(tmp_path_factory.mktemp("mf_plain")))
+    write_snapshotted(no_b3, plain, n_buckets=8, group_size=3, stats_cols=["v", "tag"])
+    snap, ref = _manifest_vs_groupby(spark, plain, ["v", "tag"])
+    assert snap["buckets"]["3"] == 0 and "3" not in snap["column_stats"]
+    assert set(snap["column_stats"]) == set(ref) and len(ref) == 7
+
+    mixed = spark.createDataFrame(
+        [("k0", 0, "x", True), ("k1", -1, "y", False), ("new", 999, "z", False),
+         ("ghost", 0, "g", True)],
+        "image_id string, v int, tag string, deleted boolean",
+    )
+    upsert_snapshotted(mixed, plain, n_buckets=8, tombstone_col="deleted")
+    snap, _ = _manifest_vs_groupby(spark, plain, ["v", "tag"])
+    keys = {r["image_id"] for r in no_b3.select("image_id").collect()}
+    assert snap["total_rows"] == len((keys - {"k0"}) | {"k1", "new"})
+
+    ns = SnapshotTable(str(tmp_path_factory.mktemp("mf_ns")))
+    for b in range(2):
+        part = no_b3.filter(F.col("v") % 2 == b)
+        write_snapshotted(part, ns, n_buckets=8, group_size=8, namespace=f"b{b}",
+                          stats_cols=["v"])
+    snap, ref = _manifest_vs_groupby(spark, ns, ["v"])
+    assert snap["buckets"]["b0/3"] == snap["buckets"]["b1/3"] == 0
+    assert set(snap["column_stats"]) == set(ref) and len(ref) == 14
+
+    compact_table(spark, ns, key_col="image_id", n_buckets=4)
+    snap, _ = _manifest_vs_groupby(spark, ns)
+    assert len(snap["buckets"]) == 4 and snap["total_rows"] == no_b3.count()
+    compact_table(spark, ns, key_col="image_id", n_buckets=4, layout="plain")
+    snap, _ = _manifest_vs_groupby(spark, ns)
+    assert set(snap["buckets"]) == {"0", "1", "2", "3"}
+    assert snap["total_rows"] == no_b3.count()
