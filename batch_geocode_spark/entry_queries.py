@@ -591,18 +591,13 @@ def d06_simhash_fingerprints(spark, sf_dir):
 
 
 def e02_cosine_near_dup(spark, sf_dir):
-    """Embedding near-duplicate pairs, exact (oracle-checkable).
-    Strategy selection is free: the corpus size comes from parquet
-    footer metadata (zero Spark jobs), not a limit-probe count."""
+    """Embedding near-duplicate pairs, exact (oracle-checkable): the
+    table is below ``similarity.MAX_EXACT_VECS``, so the capped collect
+    that chooses the path is also the exact path's matrix."""
     from batch_geocode_spark.operators import similarity as S
-    from batch_geocode_spark.sources import parquet_num_rows
 
     _views(spark, sf_dir)
-    return S.cosine_near_dup_pairs(
-        spark.table("embeddings"),
-        threshold=0.45,
-        approx_rows=parquet_num_rows(f"{sf_dir}/embeddings.parquet"),
-    )
+    return S.cosine_near_dup_pairs(spark.table("embeddings"), threshold=0.45)
 
 
 # Recall bars for the ANN verification summaries: the driver
@@ -637,10 +632,8 @@ def e03_ann_topk(spark, sf_dir):
     # one candidate table feeds both the ANN rescore and the soundness
     # check (r7: previously each derived its own signature tables);
     # lazily checkpointed so it computes once across both consumers
-    cand = S.lsh_candidates(queries, emb, dim=64, n_tables=8, bits=8).localCheckpoint(
-        eager=False
-    )
-    ann = S.ann_lsh_topk(queries, emb, dim=64, k=5, n_tables=8, bits=8, candidates=cand)
+    cand = S.lsh_candidates(queries, emb, n_tables=8, bits=8).localCheckpoint(eager=False)
+    ann = S.ann_lsh_topk(queries, emb, k=5, n_tables=8, bits=8, candidates=cand)
     return S.ann_verification_summary(
         ann, queries, emb, k=5, min_recall=ANN_MIN_RECALL_LSH, candidates=cand
     )
@@ -738,17 +731,13 @@ def e01_cosine_topk(spark, sf_dir):
     product, norms and rounding accumulate in the identical order, so
     every double is bit-equal to the collect formulation — oracle-hash
     checked)."""
+    from batch_geocode_spark.operators.similarity import _as_double, _dot, _norm
+
     _views(spark, sf_dir)
     emb = spark.table("embeddings")
-    to_d = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    q = emb.filter(F.col("vec_id") == 0).select(to_d(F.col("embedding")).alias("qv"))
-    e = to_d(F.col("embedding"))
-    dot = F.aggregate(
-        F.zip_with(e, F.col("qv"), lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nrm = F.sqrt(F.aggregate(e, F.lit(0.0), lambda acc, x: acc + x * x))
-    qn = F.sqrt(F.aggregate(F.col("qv"), F.lit(0.0), lambda acc, x: acc + x * x))
-    sim = dot / (nrm * qn)
+    q = emb.filter(F.col("vec_id") == 0).select(_as_double(F.col("embedding")).alias("qv"))
+    e = _as_double(F.col("embedding"))
+    sim = _dot(e, F.col("qv")) / (_norm(e) * _norm(F.col("qv")))
     ranked = (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -2025,7 +2014,7 @@ def e05_embedding_dup_clusters(spark, sf_dir):
     from batch_geocode_spark.operators import similarity as S
 
     _views(spark, sf_dir)
-    pairs = S.cosine_near_dup_pairs(spark.table("embeddings"), threshold=0.45, use_lsh=False)
+    pairs = S.cosine_near_dup_pairs(spark.table("embeddings"), threshold=0.45)
     return D.dedup_clusters(pairs, id_a="id_a", id_b="id_b").select(
         "component", "n_docs", "keep_doc_id"
     )
@@ -2095,7 +2084,7 @@ def e04_ivf_topk(spark, sf_dir):
     _views(spark, sf_dir)
     emb = spark.table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    ann = S.ivf_topk(queries, emb, dim=64, k=5, n_centroids=16, n_probe=4)
+    ann = S.ivf_topk(queries, emb, k=5, n_centroids=16, n_probe=4)
     return S.ann_verification_summary(
         ann, queries, emb, k=5, min_recall=ANN_MIN_RECALL_IVF
     )

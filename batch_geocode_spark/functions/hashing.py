@@ -27,3 +27,12 @@ def hash60(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
+
+def token_hash(col: Column | str, kind: str) -> Column:
+    """The ``token_hash``/``base_hash`` option of the operators as a
+    Column: ``xxhash64`` or ``md5_60`` (:func:`hash60`)."""
+    if kind == "xxhash64":
+        return F.xxhash64(col)
+    if kind == "md5_60":
+        return hash60(col)
+    raise ValueError(f"unknown token hash {kind!r}: use 'xxhash64' or 'md5_60'")

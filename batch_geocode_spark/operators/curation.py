@@ -114,7 +114,8 @@ def curate_documents(
     corpus = note("after_exact_dedup", corpus0.join(keep_exact, "doc_id", "left_semi"))
 
     # 2. MinHash near-dup clusters: drop every member except the
-    # cluster's keep_doc_id (docs in no cluster survive by definition)
+    # cluster's min doc_id, its component label (docs in no cluster
+    # survive by definition)
     pairs = D.minhash_lsh_pairs(
         corpus,
         n=4,
@@ -122,14 +123,10 @@ def curate_documents(
         base_hash=base_hash,
         max_band_df=max_band_df,
     )
-    clusters = D.dedup_clusters(pairs)
-    members = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    drop_near = members.join(
-        clusters.select(F.col("keep_doc_id").alias("doc_id")), "doc_id", "left_anti"
+    drop_near = (
+        D.connected_components(pairs)
+        .filter(F.col("node") != F.col("component"))
+        .select(F.col("node").alias("doc_id"))
     )
     corpus = note("after_near_dedup", corpus.join(drop_near, "doc_id", "left_anti"))
 

@@ -292,15 +292,9 @@ def _grouped_shingle_hashes(
     within-doc collisions at ~|set|²/2³² and the d05 oracle verifies
     over raw shingle strings; at 2⁶⁰/2⁶⁴ a within-pair collision is
     ~|union|²/2⁶⁰ ≈ 1e-12)."""
-    from batch_geocode_spark.functions.hashing import hash60
+    from batch_geocode_spark.functions import hashing
 
-    if base_hash == "xxhash64":
-        h = F.xxhash64("shingle")
-    elif base_hash == "md5_60":
-        h = hash60(F.col("shingle"))
-    else:
-        raise ValueError(f"unknown base_hash {base_hash!r}")
-    base = sh.select("doc_id", h.alias("x"))
+    base = sh.select("doc_id", hashing.token_hash("shingle", base_hash).alias("x"))
     return base.groupBy("doc_id").agg(F.collect_set("x").alias("xs"))
 
 
@@ -668,14 +662,9 @@ def simhash_fingerprints(
     md5-derived 60-bit hash (functions.hashing) so a DuckDB oracle can
     reproduce the fingerprints value-for-value; xxhash64 stays the
     production default."""
-    from batch_geocode_spark.functions.hashing import hash60
+    from batch_geocode_spark.functions import hashing
 
-    if token_hash == "xxhash64":
-        h = F.xxhash64("tok")
-    elif token_hash == "md5_60":
-        h = hash60(F.col("tok"))
-    else:
-        raise ValueError(f"unknown token_hash {token_hash!r}")
+    h = hashing.token_hash("tok", token_hash)
     toks = F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
     th = docs.select("doc_id", toks).select("doc_id", h.alias("th"))
     grouped = th.groupBy("doc_id").agg(F.collect_list("th").alias("hashes"))

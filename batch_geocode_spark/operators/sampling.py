@@ -20,20 +20,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from batch_geocode_spark.functions.hashing import hash60
+from batch_geocode_spark.functions import hashing
 
 DENOM = 1_000_000
 
 
 def _bucket(key_col: str, salt: str, token_hash: str) -> Column:
     keyed = F.concat(F.lit(salt), F.col(key_col).cast("string"))
-    if token_hash == "xxhash64":
-        h = F.xxhash64(keyed)
-    elif token_hash == "md5_60":
-        h = hash60(keyed)
-    else:
-        raise ValueError(f"unknown token_hash {token_hash!r}")
-    return F.pmod(h, F.lit(DENOM))
+    return F.pmod(hashing.token_hash(keyed, token_hash), F.lit(DENOM))
 
 
 def hash_sample(

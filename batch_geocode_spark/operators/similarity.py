@@ -8,12 +8,22 @@
   then exact cosine on candidates only, per-query top-k. The scale path:
   candidate generation is an equi-join on (table, bucket) instead of a
   cross join.
-- cosine_near_dup_pairs : all corpus pairs with cosine ≥ threshold
-  (exact, blocked by LSH bucket when ``use_lsh``).
+- ivf_topk : k-means inverted lists; candidates = the lists of each
+  query's nearest centroids, rescored the same way as LSH candidates.
+- cosine_near_dup_pairs : all corpus pairs with cosine ≥ threshold. One
+  capped collect (``limit(MAX_EXACT_VECS + 1)``) is both the size probe
+  and the exact path's driver matrix; a corpus above the cap takes the
+  LSH-blocked path instead.
 
-Dot products run JVM-side via zip_with/aggregate (no Python in the hot
-path); the hyperplane signatures use one vectorized Arrow batch pass
-(numpy matmul).
+The embedding width is never a parameter: the numpy kernels read it
+from the vectors they get (the hyperplanes are drawn at ``mat.shape[1]``).
+
+Every cosine is built from the same private helpers: ``_vecs`` projects
+(id, double vector, norm), ``_cos`` is the dot over the norm product,
+and ``_rescore``/``_top_k`` rank candidate pairs. Dot products run
+JVM-side via zip_with/aggregate (no Python in the hot path); the
+hyperplane signatures and the exact near-dup path use one vectorized
+Arrow batch pass (numpy matmul).
 """
 
 from __future__ import annotations
@@ -29,6 +39,7 @@ from pyspark.sql import functions as F
 from batch_geocode_spark.operators import collect_capped
 
 MAX_EVAL_VECS = 200_000  # eval vectors semantic_decontamination collects to the driver
+MAX_EXACT_VECS = 500_000  # corpus vectors cosine_near_dup_pairs matches exactly on the driver
 
 
 def _dot(a, b):
@@ -41,6 +52,61 @@ def _norm(a):
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _vecs(
+    df: DataFrame, id_alias: str, v: str, n: str, id_col="vec_id", vec_col="embedding"
+) -> DataFrame:
+    """(id_alias, v, n): the id, the vector as doubles and its norm."""
+    return df.select(
+        F.col(id_col).alias(id_alias), _as_double(F.col(vec_col)).alias(v)
+    ).withColumn(n, _norm(F.col(v)))
+
+
+def _cos(a: str, na: str, b: str, nb: str):
+    """Cosine of two ``_vecs`` projections: dot(a, b) / (na * nb)."""
+    return _dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb))
+
+
+def _top_k(scored: DataFrame, k: int, round_dp: int | None = 6) -> DataFrame:
+    """Per query, the ``k`` best (cos_sim DESC, corpus_id ASC) rows as
+    (query_id, corpus_id, cos_sim, rank); ``round_dp=None`` keeps the
+    raw doubles."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
+    out_cos = (
+        F.round("cos_sim", round_dp).alias("cos_sim")
+        if round_dp is not None
+        else F.col("cos_sim")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "corpus_id", out_cos, "rank")
+    )
+
+
+def _scored(cand: DataFrame, queries: DataFrame, corpus: DataFrame, col: str) -> DataFrame:
+    """Candidate (query_id, corpus_id) pairs with their exact cosine in
+    ``col``; the query side is broadcast."""
+    return (
+        cand.join(F.broadcast(_vecs(queries, "query_id", "qv", "qn")), "query_id")
+        .join(_vecs(corpus, "corpus_id", "cv", "cn"), "corpus_id")
+        .withColumn(col, _cos("qv", "qn", "cv", "cn"))
+    )
+
+
+def _rescore(cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Exact cosine on the candidate pairs, then the per-query top-k."""
+    return _top_k(_scored(cand, queries, corpus, "cos_sim"), k)
+
+
+def _matrix(vectors) -> np.ndarray:
+    """(n, dim) float64 matrix of a column of embedding arrays."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    return mat / np.linalg.norm(mat, axis=1, keepdims=True)
 
 
 def brute_force_topk(
@@ -57,32 +123,14 @@ def brute_force_topk(
     dot products, per-query window top-k. ``round_dp=None`` keeps the
     raw double cosines (the verification summary aggregates them before
     its own rounding)."""
-    q = queries.select(
-        F.col(q_id).alias("query_id"), _as_double(F.col(q_vec)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = corpus.select(
-        F.col(c_id).alias("corpus_id"), _as_double(F.col(c_vec)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    joined = c.crossJoin(F.broadcast(q)).withColumn(
-        "cos_sim", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    out_cos = (
-        F.round("cos_sim", round_dp).alias("cos_sim")
-        if round_dp is not None
-        else F.col("cos_sim")
-    )
-    return (
-        joined.filter(F.col("query_id") != F.col("corpus_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", out_cos, "rank")
-    )
+    q = _vecs(queries, "query_id", "qv", "qn", q_id, q_vec)
+    c = _vecs(corpus, "corpus_id", "cv", "cn", c_id, c_vec)
+    joined = c.crossJoin(F.broadcast(q)).withColumn("cos_sim", _cos("qv", "qn", "cv", "cn"))
+    return _top_k(joined.filter(F.col("query_id") != F.col("corpus_id")), k, round_dp)
 
 
 def hyperplane_signatures(
     vecs: DataFrame,
-    dim: int,
     n_tables: int = 4,
     bits: int = 12,
     seed: int = 42,
@@ -90,25 +138,24 @@ def hyperplane_signatures(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, table, bucket): sign-bit LSH buckets per table — one
-    vectorized Arrow pass (numpy matmul against seeded hyperplanes)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, bits, dim)).astype(np.float64)
+    vectorized Arrow pass (numpy matmul against seeded hyperplanes,
+    drawn at the width of the vectors)."""
 
     def sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         weights = np.power(2, np.arange(bits), dtype=np.int64)
         for pdf in it:
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            ids, tables, buckets = [], [], []
-            for t in range(n_tables):
-                proj = mat @ planes[t].T  # (n, bits)
-                bucket = ((proj > 0).astype(np.int64) * weights).sum(axis=1)
-                ids.append(pdf[id_col].to_numpy())
-                tables.append(np.full(len(pdf), t, dtype=np.int32))
-                buckets.append(bucket)
+            if not len(pdf):
+                continue
+            mat = _matrix(pdf[vec_col])
+            planes = np.random.default_rng(seed).standard_normal(
+                (n_tables, bits, mat.shape[1])
+            )
+            # one (n, bits) projection per table, rows table-major
+            buckets = [((mat @ planes[t].T > 0) * weights).sum(axis=1) for t in range(n_tables)]
             yield pd.DataFrame(
                 {
-                    "vec_id": np.concatenate(ids),
-                    "table": np.concatenate(tables),
+                    "vec_id": np.tile(pdf[id_col].to_numpy(), n_tables),
+                    "table": np.repeat(np.arange(n_tables, dtype=np.int32), len(pdf)),
                     "bucket": np.concatenate(buckets),
                 }
             )
@@ -121,7 +168,6 @@ def hyperplane_signatures(
 def lsh_candidates(
     queries: DataFrame,
     corpus: DataFrame,
-    dim: int,
     n_tables: int = 6,
     bits: int = 10,
     seed: int = 42,
@@ -130,10 +176,10 @@ def lsh_candidates(
     pairs sharing ≥1 (table, bucket). Deterministic given the seed —
     the verification summary recomputes it to check candidate
     soundness (``ann_verification_summary``)."""
-    qs = hyperplane_signatures(queries, dim, n_tables, bits, seed).withColumnsRenamed(
+    qs = hyperplane_signatures(queries, n_tables, bits, seed).withColumnsRenamed(
         {"vec_id": "query_id"}
     )
-    cs = hyperplane_signatures(corpus, dim, n_tables, bits, seed).withColumnsRenamed(
+    cs = hyperplane_signatures(corpus, n_tables, bits, seed).withColumnsRenamed(
         {"vec_id": "corpus_id"}
     )
     return (
@@ -147,7 +193,6 @@ def lsh_candidates(
 def ann_lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
-    dim: int,
     k: int = 10,
     n_tables: int = 6,
     bits: int = 10,
@@ -159,30 +204,13 @@ def ann_lsh_topk(
     bits; tune per corpus density. ``candidates`` lets a caller that
     already materialized the blocking pairs (e.g. to verify candidate
     soundness alongside, the e03 shape) reuse them instead of this
-    function re-deriving both signature tables (r7: halves the
-    signature work in the verification query)."""
+    function re-deriving both signature tables."""
     cand = (
         candidates
         if candidates is not None
-        else lsh_candidates(queries, corpus, dim, n_tables, bits, seed)
+        else lsh_candidates(queries, corpus, n_tables, bits, seed)
     )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = corpus.select(
-        F.col("vec_id").alias("corpus_id"), _as_double(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "corpus_id")
-        .withColumn("cos_sim", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _rescore(cand, queries, corpus, k)
 
 
 def ann_verification_summary(
@@ -243,23 +271,12 @@ def ann_verification_summary(
     ann = ann.select("query_id", "corpus_id", "cos_sim", "rank").localCheckpoint(
         eager=False
     )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = corpus.select(
-        F.col("vec_id").alias("corpus_id"), _as_double(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    re_pairs = (
-        ann.join(F.broadcast(q), "query_id")
-        .join(c, "corpus_id")
-        .withColumn("exact_cos", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-        .select(
-            "query_id",
-            "corpus_id",
-            "cos_sim",
-            "rank",
-            (F.abs(F.col("cos_sim") - F.col("exact_cos")) <= tol).alias("cos_match"),
-        )
+    re_pairs = _scored(ann, queries, corpus, "exact_cos").select(
+        "query_id",
+        "corpus_id",
+        "cos_sim",
+        "rank",
+        (F.abs(F.col("cos_sim") - F.col("exact_cos")) <= tol).alias("cos_match"),
     )
     exact = brute_force_topk(queries, corpus, k=k, round_dp=None).localCheckpoint(
         eager=False
@@ -373,15 +390,9 @@ def semantic_decontamination(
     ``vectorized=False`` keeps the pure-JVM broadcast-join path (no
     driver collect of the eval side at plan-build time)."""
     if not vectorized:
-        c = corpus.select(
-            F.col(id_col).alias("corpus_id"), _as_double(F.col(vec_col)).alias("cv")
-        ).withColumn("cn", _norm(F.col("cv")))
-        e = eval_vecs.select(
-            F.col(id_col).alias("eval_id"), _as_double(F.col(vec_col)).alias("ev")
-        ).withColumn("en", _norm(F.col("ev")))
-        joined = c.crossJoin(F.broadcast(e)).withColumn(
-            "cos_sim", _dot(F.col("cv"), F.col("ev")) / (F.col("cn") * F.col("en"))
-        )
+        c = _vecs(corpus, "corpus_id", "cv", "cn", id_col, vec_col)
+        e = _vecs(eval_vecs, "eval_id", "ev", "en", id_col, vec_col)
+        joined = c.crossJoin(F.broadcast(e)).withColumn("cos_sim", _cos("cv", "cn", "ev", "en"))
         return (
             joined.filter(F.col("cos_sim") >= F.lit(threshold))
             .groupBy("corpus_id")
@@ -399,9 +410,7 @@ def semantic_decontamination(
     )
     id_type = corpus.schema[id_col].dataType.simpleString()
     if len(evals):
-        emat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in evals[vec_col]]
-        )  # (m, dim)
+        emat = _matrix(evals[vec_col])  # (m, dim)
         en = _seq_norms(emat)
         bc = corpus.sparkSession.sparkContext.broadcast((emat, en))
 
@@ -417,9 +426,7 @@ def semantic_decontamination(
                     sub = pdf.iloc[s : s + chunk]
                     if not len(sub):
                         continue
-                    cmat = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in sub[vec_col]]
-                    )
+                    cmat = _matrix(sub[vec_col])
                     # per-dim accumulation: each (i, j) pair's adds happen
                     # in dimension order — the exact zip_with/aggregate
                     # sequence
@@ -466,71 +473,44 @@ def _seq_norms(mat: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
-def cosine_near_dup_pairs(
-    vecs: DataFrame,
-    threshold: float = 0.95,
-    use_lsh: bool | None = None,
-    dim: int = 64,
-    auto_lsh_min_rows: int = 500_000,
-    approx_rows: int | None = None,
-) -> DataFrame:
-    """Embedding near-dup pairs (cosine ≥ threshold).
+def cosine_near_dup_pairs(vecs: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Embedding near-dup pairs (cosine ≥ threshold) as (id_a, id_b,
+    cos_sim) with id_a < id_b.
 
-    Strategy selection is SIZE-SAFE BY DEFAULT (``use_lsh=None``): if
-    the corpus reaches ``auto_lsh_min_rows`` the LSH-blocked path is
-    chosen automatically — the exact path materializes the corpus
-    matrix on the driver and must never be the blind default at 10^8+
-    vectors. When the caller already knows the corpus size (parquet
-    footer metadata, catalog statistics), pass it as ``approx_rows``
-    and strategy selection costs ZERO Spark jobs; otherwise the
-    fallback probe is ``limit(n).count()``, which stops scanning at
-    the threshold instead of counting the full table. Pass
-    ``use_lsh=True/False`` to force a path.
+    The path is chosen from the data, in the one Spark job that the
+    exact path needs anyway: ``limit(MAX_EXACT_VECS + 1).toPandas()``
+    either returns the whole corpus or proves it is larger than the
+    cap (the ``dedup.connected_components`` pattern).
 
-    Exact path: block matmul — each partition multiplies its rows
-    against the full normalized corpus matrix with BLAS in one Arrow
-    pass, emitting only pairs over the threshold; the matrix ships via
-    an executor BROADCAST VARIABLE (sent once per executor), not UDF
-    closure capture (once per task). ~1000× the per-element zip_with
-    path. ``use_lsh`` is the 10^12-scale variant: bucket-blocked
-    candidates + exact verify, no global matrix anywhere."""
-    if use_lsh is None:
-        if approx_rows is not None:
-            use_lsh = approx_rows >= auto_lsh_min_rows
-        else:
-            use_lsh = vecs.limit(auto_lsh_min_rows).count() >= auto_lsh_min_rows
-    if use_lsh:
-        v = vecs.select("vec_id", _as_double(F.col("embedding")).alias("v")).withColumn(
-            "n", _norm(F.col("v"))
-        )
-        a = v.select(
-            F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")
-        )
-        b = v.select(
-            F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb")
-        )
-        sig = hyperplane_signatures(vecs, dim, n_tables=8, bits=8)
-        sa = sig.withColumnsRenamed({"vec_id": "id_a"})
-        sb = sig.withColumnsRenamed({"vec_id": "id_b"})
+    Exact path (at most ``MAX_EXACT_VECS`` vectors): block matmul — each
+    partition multiplies its rows against the full normalized corpus
+    matrix with BLAS in one Arrow pass, emitting only pairs over the
+    threshold; the matrix ships via an executor BROADCAST VARIABLE (sent
+    once per executor), not UDF closure capture (once per task).
+
+    LSH path (above the cap): bucket-blocked candidates + exact verify,
+    no global matrix anywhere; it never invents a pair, and may miss one
+    whose vectors share no bucket."""
+    pdf = vecs.select("vec_id", "embedding").limit(MAX_EXACT_VECS + 1).toPandas()
+    if len(pdf) > MAX_EXACT_VECS:
+        sig = hyperplane_signatures(vecs, n_tables=8, bits=8)
         cand = (
-            sa.join(sb, ["table", "bucket"])
+            sig.withColumnsRenamed({"vec_id": "id_a"})
+            .join(sig.withColumnsRenamed({"vec_id": "id_b"}), ["table", "bucket"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
             .distinct()
         )
-        pairs = cand.join(a, "id_a").join(b, "id_b")
         return (
-            pairs.withColumn(
-                "cos_sim", _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-            )
+            cand.join(_vecs(vecs, "id_a", "va", "na"), "id_a")
+            .join(_vecs(vecs, "id_b", "vb", "nb"), "id_b")
+            .withColumn("cos_sim", _cos("va", "na", "vb", "nb"))
             .filter(F.col("cos_sim") >= F.lit(threshold))
             .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
         )
 
-    pdf = vecs.select("vec_id", "embedding").toPandas()
     ids = pdf["vec_id"].to_numpy(np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    mat = _unit_rows(_matrix(pdf["embedding"]))
     # broadcast variable, not closure capture: the matrix is shipped
     # once per executor instead of once per task
     bc = vecs.sparkSession.sparkContext.broadcast((ids, mat))
@@ -539,8 +519,7 @@ def cosine_near_dup_pairs(
         c_ids, c_mat = bc.value
         for bdf in it:
             bids = bdf["vec_id"].to_numpy(np.int64)
-            bmat = np.stack([np.asarray(v, dtype=np.float64) for v in bdf["embedding"]])
-            bmat = bmat / np.linalg.norm(bmat, axis=1, keepdims=True)
+            bmat = _unit_rows(_matrix(bdf["embedding"]))
             sims = bmat @ c_mat.T  # (block, N) via BLAS
             ii, jj = np.nonzero((sims >= threshold) & (bids[:, None] < c_ids[None, :]))
             if len(ii):
@@ -561,7 +540,7 @@ def _kmeans_lite(mat: np.ndarray, n_centroids: int, iters: int = 8, seed: int = 
     """Deterministic seeded k-means on a (sampled) matrix — numpy only,
     driver-side; the IVF coarse quantizer."""
     rng = np.random.default_rng(seed)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    mat = _unit_rows(mat)
     idx = rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)
     cents = mat[idx].copy()
     for _ in range(iters):
@@ -583,8 +562,7 @@ def _train_ivf_centroids(
     # layouts, which would make the "deterministic seeded" quantizer
     # depend on scan order
     train = corpus.orderBy("vec_id").limit(train_sample).toPandas()
-    tmat = np.stack([np.asarray(v, dtype=np.float64) for v in train["embedding"]])
-    return _kmeans_lite(tmat, n_centroids, seed=seed)
+    return _kmeans_lite(_matrix(train["embedding"]), n_centroids, seed=seed)
 
 
 def _ivf_corpus_lists(corpus: DataFrame, cents: np.ndarray) -> DataFrame:
@@ -593,8 +571,7 @@ def _ivf_corpus_lists(corpus: DataFrame, cents: np.ndarray) -> DataFrame:
 
     def assign_corpus(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
+            m = _unit_rows(_matrix(pdf["embedding"]))
             yield pd.DataFrame(
                 {
                     "corpus_id": pdf["vec_id"].to_numpy(np.int64),
@@ -607,20 +584,27 @@ def _ivf_corpus_lists(corpus: DataFrame, cents: np.ndarray) -> DataFrame:
     )
 
 
-def _ivf_query_probes(
-    queries: DataFrame, cents: np.ndarray, n_probe: int
+def _ivf_candidates(
+    queries: DataFrame, cents: np.ndarray, n_probe: int, clists: DataFrame
 ) -> DataFrame:
+    """Distinct (query_id, corpus_id) pairs: each query meets the
+    inverted lists of its ``n_probe`` nearest centroids."""
+
     def assign_queries(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = m @ cents.T
+            sims = _unit_rows(_matrix(pdf["embedding"])) @ cents.T
             top = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
             ids = np.repeat(pdf["vec_id"].to_numpy(np.int64), n_probe)
             yield pd.DataFrame({"query_id": ids, "centroid": top.ravel()})
 
-    return queries.select("vec_id", "embedding").mapInPandas(
+    probes = queries.select("vec_id", "embedding").mapInPandas(
         assign_queries, schema="query_id long, centroid int"
+    )
+    return (
+        probes.join(clists, "centroid")
+        .filter(F.col("query_id") != F.col("corpus_id"))
+        .select("query_id", "corpus_id")
+        .distinct()
     )
 
 
@@ -689,14 +673,12 @@ def ivf_topk_from_index(
     meta = snap["metrics"]["ivf"]
     cents = np.asarray(meta["centroids"], dtype=np.float64)
     clists = table.read(spark).select("corpus_id", "centroid")
-    probes = _ivf_query_probes(queries, cents, n_probe)
-    return _ivf_rescore(probes, clists, queries, corpus, k)
+    return _rescore(_ivf_candidates(queries, cents, n_probe, clists), queries, corpus, k)
 
 
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
-    dim: int,
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
@@ -714,37 +696,4 @@ def ivf_topk(
     ``ivf_topk_from_index`` (identical results, no retraining)."""
     cents = _train_ivf_centroids(corpus, n_centroids, seed, train_sample)
     clists = _ivf_corpus_lists(corpus, cents)
-    probes = _ivf_query_probes(queries, cents, n_probe)
-    return _ivf_rescore(probes, clists, queries, corpus, k)
-
-
-def _ivf_rescore(
-    probes: DataFrame,
-    clists: DataFrame,
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-) -> DataFrame:
-    cand = (
-        probes.join(clists, "centroid")
-        .filter(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id")
-        .distinct()
-    )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = corpus.select(
-        F.col("vec_id").alias("corpus_id"), _as_double(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "corpus_id")
-        .withColumn("cos_sim", _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _rescore(_ivf_candidates(queries, cents, n_probe, clists), queries, corpus, k)

@@ -190,22 +190,18 @@ def fingerprints(
     ``token_hash='md5_60'`` uses the cross-engine md5-derived hash
     (functions.hashing) so DuckDB can reproduce the rolling hash
     value-for-value; xxhash64 stays the production default."""
-    from batch_geocode_spark.functions.hashing import hash60
+    from batch_geocode_spark.functions import hashing
 
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     toks = _tokens(F.col(text_col))
     # rolling hash: h = (h * 31 + hash(tok) mod p) mod p, p = 2^31-1
     p = (1 << 31) - 1
-    if token_hash == "xxhash64":
-        tok_h = F.xxhash64
-    elif token_hash == "md5_60":
-        tok_h = hash60
-    else:
-        raise ValueError(f"unknown token_hash {token_hash!r}")
     rolling = F.aggregate(
         toks,
         F.lit(0).cast("long"),
-        lambda acc, t: F.pmod(acc * 31 + F.pmod(tok_h(t), F.lit(p)), F.lit(p)),
+        lambda acc, t: F.pmod(
+            acc * 31 + F.pmod(hashing.token_hash(t, token_hash), F.lit(p)), F.lit(p)
+        ),
     )
     return docs.select(
         "doc_id",

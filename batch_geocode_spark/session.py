@@ -120,26 +120,17 @@ def get_spark(
         # insensitive). 5000 sits mid-plateau (2000-10000 all within
         # ~7%) and keeps batches ~17 MB — still ample amortization for
         # the pandas kernels.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_ARROW_BATCH", "5000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "5000")
         # same physics on the SCAN side: the vectorized parquet reader's
         # default 4096-row column batches hold ~14 MB of binary payload
         # each; 32 concurrent tasks churn the allocator. 1024-row scan
         # batches lift the 4M-image local[32] pipeline 142k → 216k
         # img/s and are neutral at 2-8 threads and on narrow tables
         # (batch overhead is JVM-side and amortized).
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_PARQUET_BATCH_ROWS", "1024"),
-        )
+        .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
         # local test files are small; the 128MB/4MB defaults would fuse
         # them into ~8 scan partitions and starve the other cores
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_MAX_PARTITION_BYTES", "16m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.session.timeZone", "UTC")
         # NOTE: empirically a 48g local heap triggers ~100s GC stalls on
@@ -162,11 +153,9 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
         # executor JVMs (local-cluster / real clusters) need the same GC
-        # choice — in local[*] mode this conf is simply unused
-        .config(
-            "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_EXECUTOR_JAVA_OPTS", "-XX:+UseParallelGC"),
-        )
+        # choice — in local[*] mode this conf is simply unused; like any
+        # conf here, ``extra_conf`` overrides it
+        .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # this sandbox's virtual disk is slow and does not scale with

@@ -153,16 +153,3 @@ def read_csv_with_encoding_sweep(
     else:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path), enc
-
-
-def parquet_num_rows(path: str) -> int:
-    """Exact row count of a parquet file or directory from FOOTER
-    METADATA only — zero Spark jobs, zero data pages read. The cheap
-    size hint for strategy selection (e.g.
-    ``cosine_near_dup_pairs(approx_rows=...)``): at 100 TB a
-    limit-probe count is still a scan job, footer reads are a few KB
-    per file."""
-    import pyarrow.dataset as ds
-
-    dataset = ds.dataset(path, format="parquet")
-    return sum(frag.metadata.num_rows for frag in dataset.get_fragments())

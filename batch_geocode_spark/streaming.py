@@ -461,8 +461,10 @@ def stream_ngram_decontamination(
 def eval_vector_index(eval_vecs: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """ONE-row static index for streaming semantic decontamination:
     array of (eval_id, unit-normalized vector) structs."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x))
+    from batch_geocode_spark.operators.similarity import _as_double, _norm
+
+    v = _as_double(F.col(vec_col))
+    nrm = _norm(v)
     unit = eval_vecs.select(
         F.col("vec_id").alias("eval_id"),
         F.transform(v, lambda x: x / nrm).alias("ev"),
@@ -485,15 +487,11 @@ def stream_semantic_decontamination(
     append-safe. Emits (corpus_id, n_eval_hits, max_sim) with the same
     values as the batch ``similarity.semantic_decontamination``
     (pytest-pinned parity; max_sim rounded 6dp both sides)."""
-    cv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cn = F.sqrt(F.aggregate(cv, F.lit(0.0), lambda s, x: s + x * x))
-    sims = F.transform(
-        F.col("eval_vecs"),
-        lambda e: F.aggregate(
-            F.zip_with(cv, e["ev"], lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-        )
-        / cn,
-    )
+    from batch_geocode_spark.operators.similarity import _as_double, _dot, _norm
+
+    cv = _as_double(F.col(vec_col))
+    cn = _norm(cv)
+    sims = F.transform(F.col("eval_vecs"), lambda e: _dot(cv, e["ev"]) / cn)
     hits = F.filter(sims, lambda s: s >= F.lit(threshold))
     return (
         vecs.crossJoin(F.broadcast(eval_index))

@@ -183,7 +183,7 @@ def test_brute_force_topk_is_exact(vectors):
 
 def test_ann_lsh_recall(vectors):
     exact = S.brute_force_topk(vectors, vectors, k=1).toPandas()
-    approx = S.ann_lsh_topk(vectors, vectors, dim=16, k=1, n_tables=8, bits=8).toPandas()
+    approx = S.ann_lsh_topk(vectors, vectors, k=1, n_tables=8, bits=8).toPandas()
     e = exact.set_index("query_id")["corpus_id"]
     a = approx.set_index("query_id")["corpus_id"]
     common = e.index.intersection(a.index)
@@ -192,9 +192,35 @@ def test_ann_lsh_recall(vectors):
     assert len(a) >= 0.9 * len(e)
 
 
-def test_cosine_near_dup_lsh_vs_exact(vectors):
+def test_hyperplane_signatures_take_dim_from_the_data(vectors):
+    """The hyperplanes are drawn at the width of the vectors (16 here):
+    the buckets equal a numpy reference with planes of that width."""
+    got = (
+        S.hyperplane_signatures(vectors, n_tables=3, bits=5, seed=7)
+        .toPandas()
+        .sort_values(["table", "vec_id"])
+        .reset_index(drop=True)
+    )
+    pdf = vectors.toPandas().sort_values("vec_id")
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+    planes = np.random.default_rng(7).standard_normal((3, 5, 16))
+    weights = 2 ** np.arange(5)
+    want = pd.DataFrame(
+        {
+            "vec_id": np.tile(pdf["vec_id"].to_numpy(), 3),
+            "table": np.repeat(np.arange(3), len(pdf)).astype(np.int32),
+            "bucket": np.concatenate(
+                [((mat @ planes[t].T > 0) * weights).sum(axis=1) for t in range(3)]
+            ),
+        }
+    )
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_cosine_near_dup_lsh_vs_exact(vectors, monkeypatch):
     exact = S.cosine_near_dup_pairs(vectors, threshold=0.99).toPandas()
-    lsh = S.cosine_near_dup_pairs(vectors, threshold=0.99, use_lsh=True, dim=16).toPandas()
+    monkeypatch.setattr(S, "MAX_EXACT_VECS", 10)  # 80 vectors: the LSH path
+    lsh = S.cosine_near_dup_pairs(vectors, threshold=0.99).toPandas()
     ep = {(r.id_a, r.id_b) for r in exact.itertuples()}
     lp = {(r.id_a, r.id_b) for r in lsh.itertuples()}
     assert ep, "fixture must contain near-dup pairs"
@@ -204,7 +230,7 @@ def test_cosine_near_dup_lsh_vs_exact(vectors):
 
 def test_ivf_topk_recall(vectors):
     exact = S.brute_force_topk(vectors, vectors, k=1).toPandas()
-    approx = S.ivf_topk(vectors, vectors, dim=16, k=1, n_centroids=8, n_probe=3).toPandas()
+    approx = S.ivf_topk(vectors, vectors, k=1, n_centroids=8, n_probe=3).toPandas()
     e = exact.set_index("query_id")["corpus_id"]
     a = approx.set_index("query_id")["corpus_id"]
     common = e.index.intersection(a.index)
@@ -239,18 +265,33 @@ def test_simhash_md5_60_token_hash(spark):
     assert all(int(v) >= 0 and int(v) < (1 << 60) for v in fps["simhash"])
 
 
-def test_cosine_near_dup_auto_is_scale_safe(vectors):
-    """Default strategy selection: above the row threshold the plan must
-    be the LSH bucket join (no full-corpus driver collect / matrix in a
-    closure); below it the exact matmul path (no join at all)."""
-    auto_lsh = S.cosine_near_dup_pairs(
-        vectors, threshold=0.99, dim=16, auto_lsh_min_rows=10
-    )
-    assert "Join" in auto_lsh._jdf.queryExecution().optimizedPlan().toString()
-    auto_exact = S.cosine_near_dup_pairs(
-        vectors, threshold=0.99, dim=16, auto_lsh_min_rows=10**6
-    )
+def test_unknown_token_hash_is_a_named_error(spark):
+    """Every operator with a token-hash option rejects an unknown kind
+    by name when the plan is built."""
+    from batch_geocode_spark.functions.hashing import token_hash
+    from batch_geocode_spark.operators import sampling as SA
+    from batch_geocode_spark.operators import text as T
+
+    d = spark.createDataFrame([(0, "alpha beta")], "doc_id long, text string")
+    for build in (
+        lambda: token_hash("text", "sha1"),
+        lambda: D.simhash_fingerprints(d, token_hash="sha1"),
+        lambda: T.fingerprints(d, token_hash="sha1"),
+        lambda: SA.hash_sample(d, "doc_id", 0.5, token_hash="sha1"),
+    ):
+        with pytest.raises(ValueError, match="unknown token hash 'sha1'"):
+            build()
+
+
+def test_cosine_near_dup_auto_is_scale_safe(vectors, monkeypatch):
+    """Strategy selection: above ``MAX_EXACT_VECS`` the plan must be the
+    LSH bucket join (no full-corpus driver matrix); at or below it the
+    exact matmul path (no join at all)."""
+    auto_exact = S.cosine_near_dup_pairs(vectors, threshold=0.99)
     assert "Join" not in auto_exact._jdf.queryExecution().optimizedPlan().toString()
+    monkeypatch.setattr(S, "MAX_EXACT_VECS", 10)
+    auto_lsh = S.cosine_near_dup_pairs(vectors, threshold=0.99)
+    assert "Join" in auto_lsh._jdf.queryExecution().optimizedPlan().toString()
     # the auto-LSH result stays faithful: subset of exact with recall>=0.9
     ep = {(r.id_a, r.id_b) for r in auto_exact.toPandas().itertuples()}
     lp = {(r.id_a, r.id_b) for r in auto_lsh.toPandas().itertuples()}
@@ -389,8 +430,8 @@ def test_ann_recall_on_driver_tables(spark, sf_dir):
         got = df[df["rank"] == 1].set_index("query_id")["corpus_id"]
         return np.mean([got.get(10_000 + q, -1) == q for q in pdf["vec_id"]])
 
-    lsh = S.ann_lsh_topk(queries, emb, dim=64, k=5, n_tables=8, bits=8).toPandas()
-    ivf = S.ivf_topk(queries, emb, dim=64, k=5, n_centroids=16, n_probe=4).toPandas()
+    lsh = S.ann_lsh_topk(queries, emb, k=5, n_tables=8, bits=8).toPandas()
+    ivf = S.ivf_topk(queries, emb, k=5, n_centroids=16, n_probe=4).toPandas()
     assert planted_recall(lsh) >= 0.9, "e03 params must retrieve cos>0.99 twins"
     assert planted_recall(ivf) >= 0.9, "e04 params must retrieve cos>0.99 twins"
 
@@ -407,28 +448,18 @@ def test_minhash_lsh_releases_shingle_cache(spark, docs):
     assert cm.cachedData().size() == before
 
 
-def test_cosine_near_dup_approx_rows_hint_is_jobless(spark, vectors):
-    """VERDICT r2 item 4: with a caller-supplied row-count hint,
-    strategy selection must launch ZERO Spark jobs (the limit-probe
-    fallback costs one scan job per call)."""
-    vectors.count()  # ensure fixture cache is materialized first
-
-    def n_jobs():
-        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
-
-    before = n_jobs()
-    hinted = S.cosine_near_dup_pairs(
-        vectors, threshold=0.99, dim=16, auto_lsh_min_rows=10, approx_rows=10**9
-    )
-    assert n_jobs() == before, "hinted construction must be jobless"
-    assert "Join" in hinted._jdf.queryExecution().optimizedPlan().toString()
-
-    probe = S.cosine_near_dup_pairs(
-        vectors, threshold=0.99, dim=16, auto_lsh_min_rows=10
-    )
-    assert n_jobs() > before, "probe fallback costs a job"
-    # both hints resolve to the same (LSH) strategy here
-    assert "Join" in probe._jdf.queryExecution().optimizedPlan().toString()
+def test_cosine_near_dup_chooses_and_collects_in_one_job(spark, vectors):
+    """The capped collect is both the size probe and the exact path's
+    matrix: choosing the path and collecting costs one Spark job."""
+    vectors.count()  # materialize the fixture cache outside the group
+    sc = spark.sparkContext
+    sc.setJobGroup("near-dup-choice", "cosine_near_dup_pairs construction")
+    try:
+        pairs = S.cosine_near_dup_pairs(vectors, threshold=0.99)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("near-dup-choice")) == 1
+    assert "Join" not in pairs._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_decontamination_flags(spark):
@@ -604,8 +635,8 @@ def test_ann_verification_summary_all_green(vectors):
     cosine recompute matches, ranks consistent, per-rank cosine bounded
     by brute force, recall over the bar."""
     queries = vectors.filter(F.col("vec_id") < 5)
-    ann = S.ann_lsh_topk(queries, vectors, dim=16, k=3, n_tables=8, bits=6)
-    cand = S.lsh_candidates(queries, vectors, dim=16, n_tables=8, bits=6)
+    ann = S.ann_lsh_topk(queries, vectors, k=3, n_tables=8, bits=6)
+    cand = S.lsh_candidates(queries, vectors, n_tables=8, bits=6)
     got = S.ann_verification_summary(
         ann, queries, vectors, k=3, min_recall=0.3, candidates=cand
     ).toPandas()
@@ -651,7 +682,7 @@ def test_ivf_index_build_then_query_matches_oneshot(spark, tmp_path_factory):
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     want = (
-        S.ivf_topk(queries, emb, dim=64, k=5, n_centroids=16, n_probe=4, seed=42)
+        S.ivf_topk(queries, emb, k=5, n_centroids=16, n_probe=4, seed=42)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     assert got.equals(want)

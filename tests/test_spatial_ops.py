@@ -142,6 +142,56 @@ def test_knn_spatial_exact_within_ring(spark, geo):
             )
 
 
+def test_knn_spatial_hot_cell_skew(spark):
+    """One res-6 cell holds about 10% of the points (a hot metro inside
+    a uniform field). The ring join must still return the brute-force
+    top-k: every query's k nearest points lie in its 3x3 ring (asserted
+    below), so the equality is exact, ties broken by (dist, nbr_id)."""
+    from batch_geocode_spark.functions.cells import np_cell_ring_batch
+
+    res, k = 6, 5
+    rng = np.random.default_rng(23)
+    field = np.column_stack([rng.uniform(0, 30, 900), rng.uniform(-10, 30, 900)])
+    hot = np.column_stack([rng.uniform(15.1, 15.4, 90), rng.uniform(8.6, 8.9, 90)])
+    pts = np.vstack([field, hot])
+    cells = np_cell_encode(pts[:, 0], pts[:, 1], res)
+    hot_cell = np_cell_encode(15.2, 8.7, res)
+    assert 0.09 <= np.mean(cells == hot_cell) <= 0.12
+    assert np.unique(cells, return_counts=True)[1].max() == np.sum(cells == hot_cell)
+    qs = np.vstack(
+        [
+            np.column_stack([rng.uniform(15.1, 15.4, 20), rng.uniform(8.6, 8.9, 20)]),
+            np.column_stack([rng.uniform(5, 25, 40), rng.uniform(0, 20, 40)]),
+        ]
+    )
+    points = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(pts)],
+        "gaz_id long, lat double, lng double",
+    )
+    queries = spark.createDataFrame(
+        [(1000 + i, float(a), float(b)) for i, (a, b) in enumerate(qs)],
+        "image_id long, best_lat double, best_long double",
+    )
+    got = (
+        knn.knn_spatial(queries, points, k=k, res=res)
+        .toPandas()
+        .sort_values(["query_id", "knn_rank"])
+        .reset_index(drop=True)
+    )
+    rings = np_cell_ring_batch(np_cell_encode(qs[:, 0], qs[:, 1], res), res)
+    want = []
+    for i, (lat, lng) in enumerate(qs):
+        d = np_haversine_km(pts[:, 0], pts[:, 1], lat, lng)
+        top = np.lexsort((np.arange(len(pts)), d))[:k]
+        assert np.isin(cells[top], rings[i]).all(), "k-th neighbour outside the ring"
+        want += [(1000 + i, j, r + 1, d[j]) for r, j in enumerate(top)]
+    want = pd.DataFrame(want, columns=["query_id", "nbr_id", "knn_rank", "dist_km"])
+    assert got[["query_id", "nbr_id", "knn_rank"]].astype(np.int64).equals(
+        want[["query_id", "nbr_id", "knn_rank"]].astype(np.int64)
+    )
+    np.testing.assert_allclose(got["dist_km"], want["dist_km"], rtol=0, atol=1e-9)
+
+
 def test_match_rate_by_source(geo):
     images, _, vetted, _ = geo
     mr = rollups.match_rate_by_source(images, vetted).toPandas()
