@@ -1587,8 +1587,8 @@ ORACLES["g18_spatial_clusters"] = GEO_CTES.replace(
 def g19_cluster_hulls(spark, sf_dir):
     """Per-cluster convex-hull outlines (``cluster.cluster_hulls``):
     the geometry to draw next to g18's centroid. Spark side runs
-    Andrew's monotone chain per cluster in ``applyInPandas`` (per-group
-    state = the cluster's gazetteer-scale sites); the oracle derives
+    Andrew's monotone chain per cluster on the driver, over the
+    gazetteer-scale site table collected once; the oracle derives
     the same vertex set with an O(n³) half-plane predicate (a point is
     on the hull iff some other point sees every point on one side) and
     reproduces the exact CCW ring enumeration — lower chain west→east,

@@ -165,33 +165,6 @@ def np_cell_decode(cell):
     return res.astype(np.int64), x, y
 
 
-def np_cell_bounds(cell):
-    """cell id → (w, s, e, n) degree bounds arrays."""
-    res, x, y = np_cell_decode(cell)
-    n = np.power(2.0, res)
-    w = x / n * 360.0 - 180.0
-    e = (x + 1) / n * 360.0 - 180.0
-    s = y / n * 180.0 - 90.0
-    nn = (y + 1) / n * 180.0 - 90.0
-    return w, s, e, nn
-
-
-def np_cell_parent(cell, parent_res: int):
-    res, x, y = np_cell_decode(cell)
-    shift = np.power(2, (res - parent_res)).astype(np.int64)
-    return parent_res * _RES_SHIFT + (y // shift) * _Y_SHIFT + (x // shift)
-
-
-def np_cell_children(cell_id: int):
-    """The 4 children one resolution finer."""
-    res, x, y = np_cell_decode(np.asarray([cell_id]))
-    r, x0, y0 = int(res[0]) + 1, int(x[0]) * 2, int(y[0]) * 2
-    return np.asarray(
-        [r * _RES_SHIFT + (y0 + dy) * _Y_SHIFT + (x0 + dx) for dy in (0, 1) for dx in (0, 1)],
-        dtype=np.int64,
-    )
-
-
 def np_cell_neighbors(cell_id: int):
     """8-neighborhood at the same resolution (lng wraps, lat clamps)."""
     res, x, y = np_cell_decode(np.asarray([cell_id]))

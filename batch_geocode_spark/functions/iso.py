@@ -44,9 +44,3 @@ def invalid_iso2(df: DataFrame, iso_col: str = "iso2") -> DataFrame:
             "left_anti",
         )
     )
-
-
-def validate_iso2(df: DataFrame, iso_col: str = "iso2") -> tuple[bool, list[str]]:
-    """(all_valid, offending_values) — driver-side convenience wrapper."""
-    bad = [r["iso2_value"] for r in invalid_iso2(df, iso_col).collect()]
-    return (len(bad) == 0, sorted(bad))

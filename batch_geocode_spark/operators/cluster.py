@@ -17,15 +17,19 @@ Scale design (the part that matters at 100 TB):
    the pair graph from points² to sites². The map-side-combined groupBy
    is the only full-data pass; everything after runs on the small site
    table.
-2. **The site table clusters on the driver.** It is gazetteer-scale by
-   construction (point 1), the same size class as the gazetteer that
-   ``geocode.build_candidates`` already broadcasts, so one capped
-   collect (``MAX_SITES``) brings it to the driver and one vectorized
-   numpy kernel runs DBSCAN there. At this size a distributed plan
-   (ring join, checkpoints, a connected-components loop) costs Spark
-   jobs and JIT-compiled plan code, not compute; the driver path runs
-   only the jobs of that one collect. A table over the cap raises an
-   actionable error instead of running the driver out of memory.
+2. **The site table clusters, summarises and outlines on the driver.**
+   It is gazetteer-scale by construction (point 1), the same size class
+   as the gazetteer that ``geocode.build_candidates`` already
+   broadcasts, so one capped collect (``MAX_SITES``) brings it to the
+   driver and one vectorized numpy kernel runs DBSCAN there;
+   ``cluster_summary`` and ``cluster_hulls`` each collect the (local)
+   assignment once more and compute in numpy and plain Python. At this
+   size a distributed plan (ring join, checkpoints, a
+   connected-components loop, a gap search in array expressions, a
+   pandas UDF per cluster) costs Spark jobs and JIT-compiled plan code,
+   not compute; the driver path runs only the jobs of those collects.
+   A table over the cap raises an actionable error instead of running
+   the driver out of memory.
 3. **Candidate pairs come from the cell ring** (same pattern as
    ``knn.knn_spatial``): each site meets only sites in its cell + 8
    neighbors at ``res``, found by ``np.searchsorted`` over the
@@ -52,11 +56,13 @@ Semantics (weighted DBSCAN, deterministic):
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import BooleanType, DoubleType, LongType, StructField, StructType
 
 from batch_geocode_spark.functions.cells import np_cell_encode, np_cell_ring_batch
 from batch_geocode_spark.functions.geo import np_haversine_km
@@ -114,9 +120,8 @@ def cluster_sites(sites: DataFrame, eps_km: float, min_pts: int, res: int) -> Da
 
     The site table is collected once (at most ``MAX_SITES`` rows, else
     ``ValueError``) and clustered by :func:`_dbscan` on the driver; the
-    result is a local relation, so downstream branches
-    (``cluster_summary`` reads it three times) never recompute the
-    upstream."""
+    result is a local relation, so ``cluster_summary`` and
+    ``cluster_hulls`` collect it without recomputing the upstream."""
     if res < 2:
         raise ValueError("res must be >= 2 (ring cells collide below that)")
     sel = sites.select("site_id", "lat", "lng", "w")
@@ -246,39 +251,31 @@ def cluster_hulls(assigned: DataFrame) -> DataFrame:
     vertices only (collinear edge-interior points are dropped; exact
     ties are measure-zero on float coordinates).
 
-    Scale shape: Andrew's monotone chain runs per cluster inside
-    ``applyInPandas`` — per-group state is the cluster's SITES
-    (gazetteer-scale, thousands at most, never the point corpus), so
-    the kernel is O(n log n) per group and the only shuffle is the
-    groupBy(cluster) of site-width rows."""
-    import pandas as pd
-
-    def hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        cluster = pdf["cluster"].iloc[0]
-        ring = hull_ring(list(zip(pdf["lng"].tolist(), pdf["lat"].tolist())))
-        return pd.DataFrame(
-            {
-                "cluster": cluster,
-                "hull_idx": range(len(ring)),
-                "lat": [p[1] for p in ring],
-                "lng": [p[0] for p in ring],
-                "n_vertices": len(ring),
-            }
-        )
-
+    Eager, like ``cluster_sites``: the assignment is collected once
+    (:func:`_collect_sites`) and :func:`hull_ring` runs per cluster on
+    the driver, O(n log n) in the cluster's sites; the rings come back
+    as a local relation."""
+    pdf = _collect_sites(assigned)
+    lat, lng = pdf["lat"].tolist(), pdf["lng"].tolist()
+    rows = []
+    for cluster, idx in pdf.groupby("cluster").indices.items():
+        ring = hull_ring([(lng[i], lat[i]) for i in idx.tolist()])
+        rows += [(cluster, i, y, x, len(ring)) for i, (x, y) in enumerate(ring)]
+    out = pd.DataFrame(rows, columns=["cluster", "hull_idx", "lat", "lng", "n_vertices"])
+    out = out.astype({"hull_idx": "int32", "lat": float, "lng": float, "n_vertices": "int32"})
     ctype = assigned.schema["cluster"].dataType.simpleString()
-    return assigned.groupBy("cluster").applyInPandas(
-        hull,
-        schema=f"cluster {ctype}, hull_idx int, lat double, lng double, n_vertices int",
+    return assigned.sparkSession.createDataFrame(
+        out, f"cluster {ctype}, hull_idx int, lat double, lng double, n_vertices int"
     )
 
 
 def cluster_summary(assigned: DataFrame) -> DataFrame:
-    """Per-cluster rollup: site/point counts and the point-weighted
-    centroid. Centroid sums accumulate coordinates as exact decimals
-    (coordinate rounded to 8 dp, ~1 mm) so the result is independent of
-    summation order — the invariant every cross-engine oracle in this
-    repo relies on.
+    """Per-cluster rollup (cluster, n_sites, n_core_sites, n_points,
+    centroid_lat, centroid_lng): site/point counts and the
+    point-weighted centroid. Centroid sums accumulate coordinates as
+    exact decimals (coordinate rounded to 8 dp, ~1 mm) so the result is
+    independent of summation order — the invariant every cross-engine
+    oracle in this repo relies on.
 
     ``centroid_lng`` is antimeridian-aware via largest-gap rotation
     (the exact method for circular data, no transcendentals — so the
@@ -290,72 +287,111 @@ def cluster_summary(assigned: DataFrame) -> DataFrame:
     wrap-around gap (every cluster that does not span ±180) this is
     ALGEBRAICALLY the plain weighted mean; a wrap-spanning pair like
     {+179.9, -179.9} lands at ±180 instead of the misleading ~0 a
-    plain mean gives.
+    plain mean gives. Gap candidates are the internal gaps between
+    sorted distinct longitudes (origin = the eastern edge) and the wrap
+    gap (origin = the minimum); the largest gap wins, ties go to the
+    smaller origin.
 
-    The gap search runs per cluster over DISTINCT longitudes — sites
-    are gazetteer-scale, so the window is tiny; the only full-site
-    shuffles are keyed by ``cluster``, same as the rollup itself.
-    """
-    # One collect_set aggregate replaces the previous three-branch shape
-    # (distinct → lag-window for internal gaps ∪ min/max agg for the
-    # wrap gap → row_number pick): per cluster the DISTINCT sorted
-    # longitudes are array-scale (sites are gazetteer-scale by this
-    # operator's design), so the gap search runs as array expressions —
-    # r7, removes ~3 exchanges + 2 windows from the summary plan.
-    # Selection semantics identical: candidates = consecutive internal
-    # gaps (origin = the eastern edge) plus the wrap gap (origin = min
-    # lng), winner by (gap DESC, origin ASC) via array_max over
-    # (gap, -origin, origin) structs; decimal(14,8) arithmetic as
-    # before, so the exact-compare invariant is unchanged.
-    arr = assigned.groupBy("cluster").agg(
-        F.sort_array(F.collect_set("lng")).alias("ls")
+    Eager, like ``cluster_sites``: the assignment is collected once
+    (:func:`_collect_sites`) and summarised on the driver in Spark SQL's
+    arithmetic, bit for bit: coordinates cast to ``decimal(14,8)`` and
+    centroids ``round(…, 6)``-ed as Spark does (:func:`_half_up`),
+    weighted sums as Python ints of 1e-8 units (exact at any point
+    count), then the sum as a double divided by the point count. The
+    rows come back as a local relation."""
+    spark = assigned.sparkSession
+    schema = StructType(
+        [
+            StructField("cluster", assigned.schema["cluster"].dataType),
+            StructField("n_sites", LongType(), False),
+            StructField("n_core_sites", LongType()),
+            StructField("n_points", LongType()),
+            StructField("centroid_lat", DoubleType()),
+            StructField("centroid_lng", DoubleType()),
+        ]
     )
-    ls = F.col("ls")
-    n_ls = F.size(ls)
-    dec = lambda c: c.cast("decimal(14,8)")  # noqa: E731
-    idx = F.when(n_ls >= 2, F.sequence(F.lit(2), n_ls)).otherwise(
-        F.array().cast("array<int>")
-    )
-    internal = F.transform(
-        idx,
-        lambda i: F.struct(
-            (dec(F.element_at(ls, i)) - dec(F.element_at(ls, i - F.lit(1).cast("int")))).alias("gap"),
-            (-dec(F.element_at(ls, i))).alias("neg_origin"),
-            F.element_at(ls, i).alias("origin"),
-        ),
-    )
-    wrap = F.struct(
-        (dec(F.element_at(ls, 1)) - dec(F.element_at(ls, -1)) + F.lit(360)).alias("gap"),
-        (-dec(F.element_at(ls, 1))).alias("neg_origin"),
-        F.element_at(ls, 1).alias("origin"),
-    )
-    best = F.array_max(F.concat(internal, F.array(wrap)))
-    origins = arr.select("cluster", best["origin"].alias("origin"))
+    pdf = _collect_sites(assigned)
+    if pdf.empty:
+        return spark.createDataFrame([], schema)
+    keys, code = np.unique(pdf["cluster"].to_numpy(), return_inverse=True)
+    lng = pdf["lng"].to_numpy(np.float64)
+    # sites sorted by (cluster, lng): each cluster a run, its
+    # longitudes ascending
+    order = np.lexsort((lng, code))
+    code, lng = code[order], lng[order]
+    lat = pdf["lat"].to_numpy(np.float64)[order]
+    w = pdf["w"].to_numpy(np.int64)[order]
+    core = pdf["is_core"].to_numpy(bool)[order]
+    lat8, lng8 = _half_up(spark, lat, 8), _half_up(spark, lng, 8)
+    starts = np.flatnonzero(np.r_[True, code[1:] != code[:-1]])
 
-    def dec_wsum(col: F.Column) -> F.Column:
-        return F.sum(col * F.col("w").cast("decimal(20,0)")).cast("double")
+    # one gap candidate per distinct (cluster, lng): the gap up from the
+    # previous distinct longitude, or, for a cluster's smallest, the
+    # wrap gap from its largest
+    d = np.flatnonzero(np.r_[True, (code[1:] != code[:-1]) | (lng[1:] != lng[:-1])])
+    dcode, d8, dlng = code[d], lng8[d], lng[d]
+    first = np.r_[True, dcode[1:] != dcode[:-1]]
+    last = np.r_[first[1:], True]
+    gap = np.r_[0, np.diff(d8)]
+    gap[first] = d8[first] - d8[last] + 360 * 10**8
+    # the winner is the maximum of (gap, -origin as decimal, origin):
+    # the last candidate of each cluster in that order
+    rank = np.lexsort((dlng, -d8, gap, dcode))
+    win = rank[np.r_[dcode[rank][1:] != dcode[rank][:-1], True]]
+    origin, origin8 = dlng[win][code], d8[win][code]
+    rot8 = lng8 - origin8 + np.where(lng8 < origin8, 360 * 10**8, 0)
 
-    lng_dec = F.col("lng").cast("decimal(14,8)")
-    origin_dec = F.col("origin").cast("decimal(14,8)")
-    rotated = F.when(lng_dec >= origin_dec, lng_dec - origin_dec).otherwise(
-        lng_dec - origin_dec + F.lit(360)
+    n_points = np.add.reduceat(w, starts)
+    wo = w.astype(object)
+    lat_sum = np.add.reduceat(lat8.astype(object) * wo, starts)
+    rot_sum = np.add.reduceat(rot8.astype(object) * wo, starts)
+
+    def mean(sums8):
+        # decimal → double is correctly rounded, as int / int is in Python
+        return np.array([s / 10**8 for s in sums8]) / n_points
+
+    raw_lng = mean(rot_sum) + origin[starts]
+    raw_lng = np.where(raw_lng > 180, raw_lng - 360, raw_lng)
+    out = pd.DataFrame(
+        {
+            "cluster": keys,
+            "n_sites": np.diff(np.r_[starts, len(code)]),
+            "n_core_sites": np.add.reduceat(core.astype(np.int64), starts),
+            "n_points": n_points,
+            "centroid_lat": _half_up(spark, mean(lat_sum), 6) / 1e6,
+            "centroid_lng": _half_up(spark, raw_lng, 6) / 1e6,
+        }
     )
-    raw_lng = (
-        dec_wsum(rotated) / F.sum("w") + F.first("origin")
+    return spark.createDataFrame(out, schema)
+
+
+def _collect_sites(assigned: DataFrame) -> pd.DataFrame:
+    """The cluster assignment (``cluster_sites``' output) on the driver:
+    the one capped collect ``cluster_summary`` and ``cluster_hulls``
+    run. It is no larger than the site table ``cluster_sites``
+    collected, so the cap only trips on a foreign frame."""
+    return collect_capped(
+        assigned.select("cluster", "lat", "lng", "w", "is_core"),
+        MAX_SITES,
+        "the cluster assignment",
+        "round the coordinates before clustering so that nearby points "
+        "share a site",
     )
-    norm_lng = F.when(raw_lng > 180, raw_lng - 360).otherwise(raw_lng)
-    return (
-        assigned.join(F.broadcast(origins), "cluster")
-        .groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n_sites"),
-            F.sum(F.when(F.col("is_core"), 1).otherwise(0)).alias(
-                "n_core_sites"
-            ),
-            F.sum("w").alias("n_points"),
-            F.round(
-                dec_wsum(F.col("lat").cast("decimal(14,8)")) / F.sum("w"), 6
-            ).alias("centroid_lat"),
-            F.round(norm_lng, 6).alias("centroid_lng"),
-        )
-    )
+
+
+def _half_up(spark, x: np.ndarray, places: int) -> np.ndarray:
+    """Each double rounded the way Spark SQL rounds it to ``places``
+    decimals (the ``decimal(p, places)`` cast, ``round(x, places)``),
+    as an int64 count of 10**-places units: HALF_UP of
+    ``java.lang.Double.toString(x)``. The strings come from the
+    session's JVM, because Spark rounds the JVM's string and JDK 17's
+    is not always the shortest round-trip string Python's ``repr``
+    gives. Each distinct value is formatted and parsed once."""
+    uniq, inv = np.unique(x, return_inverse=True)
+    jvm = spark._jvm
+    arr = spark.sparkContext._gateway.new_array(jvm.double, len(uniq))
+    jvm.java.nio.ByteBuffer.wrap(bytearray(uniq.astype(">f8").tobytes())).asDoubleBuffer().get(arr)
+    strings = jvm.java.util.Arrays.toString(arr)[1:-1].split(", ")
+    unit = Decimal(1).scaleb(-places)
+    units = [int(Decimal(s).quantize(unit, ROUND_HALF_UP).scaleb(places)) for s in strings]
+    return np.array(units, np.int64)[inv]

@@ -8,12 +8,12 @@ casting; the STRtree role is played by a geocell-cover prefilter:
 
     polygons --driver numpy--> (cell, admin_id) cover at res R
     points   --cell_encode--> cell at res R
-    points ⋈_broadcast cover on cell        -- candidate pairs only
-    candidates ⋈_broadcast polygons(rings)  -- attach geometry
+    points ⋈_broadcast cover on cell        -- candidate pairs + admin attrs
     mapInPandas numpy ray-cast              -- exact test per batch
 
-At 10^12 points the big side never shuffles: both joins broadcast the
-(small) admin side; the exact test is Arrow-batched numpy.
+At 10^12 points the big side never shuffles: the one join broadcasts
+the (small) admin side; the exact test is Arrow-batched numpy against
+ring arrays shipped as a broadcast variable.
 """
 
 from __future__ import annotations
@@ -87,8 +87,8 @@ def pip_join(
     and never duplicate ring structs through Arrow.
     """
     spark = points.sparkSession
-    # ONE driver collect feeds cover, attributes AND rings; the polygon
-    # side is driver-sized by contract, so all three derivations are local.
+    # ONE driver collect feeds the cover, its attributes AND the rings;
+    # the polygon side is driver-sized by contract, so all are local.
     polys = collect_capped(
         polygons.select(
             "admin_id", "iso2", "admin_level", "name", "bb_w", "bb_s", "bb_e", "bb_n", "rings"
@@ -103,18 +103,15 @@ def pip_join(
         cc = np_polyfill_bbox(row["bb_w"], row["bb_s"], row["bb_e"], row["bb_n"], res)
         ids.append(np.full(len(cc), row["admin_id"], dtype=np.int64))
         cells_out.append(cc)
+    # the cover carries the admin attributes: one broadcast table
     cover = spark.createDataFrame(
         pd.DataFrame(
             {
                 "admin_id": np.concatenate(ids) if ids else np.asarray([], dtype=np.int64),
                 "cell": np.concatenate(cells_out) if ids else np.asarray([], dtype=np.int64),
             }
-        ),
-        schema="admin_id long, cell long",
-    )
-    attrs = spark.createDataFrame(
-        polys[["admin_id", "iso2", "admin_level", "name"]],
-        schema="admin_id long, iso2 string, admin_level int, name string",
+        ).merge(polys[["admin_id", "iso2", "admin_level", "name"]], on="admin_id"),
+        schema="admin_id long, cell long, iso2 string, admin_level int, name string",
     )
     pts = points.select(
         F.col(id_col).alias("pt_id"),
@@ -122,9 +119,7 @@ def pip_join(
         F.col(lng_col).alias("pt_lng"),
         cell_encode(F.col(lat_col), F.col(lng_col), res).alias("cell"),
     )
-    cand = pts.join(F.broadcast(cover), "cell", "inner").join(
-        F.broadcast(attrs), "admin_id", "inner"
-    )
+    cand = pts.join(F.broadcast(cover), "cell", "inner")
 
     # geometry → numpy edge arrays once, on the driver; shipped as an
     # executor broadcast variable (sent once per executor), not UDF

@@ -215,20 +215,6 @@ def read_density(spark: SparkSession, table: SnapshotTable) -> DataFrame:
     return table.read(spark).groupBy("cell").agg(F.sum("n_images").alias("n_images"))
 
 
-def read_density_pyramid(
-    spark: SparkSession, table: SnapshotTable, levels: tuple[int, ...] = (9, 6, 3)
-) -> DataFrame:
-    """Current multi-resolution pyramid view over streamed density
-    deltas: fold the per-batch deltas to per-cell totals (read_density),
-    then chain rollups to the coarser levels — the serving-layer view
-    that stays correct under continuous ingestion because the deltas
-    commute with both the sum and the parent-id arithmetic.
-    ``levels[0]`` must be the resolution the stream was ingested at."""
-    from batch_geocode_spark.operators.rollups import tile_pyramid
-
-    return tile_pyramid(read_density(spark, table), levels=levels)
-
-
 def stream_geocode_to_pyramid(
     spark: SparkSession,
     input_dir: str,

@@ -288,7 +288,7 @@ itself is scale-clean.
             )
             appendix_md += f"""
 **Round 6 — the direct bandwidth measurement that closes this file**
-(`scripts/membw_probe.py`, banked `BENCH/membw_probe_8to32.json`): a
+(banked `BENCH/membw_probe_8to32.json`; the probe script is retired): a
 STREAM-style numpy triad (c = a + s·b over 64 MiB arrays, far beyond
 LLC) run as T independent processes, every figure stamped with
 loadmeter ext-cores (all windows provably quiet):

@@ -2,11 +2,18 @@
 exercising every role (core / border / noise), singleton-core clusters,
 the antimeridian ring wrap and the job count; a seeded adversarial site
 set (hot cell, deep chain, duplicates, antimeridian pair) checked
-against a brute-force point DBSCAN; the empty-input and guard paths."""
+against a brute-force point DBSCAN; the empty-input and guard paths.
+The driver-side ``cluster_summary`` and ``cluster_hulls`` are checked
+bit for bit against the Spark plans they replaced, kept here as
+references."""
+
+import itertools
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from batch_geocode_spark.functions.cells import np_cell_encode
 from batch_geocode_spark.functions.geo import EARTH_RADIUS_KM, np_haversine_km
@@ -94,17 +101,230 @@ def test_summary_antimeridian_centroid(assigned, spark):
     assert summ.loc[600, "centroid_lng"] == -30.0
 
 
+def _spark_cluster_summary(assigned):
+    """The Spark plan ``cluster_summary`` ran before it moved to the
+    driver: a collect_set gap search in array expressions, a broadcast
+    join and decimal sums — the bit-equality reference."""
+    arr = assigned.groupBy("cluster").agg(F.sort_array(F.collect_set("lng")).alias("ls"))
+    ls = F.col("ls")
+    n_ls = F.size(ls)
+    dec = lambda c: c.cast("decimal(14,8)")  # noqa: E731
+    idx = F.when(n_ls >= 2, F.sequence(F.lit(2), n_ls)).otherwise(
+        F.array().cast("array<int>")
+    )
+    internal = F.transform(
+        idx,
+        lambda i: F.struct(
+            (dec(F.element_at(ls, i)) - dec(F.element_at(ls, i - F.lit(1).cast("int")))).alias("gap"),
+            (-dec(F.element_at(ls, i))).alias("neg_origin"),
+            F.element_at(ls, i).alias("origin"),
+        ),
+    )
+    wrap = F.struct(
+        (dec(F.element_at(ls, 1)) - dec(F.element_at(ls, -1)) + F.lit(360)).alias("gap"),
+        (-dec(F.element_at(ls, 1))).alias("neg_origin"),
+        F.element_at(ls, 1).alias("origin"),
+    )
+    best = F.array_max(F.concat(internal, F.array(wrap)))
+    origins = arr.select("cluster", best["origin"].alias("origin"))
+
+    def dec_wsum(col):
+        return F.sum(col * F.col("w").cast("decimal(20,0)")).cast("double")
+
+    lng_dec = F.col("lng").cast("decimal(14,8)")
+    origin_dec = F.col("origin").cast("decimal(14,8)")
+    rotated = F.when(lng_dec >= origin_dec, lng_dec - origin_dec).otherwise(
+        lng_dec - origin_dec + F.lit(360)
+    )
+    raw_lng = dec_wsum(rotated) / F.sum("w") + F.first("origin")
+    norm_lng = F.when(raw_lng > 180, raw_lng - 360).otherwise(raw_lng)
+    return (
+        assigned.join(F.broadcast(origins), "cluster")
+        .groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).alias("n_sites"),
+            F.sum(F.when(F.col("is_core"), 1).otherwise(0)).alias("n_core_sites"),
+            F.sum("w").alias("n_points"),
+            F.round(dec_wsum(F.col("lat").cast("decimal(14,8)")) / F.sum("w"), 6).alias(
+                "centroid_lat"
+            ),
+            F.round(norm_lng, 6).alias("centroid_lng"),
+        )
+    )
+
+
+def _spark_cluster_hulls(assigned):
+    """The ``applyInPandas`` plan ``cluster_hulls`` ran before it moved
+    to the driver — the row-equality reference."""
+
+    def hull(pdf):
+        ring = C.hull_ring(list(zip(pdf["lng"].tolist(), pdf["lat"].tolist())))
+        return pd.DataFrame(
+            {
+                "cluster": pdf["cluster"].iloc[0],
+                "hull_idx": range(len(ring)),
+                "lat": [p[1] for p in ring],
+                "lng": [p[0] for p in ring],
+                "n_vertices": len(ring),
+            }
+        )
+
+    ctype = assigned.schema["cluster"].dataType.simpleString()
+    return assigned.groupBy("cluster").applyInPandas(
+        hull, schema=f"cluster {ctype}, hull_idx int, lat double, lng double, n_vertices int"
+    )
+
+
+def _assert_same_rows(got, want, keys):
+    assert got.schema == want.schema
+    a = got.toPandas().sort_values(keys).reset_index(drop=True)
+    b = want.toPandas().sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted with a job group of its
+    own (a group's job ids accumulate over every use of its name)."""
+    sc = spark.sparkContext
+    group = f"cluster-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "cluster job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _tie(x: float, places: int) -> float:
+    """``x`` cut to ``places`` decimals with a 5 appended: an exact tie
+    one decimal past ``places`` in its decimal string."""
+    d = Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP)
+    return float(str(d) + "5")
+
+
+def _summary_sweep(seed: int = 0) -> pd.DataFrame:
+    """(cluster, lat, lng, w, is_core) clusters for the bit-equality
+    sweep. Coordinates are full precision, rounded to 0-8 dp, or exact
+    ties at the 9th decimal (the ``decimal(14,8)`` cast) and the 7th
+    (``round(…, 6)`` of a singleton's centroid), mixed within a
+    cluster; some clusters span the antimeridian; weights reach 1e11.
+    Hand-made clusters add tied largest gaps and distinct longitudes
+    that share one 8-dp decimal (a zero gap)."""
+    rng = np.random.default_rng(seed)
+    rows = []
+
+    def coord(x):
+        kind = rng.integers(0, 12)
+        if kind == 9:
+            return x
+        if kind < 9:
+            return round(x, int(kind))
+        return _tie(x, 8 if kind == 10 else 6)
+
+    for cid in range(60):
+        n = int(rng.choice([1, 2, 3, 8, 40]))
+        lat0 = rng.uniform(-80, 80)
+        lng0 = 180.0 if cid % 5 == 0 else rng.uniform(-180, 180)  # wrap-spanning
+        spread = rng.choice([1e-7, 0.01, 1.0, 20.0])
+        wmax = int(rng.choice([10, 10**6, 10**11]))
+        for _ in range(n):
+            lat = float(np.clip(lat0 + rng.normal(0, spread), -89.9, 89.9))
+            lng = float((lng0 + rng.normal(0, spread) + 180) % 360 - 180)
+            rows.append(
+                (1000 + cid, coord(lat), coord(lng), int(rng.integers(1, wmax + 1)),
+                 bool(rng.integers(0, 2)))
+            )
+    hand = {
+        1: [-170.0, -10.0, 10.0, 170.0],  # internal gaps tie at 160
+        2: [-180.0, -60.0, 60.0],  # all three gaps tie at 120
+        3: [10.000000001, 10.000000002, 10.0000000049, 20.5],  # one decimal
+        4: [179.9, -179.9],  # the antimeridian pair
+    }
+    for cid, lngs in hand.items():
+        rows += [(cid, 0.5 * i, x, i + 1, i % 2 == 0) for i, x in enumerate(lngs)]
+    # one coordinate under large odd weights: the exact mean is a tie at
+    # the 7th decimal, which a float64 weighted sum misses
+    rows += [(5, 0.1234565, 10.0000005, w, True) for w in (10**11 + 7, 10**11 + 13, 3 * 10**10 + 1)]
+    return pd.DataFrame(rows, columns=["cluster", "lat", "lng", "w", "is_core"])
+
+
+_SITES_SCHEMA = "cluster long, lat double, lng double, w long, is_core boolean"
+
+
+@pytest.mark.parametrize("case", ["sweep", "string_ids", "single_site", "empty"])
+def test_summary_matches_the_spark_plan(spark, case):
+    """Bit-equal to the replaced Spark plan, schema included."""
+    pdf = _summary_sweep(seed=0)
+    schema = _SITES_SCHEMA
+    if case == "string_ids":
+        pdf = _summary_sweep(seed=1).assign(cluster=lambda d: d["cluster"].map("img{:09d}".format))
+        schema = schema.replace("cluster long", "cluster string")
+    elif case == "single_site":
+        pdf = pdf.iloc[[7]]
+    elif case == "empty":
+        pdf = pdf.iloc[:0]
+    sdf = spark.createDataFrame(pdf, schema)
+    _assert_same_rows(C.cluster_summary(sdf), _spark_cluster_summary(sdf), ["cluster"])
+
+
+def test_summary_sweep_covers_its_cases():
+    """The sweep holds what its docstring claims."""
+    pdf = _summary_sweep(seed=0)
+    strings = pdf["lat"].map(repr).tolist() + pdf["lng"].map(repr).tolist()
+    decimals = {len(s.split(".")[1]) for s in strings}
+    assert set(range(1, 10)) <= decimals and max(decimals) >= 14
+    assert sum(s.endswith("5") and len(s.split(".")[1]) == 9 for s in strings) >= 20
+    assert sum(s.endswith("5") and len(s.split(".")[1]) == 7 for s in strings) >= 20
+    assert pdf["w"].max() > 10**10
+    spans = pdf.groupby("cluster")["lng"].agg(lambda x: x.max() - x.min())
+    assert (spans > 300).sum() >= 5  # wrap-spanning clusters
+    assert (pdf.groupby("cluster").size() == 1).sum() >= 5
+
+
+def test_half_up_follows_the_jvm_string(spark):
+    """Spark rounds the JVM's decimal string of a double. JDK 17's
+    ``Double.toString`` is not always the shortest round-trip string
+    (JDK-4511638, fixed in JDK 19); ``_half_up`` follows the JVM, so it
+    matches Spark's cast where ``repr`` would not."""
+    x = 2.82879384806159e17
+    java = spark._jvm.java.lang.Double.toString(x)
+    got = int(C._half_up(spark, np.array([x, -0.0, 1e-5]), 0)[0])
+    want = spark.range(1).select(F.lit(x).cast("decimal(38,0)").alias("d")).first()["d"]
+    assert got == int(want) == int(Decimal(java))
+    if java != "2.82879384806159E17":  # a JDK with a non-shortest toString
+        assert got != int(Decimal(repr(x)))
+    # ties round half up (away from zero), on either sign
+    ties = np.array([0.5, -0.5, 179.123456785, -179.123456785, 0.1234565])
+    assert C._half_up(spark, ties, 8).tolist() == [
+        50_000_000, -50_000_000, 17_912_345_679, -17_912_345_679, 12_345_650
+    ]
+    assert C._half_up(spark, ties, 6)[-1] == 123_457
+
+
+def test_summary_and_clusters_job_count(spark, fixture_points):
+    """spatial_clusters + cluster_summary().collect() on the fixture: the
+    site collect and the summary's collect of the assignment (6 jobs
+    with the Spark summary plan)."""
+
+    def run():
+        C.cluster_summary(
+            C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
+        ).collect()
+
+    assert _jobs(spark, run) <= 3
+
+
 def test_spatial_clusters_job_count(spark, fixture_points):
     """The site table is collected once and clustered on the driver: a
     handful of jobs at call time, not a distributed join, checkpoints
     and a connected-components loop (16-17 jobs on this fixture)."""
-    sc = spark.sparkContext
-    sc.setJobGroup("cluster-job-count", "spatial_clusters call")
-    try:
-        C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("cluster-job-count")) <= 3
+    n = _jobs(
+        spark, lambda: C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
+    )
+    assert n <= 3
 
 
 def test_res_guard(fixture_points):
@@ -256,9 +476,10 @@ def test_cluster_hulls_known_shapes(spark):
         (3, 7.0, -9.0),
     ]
     sdf = spark.createDataFrame(
-        [(c, lat, lng, 1, True) for (c, lat, lng) in rows],
-        "cluster long, lat double, lng double, w long, is_core boolean",
+        [(c, lat, lng, 1, True) for (c, lat, lng) in rows], _SITES_SCHEMA
     )
+    assert _jobs(spark, lambda: C.cluster_hulls(sdf)) <= 1
+    _assert_same_rows(C.cluster_hulls(sdf), _spark_cluster_hulls(sdf), ["cluster", "hull_idx"])
     got = (
         C.cluster_hulls(sdf)
         .toPandas()
@@ -277,6 +498,23 @@ def test_cluster_hulls_known_shapes(spark):
     single = got[got["cluster"] == 3]
     assert list(zip(single["lng"], single["lat"])) == [(-9.0, 7.0)]
     assert list(single["n_vertices"]) == [1]
+    empty = C.cluster_hulls(sdf.limit(0))
+    assert empty.schema == _spark_cluster_hulls(sdf).schema and empty.count() == 0
+
+
+def test_adversarial_summary_and_hulls_match_the_spark_plans(spark):
+    """On the adversarial assignment (antimeridian pair included) the
+    driver-side summary and hulls equal the replaced Spark plans."""
+    assigned = C.spatial_clusters(
+        spark.createDataFrame(_adversarial_points()),
+        eps_km=ADV_EPS, min_pts=ADV_MIN_PTS, res=ADV_RES,
+    )
+    wrap = assigned.filter(F.col("lng").isin(179.95, -179.97)).select("cluster").distinct()
+    assert wrap.count() == 1
+    _assert_same_rows(C.cluster_summary(assigned), _spark_cluster_summary(assigned), ["cluster"])
+    _assert_same_rows(
+        C.cluster_hulls(assigned), _spark_cluster_hulls(assigned), ["cluster", "hull_idx"]
+    )
 
 
 @pytest.mark.parametrize("seed", range(3))

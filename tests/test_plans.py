@@ -329,12 +329,9 @@ def test_decontamination_corpus_never_shuffles_before_join(spark):
     assert nodes.count("Exchange") <= 3, nodes
 
 
-def test_cluster_hulls_single_shuffle(spark):
-    """cluster_hulls is one groupBy(cluster) exchange into
-    FlatMapGroupsInPandas — per-group state is gazetteer-scale sites,
-    and nothing may add a join or second shuffle."""
-    import re
-
+def test_cluster_hulls_is_a_local_relation(spark):
+    """cluster_hulls runs on the driver: its result is a local table
+    scan — no exchange, no pandas UDF, no join."""
     from batch_geocode_spark.operators import cluster as C
 
     sdf = spark.createDataFrame(
@@ -342,7 +339,31 @@ def test_cluster_hulls_single_shuffle(spark):
         "cluster long, lat double, lng double, w long, is_core boolean",
     )
     plan = _plan(C.cluster_hulls(sdf))
+    assert "LocalTableScan" in plan
+    assert "Exchange" not in plan
+    assert "Pandas" not in plan and "Join" not in plan
+
+
+def test_pip_join_broadcasts_one_polygon_table(spark):
+    """pip_join's polygon side is one broadcast local table — the cell
+    cover carrying the admin attributes — joined once to the points;
+    the points never shuffle."""
+    import re
+
+    from batch_geocode_spark import datagen
+    from batch_geocode_spark.operators import pip as P
+
+    pts = spark.range(20).select(
+        F.col("id").cast("string").alias("image_id"),
+        (F.col("id") * 4.0 - 40.0).alias("best_lat"),
+        (F.col("id") * 9.0 - 90.0).alias("best_long"),
+    )
+    plan = _plan(P.pip_join(pts, datagen.admin_polygons_to_spark(spark), res=5))
     nodes = re.findall(r"\(\d+\) (\w*Exchange)", plan)
-    assert nodes == ["Exchange"]
-    assert "FlatMapGroupsInPandas" in plan
-    assert "Join" not in plan
+    assert nodes == ["BroadcastExchange"], nodes
+    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 1
+    # the broadcast side is the driver-built cover with its attributes
+    assert re.search(r"\+- BroadcastExchange \(\d+\)\n\s+\+- LocalTableScan", plan), plan
+    scan = re.search(r"\(\d+\) LocalTableScan\nOutput \[\d+\]: \[([^\]]*)\]", plan)
+    cols = [c.split("#")[0] for c in scan.group(1).split(", ")]
+    assert cols == ["admin_id", "cell", "iso2", "admin_level", "name"]

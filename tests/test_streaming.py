@@ -406,8 +406,9 @@ def test_stream_exact_dedup_across_batches(spark, sf_dir, tmp_path_factory):
 
 def test_read_density_pyramid_over_streamed_deltas(spark, tmp_path_factory):
     """Streaming pyramid maintenance: per-batch density deltas folded to
-    totals then rolled up — every level's mass equals the number of
-    geocoded images across ALL batches, and matches the batch pyramid."""
+    totals (read_density) then rolled up — every level's mass equals the
+    number of geocoded images across ALL batches, and matches the batch
+    pyramid."""
     from batch_geocode_spark.operators import rollups as R
     from batch_geocode_spark.operators import tiles as T
 
@@ -428,7 +429,7 @@ def test_read_density_pyramid_over_streamed_deltas(spark, tmp_path_factory):
     q.awaitTermination(300)
 
     got = (
-        streaming.read_density_pyramid(spark, table, levels=(9, 6, 3))
+        R.tile_pyramid(streaming.read_density(spark, table), levels=(9, 6, 3))
         .toPandas().sort_values(["res", "cell"]).reset_index(drop=True)
     )
     _, best = G.geocode_images(images, gaz)

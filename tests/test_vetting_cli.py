@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from batch_geocode_spark import datagen
-from batch_geocode_spark.functions.iso import invalid_iso2, validate_iso2
+from batch_geocode_spark.functions.iso import invalid_iso2
 from batch_geocode_spark.operators import geocode as G
 from batch_geocode_spark.operators import tiles as T
 from batch_geocode_spark.operators import vetting as V
@@ -64,10 +64,8 @@ def test_iso2_validation(spark):
     )
     bad = {r["iso2_value"] for r in invalid_iso2(df).collect()}
     assert bad == {"XX", "ZZ"}
-    ok, offenders = validate_iso2(df)
-    assert not ok and offenders == ["XX", "ZZ"]
     good = spark.createDataFrame([("us",), ("KE",)], "iso2 string")
-    assert validate_iso2(good) == (True, [])
+    assert invalid_iso2(good).count() == 0
 
 
 def test_snapshot_time_travel(spark, tmp_path_factory):
