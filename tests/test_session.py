@@ -1,15 +1,24 @@
 """Session defaults: generated classes are compiled once per JVM, the
 default driver heap follows the host's RAM and the default thread count
-its cores, shuffle goes to tmpfs only with room beside the heap, and
+its cores, shuffle goes to tmpfs only with room beside the heap,
 adaptive execution is on (which makes a lazy
-localCheckpoint run jobs when it is called)."""
+localCheckpoint run jobs when it is called), and on local masters the
+Python workers re-read a zip import archive only when it changed."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from batch_geocode_spark import pyworker
 from batch_geocode_spark.session import (
     default_cpus,
     default_driver_memory,
+    python_daemon_module,
     shuffle_on_tmpfs,
 )
 
@@ -108,3 +117,76 @@ def test_lazy_local_checkpoint_runs_stages_at_call_under_aqe(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("lazy-checkpoint-probe")
     assert len(jobs) > 0
+
+
+def _zip_rereads() -> list[str]:
+    """Archives ``importlib.invalidate_caches()`` re-reads in this process."""
+    reads, read_directory = [], zipimport._read_directory
+    zipimport._read_directory = lambda a: reads.append(a) or read_directory(a)
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = read_directory
+    return reads
+
+
+def test_warm_python_workers_reread_no_zip_archive(spark):
+    """Every task's ``invalidate_caches()`` re-read pyspark.zip once per
+    zip importer (16 of them); the engine daemon re-reads none of the
+    unchanged archives."""
+    assert spark.conf.get("spark.python.daemon.module") == "batch_geocode_spark.pyworker"
+
+    def rereads(batches):
+        # self-contained: cloudpickle ships module-level test helpers by
+        # reference, and the workers cannot import this test module
+        import importlib
+        import zipimport
+
+        for _ in batches:
+            pass
+        read_directory, reads = zipimport._read_directory, []
+        zipimport._read_directory = lambda a: reads.append(a) or read_directory(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        yield pd.DataFrame({"reads": [len(reads)]})
+
+    df = spark.range(0, 4, 1, 4)
+    df.mapInPandas(rereads, "reads long").collect()  # warm the workers
+    warm = [r.reads for r in df.mapInPandas(rereads, "reads long").collect()]
+    assert warm == [0, 0, 0, 0]
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name in modules:
+            z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+def test_zip_archive_is_reread_only_when_changed(tmp_path, monkeypatch):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, ["bgs_zip_mod_a"])
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        pyworker.invalidate_if_changed)
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("bgs_zip_mod_a").NAME == "bgs_zip_mod_a"
+        _zip_rereads()  # the importer now holds a stamp
+        assert archive not in _zip_rereads()
+
+        _write_zip(archive, ["bgs_zip_mod_a", "bgs_zip_mod_b"])
+        assert _zip_rereads().count(archive) == 1
+        assert importlib.import_module("bgs_zip_mod_b").NAME == "bgs_zip_mod_b"
+    finally:
+        sys.path_importer_cache.pop(archive, None)
+        for name in ("bgs_zip_mod_a", "bgs_zip_mod_b"):
+            sys.modules.pop(name, None)
+
+
+def test_engine_daemon_only_on_local_masters():
+    """Executors of other masters may not have the package importable."""
+    for master in ("local[4]", "local-cluster[2,1,1024]"):
+        assert python_daemon_module(master) == "batch_geocode_spark.pyworker"
+    for master in ("yarn", "spark://h:7077"):
+        assert python_daemon_module(master) == "pyspark.daemon"
