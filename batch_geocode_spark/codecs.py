@@ -24,7 +24,8 @@ import numpy as np
 _DCT_N = 8
 
 
-def _dct_matrix(n: int = _DCT_N) -> np.ndarray:
+def _dct_matrix() -> np.ndarray:
+    n = _DCT_N
     k = np.arange(n)[:, None]
     i = np.arange(n)[None, :]
     m = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * i + 1) * k / (2.0 * n))
@@ -101,7 +102,7 @@ def decode_dctq(buf: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------- batched
-def _chunk_size(per_image_bytes: int, budget: int = 400_000) -> int:
+def _chunk_size(per_image_bytes: int) -> int:
     """Images per batched-kernel chunk: big enough to amortize numpy
     dispatch (the dominant cost for 16-64px images — one dispatch per
     CHUNK instead of per image), small enough that the chunk's float32
@@ -109,9 +110,9 @@ def _chunk_size(per_image_bytes: int, budget: int = 400_000) -> int:
     A whole-group batch is DRAM-bound (measured 4× SLOWER than
     per-image at 666×48×64: ~250MB intermediates stream ~6 times), and
     even 2MB chunks regress the 32-worker level (32×~8MB in flight ≫
-    shared L3) while helping the 8-worker level — the budget must be
+    shared L3) while helping the 8-worker level — the 400 KB budget is
     sized for the per-core L2/L3 slice, not the whole cache."""
-    return max(8, min(256, budget // max(per_image_bytes, 1)))
+    return max(8, min(256, 400_000 // max(per_image_bytes, 1)))
 
 
 def decode_dctq_batch(raws: list[np.ndarray], h: int, w: int, c: int) -> np.ndarray:

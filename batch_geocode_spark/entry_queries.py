@@ -485,8 +485,10 @@ def d01_exact_dup_groups(spark, sf_dir):
 def d02_text_quality(spark, sf_dir):
     """Text quality scoring: token count, stopword ratio, length."""
     _views(spark, sf_dir)
+    from batch_geocode_spark.operators.text import _tokens
+
     d = spark.table("documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = _tokens(F.col("text"))
     stop = F.size(F.filter(toks, lambda t: (t == "the") | (t == "a")))
     return d.select(
         "doc_id",
@@ -533,16 +535,15 @@ def d05_minhash_lsh(spark, sf_dir):
 
 
 def _d05_oracle(
-    num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
     source: str = "documents",
 ) -> str:
-    from batch_geocode_spark.operators.dedup import MERSENNE_P31, _perm_params
+    from batch_geocode_spark.operators.dedup import MERSENNE_P31, MINHASH_PERMS, _perm_params
 
-    a, b = _perm_params(num_perm, seed=42)
-    rows = ", ".join(f"({i}, {a[i]}, {b[i]})" for i in range(num_perm))
-    rpb = num_perm // bands
+    a, b = _perm_params()
+    rows = ", ".join(f"({i}, {a[i]}, {b[i]})" for i in range(MINHASH_PERMS))
+    rpb = MINHASH_PERMS // bands
     p = MERSENNE_P31
     return rf"""
     WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t

@@ -28,14 +28,14 @@ VN VU WF WS YE YT ZA ZM ZW
 """.split()
 
 
-def invalid_iso2(df: DataFrame, iso_col: str = "iso2") -> DataFrame:
-    """Distinct offending values (uppercased) not in the ISO2 domain —
+def invalid_iso2(df: DataFrame) -> DataFrame:
+    """Distinct offending ``iso2`` values (uppercased) not in the ISO2 domain —
     distinct + broadcast anti-join, mirroring the reference's report of
     offenders (geocode/utilities.py:107-118)."""
     spark = df.sparkSession
     valid = spark.createDataFrame([(c,) for c in VALID_ISO2], "iso2_valid string")
     return (
-        df.select(F.upper(F.col(iso_col)).alias("iso2_value"))
+        df.select(F.upper(F.col("iso2")).alias("iso2_value"))
         .where(F.col("iso2_value").isNotNull())
         .distinct()
         .join(

@@ -73,16 +73,12 @@ MAX_SITES = 1_000_000  # site rows cluster_sites collects to the driver
 _PAIR_BUDGET = 4_000_000  # ring-candidate pairs materialized at once
 
 
-def weighted_sites(
-    points: DataFrame,
-    pt_id: str = "pt_id",
-    lat: str = "lat",
-    lng: str = "lng",
-) -> DataFrame:
-    """(site_id, lat, lng, w): distinct coordinates with point counts.
-    site_id = min point id at that coordinate (deterministic)."""
-    return points.groupBy(F.col(lat).alias("lat"), F.col(lng).alias("lng")).agg(
-        F.min(pt_id).alias("site_id"), F.count(F.lit(1)).alias("w")
+def weighted_sites(points: DataFrame) -> DataFrame:
+    """(site_id, lat, lng, w): distinct coordinates of (pt_id, lat, lng)
+    points with point counts. site_id = min point id at that coordinate
+    (deterministic)."""
+    return points.groupBy("lat", "lng").agg(
+        F.min("pt_id").alias("site_id"), F.count(F.lit(1)).alias("w")
     )
 
 
@@ -91,9 +87,6 @@ def spatial_clusters(
     eps_km: float,
     min_pts: int,
     res: int,
-    pt_id: str = "pt_id",
-    lat: str = "lat",
-    lng: str = "lng",
 ) -> DataFrame:
     """DBSCAN cluster assignment: (site_id, lat, lng, w, cluster,
     is_core) — one row per non-noise SITE (distinct coordinate); every
@@ -103,12 +96,7 @@ def spatial_clusters(
     (~10,007/2**res km) or ring-bounded candidate generation starts
     missing far pairs (it degrades the same way ``knn.knn_spatial``
     does, and earlier near the poles where cells narrow)."""
-    return cluster_sites(
-        weighted_sites(points, pt_id=pt_id, lat=lat, lng=lng),
-        eps_km=eps_km,
-        min_pts=min_pts,
-        res=res,
-    )
+    return cluster_sites(weighted_sites(points), eps_km=eps_km, min_pts=min_pts, res=res)
 
 
 def cluster_sites(sites: DataFrame, eps_km: float, min_pts: int, res: int) -> DataFrame:

@@ -33,17 +33,18 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from batch_geocode_spark.operators.text import _tokens
+
 
 def quality_filter(
     docs: DataFrame,
     min_tokens: int = 5,
     max_stopword_ratio: float = 0.5,
-    text_col: str = "text",
 ) -> DataFrame:
     """Keep docs passing the t02-style quality gates: at least
     ``min_tokens`` whitespace tokens and a stopword ratio at most
     ``max_stopword_ratio`` (pure Column exprs, no UDFs)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = _tokens(F.col("text"))
     stop = F.size(F.filter(toks, lambda t: (t == "the") | (t == "a")))
     return docs.filter(
         (F.size(toks) >= min_tokens)

@@ -27,23 +27,28 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from batch_geocode_spark.operators.text import _tokens
+
 # 2^31-1 (Mersenne prime): affine-permutation products stay < 2^62,
 # safe under ANSI int64 arithmetic; 31-bit hash space is ample for
 # MinHash (collision prob ~ |shingles| / 2^31)
 MERSENNE_P31 = (1 << 31) - 1
+# MinHash signature width and the seed of its affine permutations
+MINHASH_PERMS = 64
+MINHASH_SEED = 42
 
 
 # ------------------------------------------------------------------- exact
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct text with count and
     the minimal doc_id to keep."""
-    return docs.groupBy(F.md5(F.col(text_col)).alias("text_hash")).agg(
+    return docs.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_doc_id")
     )
 
 
 # ----------------------------------------------------------------- shingles
-def shingle_array(n: int = 4, text_col: str = "text"):
+def shingle_array(n: int = 4):
     """Column expression: the (possibly repeating) word n-gram array of
     one row's text — pure Column exprs (sequence/transform/slice), no
     UDF. Row-local, so it is stream-safe (streaming.py uses it for the
@@ -53,7 +58,7 @@ def shingle_array(n: int = 4, text_col: str = "text"):
     variable of an outer one-element ``transform``. Referenced directly
     inside the per-shingle lambda, the split would be re-evaluated for
     every shingle (the interpreted lambda does not share it)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = _tokens(F.col("text"))
 
     def from_tokens(t):
         # guard: Spark sequence(1, 0) would be DESCENDING, not empty
@@ -65,10 +70,10 @@ def shingle_array(n: int = 4, text_col: str = "text"):
     return F.element_at(F.transform(F.array(toks), from_tokens), 1)
 
 
-def word_shingles(docs: DataFrame, n: int = 4, text_col: str = "text") -> DataFrame:
+def word_shingles(docs: DataFrame, n: int = 4) -> DataFrame:
     """Distinct (doc_id, shingle) pairs of word n-grams."""
     return (
-        docs.select("doc_id", F.explode(shingle_array(n, text_col)).alias("shingle"))
+        docs.select("doc_id", F.explode(shingle_array(n)).alias("shingle"))
         .distinct()
     )
 
@@ -78,7 +83,6 @@ def ngram_jaccard_pairs(
     n: int = 4,
     threshold: float = 0.5,
     max_df: int = 1000,
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
@@ -104,7 +108,7 @@ def ngram_jaccard_pairs(
     from pyspark import StorageLevel
 
     sh = (
-        docs.select("doc_id", F.explode(shingle_array(n, text_col)).alias("shingle"))
+        docs.select("doc_id", F.explode(shingle_array(n)).alias("shingle"))
         .select("doc_id", F.xxhash64("shingle").alias("x"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -151,7 +155,6 @@ def decontamination_flags(
     corpus: DataFrame,
     eval_docs: DataFrame,
     n: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Test-set decontamination: flag corpus docs sharing ANY word
     n-gram with an eval/benchmark set — the classic training-data
@@ -173,9 +176,9 @@ def decontamination_flags(
     # duplicate (doc, shingle) rows, so the only corpus-side shuffle is
     # the (post-broadcast-filter, tiny) per-doc agg.
     corpus_sh = corpus.select(
-        "doc_id", F.explode(shingle_array(n, text_col)).alias("shingle")
+        "doc_id", F.explode(shingle_array(n)).alias("shingle")
     )
-    eval_sh = word_shingles(eval_docs, n=n, text_col=text_col).select(
+    eval_sh = word_shingles(eval_docs, n=n).select(
         "shingle", F.col("doc_id").alias("eval_doc_id")
     )
     hits = corpus_sh.join(F.broadcast(eval_sh), "shingle")
@@ -189,7 +192,6 @@ def decontamination_ids(
     corpus: DataFrame,
     eval_docs: DataFrame,
     n: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Just the contaminated doc ids — the curation-pipeline shape
     (r7): when the caller only anti-joins the flagged set, the per-doc
@@ -200,10 +202,10 @@ def decontamination_ids(
     doc set (a doc leaks iff it shares ANY n-gram) with one narrow
     id-only shuffle."""
     corpus_sh = corpus.select(
-        "doc_id", F.explode(shingle_array(n, text_col)).alias("shingle")
+        "doc_id", F.explode(shingle_array(n)).alias("shingle")
     )
     eval_sh = (
-        eval_docs.select(F.explode(shingle_array(n, text_col)).alias("shingle"))
+        eval_docs.select(F.explode(shingle_array(n)).alias("shingle"))
         .distinct()
     )
     return (
@@ -270,10 +272,10 @@ def _banded_candidates(banded: DataFrame, max_band_df: int | None) -> DataFrame:
     return cand_cold.unionByName(cand_hot).distinct()
 
 
-def _perm_params(num_perm: int, seed: int = 42) -> tuple[list[int], list[int]]:
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, MERSENNE_P31 - 1, size=num_perm, dtype=np.int64).tolist()
-    b = rng.integers(0, MERSENNE_P31 - 1, size=num_perm, dtype=np.int64).tolist()
+def _perm_params() -> tuple[list[int], list[int]]:
+    rng = np.random.default_rng(MINHASH_SEED)
+    a = rng.integers(1, MERSENNE_P31 - 1, size=MINHASH_PERMS, dtype=np.int64).tolist()
+    b = rng.integers(0, MERSENNE_P31 - 1, size=MINHASH_PERMS, dtype=np.int64).tolist()
     return a, b
 
 
@@ -299,19 +301,19 @@ def _grouped_shingle_hashes(
 
 
 def _batch_signature_matrices(
-    it: Iterator[pd.DataFrame], num_perm: int, seed: int
+    it: Iterator[pd.DataFrame],
 ) -> Iterator[tuple[np.ndarray, np.ndarray]]:
-    """Per Arrow batch of (doc_id, xs): (doc_id vector, docs×num_perm
+    """Per Arrow batch of (doc_id, xs): (doc_id vector, docs×MINHASH_PERMS
     signature matrix). Ragged-array formulation: flatten every doc's
     shingle hashes into one vector, then per permutation one affine map
     over the whole batch + segmented min via reduceat — no Python-level
-    per-doc loop. Values identical to the per-row (num_perm ×
+    per-doc loop. Values identical to the per-row (MINHASH_PERMS ×
     n_shingles) matrix formulation. xs arrives UNREDUCED (full 60/64-bit
     hashes, see ``_grouped_shingle_hashes``); the mod-p fold to the
     <2³¹ operand range the affine products need happens here (numpy %
     matches Spark pmod: non-negative for negative int64 inputs), so
     signatures are identical to the previous reduce-at-source values."""
-    a, b = _perm_params(num_perm, seed)
+    a, b = _perm_params()
     a_arr = np.asarray(a, dtype=np.int64)
     b_arr = np.asarray(b, dtype=np.int64)
     for pdf in it:
@@ -323,33 +325,28 @@ def _batch_signature_matrices(
         offsets = np.zeros(len(lens), dtype=np.int64)
         np.cumsum(lens[:-1], out=offsets[1:])
         n_docs = len(lens)
-        sig_mat = np.empty((n_docs, num_perm), dtype=np.int64)
-        for p in range(num_perm):
+        sig_mat = np.empty((n_docs, MINHASH_PERMS), dtype=np.int64)
+        for p in range(MINHASH_PERMS):
             # products stay < 2^62 (31-bit operands), no overflow
             vals = (a_arr[p] * flat + b_arr[p]) % MERSENNE_P31
             sig_mat[:, p] = np.minimum.reduceat(vals, offsets)
         yield pdf["doc_id"].to_numpy(np.int64), sig_mat
 
 
-def _banded_keys_from_grouped(
-    grouped: DataFrame,
-    num_perm: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-) -> DataFrame:
+def _banded_keys_from_grouped(grouped: DataFrame, bands: int) -> DataFrame:
     """(doc_id, band, sig_csv): one row per doc per band, sig_csv = the
     band's signature values comma-joined in perm order — byte-identical
     to concat_ws(",", sigs sorted by perm) over the perm-level rows.
 
     Emitting bands directly from the signature kernel removes an entire
     shuffle from the LSH pipeline: the perm-level path exploded to
-    num_perm rows/doc and re-grouped by (doc_id, band) just to
+    MINHASH_PERMS rows/doc and re-grouped by (doc_id, band) just to
     re-assemble what the kernel already held as one matrix row."""
-    rows_per_band = num_perm // bands
+    rows_per_band = MINHASH_PERMS // bands
 
     def banded(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         band_idx = np.arange(bands, dtype=np.int32)
-        for doc_ids, sig_mat in _batch_signature_matrices(it, num_perm, seed):
+        for doc_ids, sig_mat in _batch_signature_matrices(it):
             n_docs = len(doc_ids)
             csv = [
                 ",".join(map(str, sig_mat[d, b * rows_per_band : (b + 1) * rows_per_band]))
@@ -370,10 +367,8 @@ def _banded_keys_from_grouped(
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 4,
-    num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    seed: int = 42,
     base_hash: str = "xxhash64",
     max_band_df: int | None = None,
 ) -> DataFrame:
@@ -418,18 +413,18 @@ def minhash_lsh_pairs(
     results are then identical to the uncapped pipeline."""
     from pyspark import StorageLevel
 
-    raw = docs.select("doc_id", F.explode(shingle_array(n, "text")).alias("shingle"))
+    raw = docs.select("doc_id", F.explode(shingle_array(n)).alias("shingle"))
     grouped = _grouped_shingle_hashes(raw, base_hash=base_hash).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # band keys come straight out of the signature kernel (one row per
-    # doc per band) — no explode to num_perm rows/doc + re-group. The
+    # doc per band) — no explode to MINHASH_PERMS rows/doc + re-group. The
     # md5_60 key is md5 of the band's perm-ordered sig csv, exactly what
     # the previous sort_array(collect_list) path produced, so the DuckDB
     # oracle is unchanged; the production key hashes the same csv with
     # xxhash64 (band keys are internal bucket labels — only equality
     # within a band matters).
-    bsigs = _banded_keys_from_grouped(grouped, num_perm=num_perm, bands=bands, seed=seed)
+    bsigs = _banded_keys_from_grouped(grouped, bands)
     band_key = F.md5("sig_csv") if base_hash == "md5_60" else F.xxhash64("sig_csv")
     # the band self-join references this table TWICE (both join sides
     # project different columns, so their exchanges are not reused) and
@@ -651,9 +646,7 @@ def dedup_clusters(
 
 
 # ------------------------------------------------------------------ SimHash
-def simhash_fingerprints(
-    docs: DataFrame, text_col: str = "text", token_hash: str = "xxhash64"
-) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame, token_hash: str = "xxhash64") -> DataFrame:
     """64-bit SimHash per doc: token hashes aggregated JVM-side
     (collect_list after distinct-free explode), sign accumulation
     vectorized in one Arrow batch pass.
@@ -665,7 +658,7 @@ def simhash_fingerprints(
     from batch_geocode_spark.functions import hashing
 
     h = hashing.token_hash("tok", token_hash)
-    toks = F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+    toks = F.explode(_tokens(F.col("text"))).alias("tok")
     th = docs.select("doc_id", toks).select("doc_id", h.alias("th"))
     grouped = th.groupBy("doc_id").agg(F.collect_list("th").alias("hashes"))
 
@@ -696,16 +689,10 @@ def simhash_fingerprints(
     return grouped.mapInPandas(fp, schema="doc_id long, simhash long")
 
 
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    token_hash: str = "xxhash64",
-    max_band_df: int | None = None,
-) -> DataFrame:
+def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ k via 16-bit band blocking
     (any equal quarter ⇒ candidate; exact hamming verify after)."""
-    fps = simhash_fingerprints(docs, token_hash=token_hash)
-    return simhash_band_pairs(fps, max_hamming=max_hamming, max_band_df=max_band_df)
+    return simhash_band_pairs(simhash_fingerprints(docs), max_hamming=max_hamming)
 
 
 def simhash_band_pairs(

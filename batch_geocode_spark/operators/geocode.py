@@ -108,15 +108,11 @@ def prefix_key(c: F.Column) -> F.Column:
     return F.regexp_extract(c, r"^(\S+\s+\S+)", 1)
 
 
-def fuzzy_candidates(
-    images: DataFrame,
-    gazetteer: DataFrame,
-    n_results: int = DEFAULT_RESULTS_PER_SOURCE,
-) -> DataFrame:
+def fuzzy_candidates(images: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Fuzzy fallback: images whose loc_key has NO exact gazetteer match
     are joined on the first-2-token prefix key instead. Same broadcast
-    plan shape as the exact join; top-k per (image, source) by
-    (api_rank, gaz_id)."""
+    plan shape as the exact join; top-``DEFAULT_RESULTS_PER_SOURCE`` per
+    (image, source) by (api_rank, gaz_id)."""
     # rank per (prefix, source) on the SMALL side before the join — the
     # rank depends only on gazetteer rows, so this is equivalent to a
     # per-image post-join rank but costs no shuffle of the big side
@@ -129,7 +125,7 @@ def fuzzy_candidates(
                 W.partitionBy("gaz_prefix", "source").orderBy("api_rank", "gaz_id")
             ),
         )
-        .filter(F.col("rank") <= n_results)
+        .filter(F.col("rank") <= DEFAULT_RESULTS_PER_SOURCE)
     )
     gaz = _candidate_geometry(gaz)
     keyed = images.select(
@@ -227,16 +223,14 @@ def to_wide(
 
     The default prefix set is the STATIC source×rank grid
     (``wide_prefix_grid()``) — the schema is configuration, not data,
-    so the default path costs zero extra Spark jobs. Pass an explicit
-    list for a custom grid, or ``prefixes="discover"`` to derive the
-    set from the vetted rows (one small distinct+collect job; only
-    needed when candidates came from a non-standard source mix).
+    so the layout costs zero extra Spark jobs. Pass an explicit list for
+    a custom grid.
 
     With the default grid, a vetted row whose prefix falls OUTSIDE the
     grid fails the job with a per-row guard (still zero extra jobs)
     instead of silently vanishing from the wide layout — callers with
-    non-standard source mixes are pointed at ``prefixes="discover"``.
-    An EXPLICIT prefix list skips the guard: that is a deliberate
+    non-standard source mixes are pointed at an explicit list. An
+    EXPLICIT prefix list skips the guard: that is a deliberate
     projection onto a sub-grid.
     """
     prefixed = vetted.select(
@@ -259,14 +253,12 @@ def to_wide(
                         F.col("prefix"),
                         F.lit(
                             "' outside the configured source-by-rank grid; "
-                            "pass prefixes='discover' or an explicit list"
+                            "pass an explicit prefixes list"
                         ),
                     )
                 )
             ),
         )
-    elif prefixes == "discover":
-        prefixes = [r["prefix"] for r in prefixed.select("prefix").distinct().collect()]
     prefixes = sorted(prefixes, key=str.lower)
     exprs = [
         F.first(F.when(F.col("prefix") == p, F.col(s)), ignorenulls=True).alias(f"{p}_{s}")

@@ -24,13 +24,13 @@ from pyspark.sql import functions as F
 
 from batch_geocode_spark.functions.cells import cell_encode, cell_ring_cells
 from batch_geocode_spark.functions.geo import haversine_km
+from batch_geocode_spark.operators.geocode import DEFAULT_MAX_BUFFER_KM
 
 
-def knn_within_image(
-    vetted: DataFrame, k: int = 3, max_buffer: float = 15.0
-) -> DataFrame:
+def knn_within_image(vetted: DataFrame, k: int = 3) -> DataFrame:
     """k nearest candidates (across sources) to each image's composite-best
-    point.
+    point, for images whose candidate bbox diagonal is within
+    ``DEFAULT_MAX_BUFFER_KM``.
 
     Single-pass plan: the best point is computed with window aggregates
     over the same image_id partitioning the rank window needs, so the
@@ -52,7 +52,7 @@ def knn_within_image(
             "best_long", F.sum("sum_lng").over(w_img) / F.sum("n_pts").over(w_img)
         )
         .withColumn("best_diag", diag)
-        .filter(F.col("best_diag") <= F.lit(max_buffer))
+        .filter(F.col("best_diag") <= F.lit(DEFAULT_MAX_BUFFER_KM))
         .withColumn(
             "dist_km",
             haversine_km(
@@ -75,14 +75,9 @@ def knn_spatial(
     points: DataFrame,
     k: int = 5,
     res: int = 7,
-    q_id: str = "image_id",
-    q_lat: str = "best_lat",
-    q_lng: str = "best_long",
-    p_id: str = "gaz_id",
-    p_lat: str = "lat",
-    p_lng: str = "lng",
 ) -> DataFrame:
-    """Cell-bucketed kNN join: each query point meets only points in its
+    """Cell-bucketed kNN join of (image_id, best_lat, best_long) queries
+    to (gaz_id, lat, lng) points: each query point meets only points in its
     cell + 8 neighbors at ``res`` (equi-join on cell → shuffle hash /
     broadcast per AQE), then per-query top-k by haversine distance.
 
@@ -92,21 +87,21 @@ def knn_spatial(
     if res < 2:
         raise ValueError("res must be >= 2 (ring cells collide below that)")
     pts = points.select(
-        F.col(p_id).alias("nbr_id"),
-        F.col(p_lat).alias("nbr_lat"),
-        F.col(p_lng).alias("nbr_lng"),
-        cell_encode(F.col(p_lat), F.col(p_lng), res).alias("cell"),
+        F.col("gaz_id").alias("nbr_id"),
+        F.col("lat").alias("nbr_lat"),
+        F.col("lng").alias("nbr_lng"),
+        cell_encode(F.col("lat"), F.col("lng"), res).alias("cell"),
     )
     # encode + ring are pure Column exprs (r7: replaced two pandas_udfs
     # — same integer math, no JVM->Python round trip, no ArrowEvalPython
     # stage in the plan); invalid ring entries (lat clamp) are -1 and
     # filtered after the explode
     qry = queries.select(
-        F.col(q_id).alias("query_id"),
-        F.col(q_lat).alias("query_lat"),
-        F.col(q_lng).alias("query_lng"),
+        F.col("image_id").alias("query_id"),
+        F.col("best_lat").alias("query_lat"),
+        F.col("best_long").alias("query_lng"),
         F.explode(
-            cell_ring_cells(cell_encode(F.col(q_lat), F.col(q_lng), res), res)
+            cell_ring_cells(cell_encode(F.col("best_lat"), F.col("best_long"), res), res)
         ).alias("cell"),
     ).filter(F.col("cell") >= 0)
     joined = qry.join(pts, "cell", "inner").withColumn(

@@ -308,22 +308,15 @@ def extract_features(images: DataFrame) -> DataFrame:
     )
 
 
-def image_near_dup_pairs(
-    images: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "image_id",
-    phash_col: str = "phash",
-) -> DataFrame:
-    """IMAGE-level near-duplicate pairs via the perceptual-hash column:
+def image_near_dup_pairs(images: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """IMAGE-level near-duplicate pairs via the ``phash`` column:
     the phash is already a 64-bit similarity-preserving fingerprint, so
     the SimHash band machinery applies verbatim — 16-bit quarter-key
     blocking + exact hamming verify, an equi-join, never all-pairs.
-    Requires integer ids (hash the id first for string ids)."""
+    Requires integer ``image_id`` values (hash string ids first)."""
     from batch_geocode_spark.operators.dedup import simhash_band_pairs
 
-    fps = images.select(
-        F.col(id_col).alias("doc_id"), F.col(phash_col).alias("simhash")
-    )
+    fps = images.select(F.col("image_id").alias("doc_id"), F.col("phash").alias("simhash"))
     out = simhash_band_pairs(fps, max_hamming=max_hamming)
     return out.select(
         F.col("doc_a").alias("image_a"),

@@ -85,8 +85,6 @@ def zonal_cells(
     polygons: DataFrame,
     res: int,
     pip_res: int = 4,
-    cell_col: str = "cell",
-    count_col: str = "n_images",
 ) -> DataFrame:
     """Per-cell zone labels: each density cell whose CENTER falls in an
     admin polygon → (cell:string, admin_id, iso2, name, n_images). The
@@ -114,20 +112,20 @@ def zonal_cells(
     n = 2**res
     res_guard = F.coalesce(
         F.assert_true(
-            F.shiftright(F.col(cell_col).cast("long"), 58) == res,
+            F.shiftright(F.col("cell").cast("long"), 58) == res,
             F.format_string(
                 "zonal_cells: cell id resolution %d != caller res "
                 + str(res),
-                F.shiftright(F.col(cell_col).cast("long"), 58),
+                F.shiftright(F.col("cell").cast("long"), 58),
             ),
         ).cast("double"),
         F.lit(0.0),
     )
-    x = (F.col(cell_col) % F.lit(_Y_SHIFT)).cast("double")
-    y = F.floor((F.col(cell_col) % F.lit(_RES_SHIFT)) / F.lit(_Y_SHIFT)).cast("double")
+    x = (F.col("cell") % F.lit(_Y_SHIFT)).cast("double")
+    y = F.floor((F.col("cell") % F.lit(_RES_SHIFT)) / F.lit(_Y_SHIFT)).cast("double")
     centers = density.select(
-        F.col(cell_col).cast("string").alias("cell"),
-        F.col(count_col).alias("n_images"),
+        F.col("cell").cast("string").alias("cell"),
+        "n_images",
         ((y + 0.5) / n * 180.0 - 90.0 + res_guard).alias("lat"),
         ((x + 0.5) / n * 360.0 - 180.0).alias("lng"),
     )
@@ -144,8 +142,6 @@ def zonal_stats(
     polygons: DataFrame,
     res: int,
     pip_res: int = 4,
-    cell_col: str = "cell",
-    count_col: str = "n_images",
 ) -> DataFrame:
     """Raster zonal statistics: aggregate a per-cell density raster
     inside each admin polygon — (admin_id, iso2, name, n_cells,
@@ -155,10 +151,7 @@ def zonal_stats(
     the standard trick for repeated per-region reporting once a
     density layer exists."""
     return (
-        zonal_cells(
-            density, polygons, res, pip_res=pip_res,
-            cell_col=cell_col, count_col=count_col,
-        )
+        zonal_cells(density, polygons, res, pip_res=pip_res)
         .groupBy("admin_id", "iso2", "name")
         .agg(
             F.count(F.lit(1)).alias("n_cells"),

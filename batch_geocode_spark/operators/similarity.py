@@ -40,6 +40,8 @@ from batch_geocode_spark.operators import collect_capped
 
 MAX_EVAL_VECS = 200_000  # eval vectors semantic_decontamination collects to the driver
 MAX_EXACT_VECS = 500_000  # corpus vectors cosine_near_dup_pairs matches exactly on the driver
+IVF_TRAIN_SAMPLE = 4096  # corpus vectors the IVF quantizer trains on (one-shot and index alike)
+COS_TOL = 2e-6  # cosine slack of ann_verification_summary's checks
 
 
 def _dot(a, b):
@@ -54,12 +56,10 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _vecs(
-    df: DataFrame, id_alias: str, v: str, n: str, id_col="vec_id", vec_col="embedding"
-) -> DataFrame:
+def _vecs(df: DataFrame, id_alias: str, v: str, n: str) -> DataFrame:
     """(id_alias, v, n): the id, the vector as doubles and its norm."""
     return df.select(
-        F.col(id_col).alias(id_alias), _as_double(F.col(vec_col)).alias(v)
+        F.col("vec_id").alias(id_alias), _as_double(F.col("embedding")).alias(v)
     ).withColumn(n, _norm(F.col(v)))
 
 
@@ -113,18 +113,14 @@ def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_vec: str = "embedding",
     round_dp: int | None = 6,
 ) -> DataFrame:
     """Exact cosine top-k: corpus ⋈_broadcast queries (cross), JVM-side
     dot products, per-query window top-k. ``round_dp=None`` keeps the
     raw double cosines (the verification summary aggregates them before
     its own rounding)."""
-    q = _vecs(queries, "query_id", "qv", "qn", q_id, q_vec)
-    c = _vecs(corpus, "corpus_id", "cv", "cn", c_id, c_vec)
+    q = _vecs(queries, "query_id", "qv", "qn")
+    c = _vecs(corpus, "corpus_id", "cv", "cn")
     joined = c.crossJoin(F.broadcast(q)).withColumn("cos_sim", _cos("qv", "qn", "cv", "cn"))
     return _top_k(joined.filter(F.col("query_id") != F.col("corpus_id")), k, round_dp)
 
@@ -134,10 +130,8 @@ def hyperplane_signatures(
     n_tables: int = 4,
     bits: int = 12,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, table, bucket): sign-bit LSH buckets per table — one
+    """(vec_id, table, bucket): sign-bit LSH buckets per table — one
     vectorized Arrow pass (numpy matmul against seeded hyperplanes,
     drawn at the width of the vectors)."""
 
@@ -146,7 +140,7 @@ def hyperplane_signatures(
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = _matrix(pdf[vec_col])
+            mat = _matrix(pdf["embedding"])
             planes = np.random.default_rng(seed).standard_normal(
                 (n_tables, bits, mat.shape[1])
             )
@@ -154,13 +148,13 @@ def hyperplane_signatures(
             buckets = [((mat @ planes[t].T > 0) * weights).sum(axis=1) for t in range(n_tables)]
             yield pd.DataFrame(
                 {
-                    "vec_id": np.tile(pdf[id_col].to_numpy(), n_tables),
+                    "vec_id": np.tile(pdf["vec_id"].to_numpy(), n_tables),
                     "table": np.repeat(np.arange(n_tables, dtype=np.int32), len(pdf)),
                     "bucket": np.concatenate(buckets),
                 }
             )
 
-    return vecs.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
+    return vecs.select("vec_id", "embedding").mapInPandas(
         sig, schema="vec_id long, table int, bucket long"
     )
 
@@ -170,16 +164,15 @@ def lsh_candidates(
     corpus: DataFrame,
     n_tables: int = 6,
     bits: int = 10,
-    seed: int = 42,
 ) -> DataFrame:
     """The LSH blocking step alone: distinct (query_id, corpus_id)
-    pairs sharing ≥1 (table, bucket). Deterministic given the seed —
+    pairs sharing ≥1 (table, bucket). Deterministic (seeded hyperplanes) —
     the verification summary recomputes it to check candidate
     soundness (``ann_verification_summary``)."""
-    qs = hyperplane_signatures(queries, n_tables, bits, seed).withColumnsRenamed(
+    qs = hyperplane_signatures(queries, n_tables, bits).withColumnsRenamed(
         {"vec_id": "query_id"}
     )
-    cs = hyperplane_signatures(corpus, n_tables, bits, seed).withColumnsRenamed(
+    cs = hyperplane_signatures(corpus, n_tables, bits).withColumnsRenamed(
         {"vec_id": "corpus_id"}
     )
     return (
@@ -196,7 +189,6 @@ def ann_lsh_topk(
     k: int = 10,
     n_tables: int = 6,
     bits: int = 10,
-    seed: int = 42,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: LSH-bucket candidate join, exact cosine on
@@ -208,7 +200,7 @@ def ann_lsh_topk(
     cand = (
         candidates
         if candidates is not None
-        else lsh_candidates(queries, corpus, n_tables, bits, seed)
+        else lsh_candidates(queries, corpus, n_tables, bits)
     )
     return _rescore(cand, queries, corpus, k)
 
@@ -219,7 +211,6 @@ def ann_verification_summary(
     corpus: DataFrame,
     k: int,
     min_recall: float = 0.0,
-    tol: float = 2e-6,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Machine-checkable verification of an approximate top-k result
@@ -276,7 +267,7 @@ def ann_verification_summary(
         "corpus_id",
         "cos_sim",
         "rank",
-        (F.abs(F.col("cos_sim") - F.col("exact_cos")) <= tol).alias("cos_match"),
+        (F.abs(F.col("cos_sim") - F.col("exact_cos")) <= COS_TOL).alias("cos_match"),
     )
     exact = brute_force_topk(queries, corpus, k=k, round_dp=None).localCheckpoint(
         eager=False
@@ -298,14 +289,14 @@ def ann_verification_summary(
         # ranks within a query must be a prefix of 1,2,3,... with
         # cosine non-increasing along it
         (F.col("rank") == F.row_number().over(w))
-        & (prev_cos.isNull() | (F.col("cos_sim") <= prev_cos + tol)),
+        & (prev_cos.isNull() | (F.col("cos_sim") <= prev_cos + COS_TOL)),
     ).withColumn(
         "bound_ok",
         # subset-top-k invariant; exact_rank_cos is null only if the
         # exact list was shorter than the ann list (then n_emitted
         # disagrees with the oracle anyway)
         F.col("exact_rank_cos").isNotNull()
-        & (F.col("cos_sim") <= F.col("exact_rank_cos") + tol),
+        & (F.col("cos_sim") <= F.col("exact_rank_cos") + COS_TOL),
     )
     need = int(np.ceil(min_recall * k))
     summary = flagged.groupBy("query_id").agg(
@@ -358,8 +349,6 @@ def semantic_decontamination(
     corpus: DataFrame,
     eval_vecs: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     vectorized: bool = True,
 ) -> DataFrame:
     """Embedding-space test-set decontamination — the semantic sibling
@@ -390,8 +379,8 @@ def semantic_decontamination(
     ``vectorized=False`` keeps the pure-JVM broadcast-join path (no
     driver collect of the eval side at plan-build time)."""
     if not vectorized:
-        c = _vecs(corpus, "corpus_id", "cv", "cn", id_col, vec_col)
-        e = _vecs(eval_vecs, "eval_id", "ev", "en", id_col, vec_col)
+        c = _vecs(corpus, "corpus_id", "cv", "cn")
+        e = _vecs(eval_vecs, "eval_id", "ev", "en")
         joined = c.crossJoin(F.broadcast(e)).withColumn("cos_sim", _cos("cv", "cn", "ev", "en"))
         return (
             joined.filter(F.col("cos_sim") >= F.lit(threshold))
@@ -403,14 +392,14 @@ def semantic_decontamination(
         )
 
     evals = collect_capped(
-        eval_vecs.select(id_col, vec_col),
+        eval_vecs.select("vec_id", "embedding"),
         MAX_EVAL_VECS,
         "semantic_decontamination's eval set",
         "pre-block it with hyperplane_signatures the way ann_lsh_topk does",
     )
-    id_type = corpus.schema[id_col].dataType.simpleString()
+    id_type = corpus.schema["vec_id"].dataType.simpleString()
     if len(evals):
-        emat = _matrix(evals[vec_col])  # (m, dim)
+        emat = _matrix(evals["embedding"])  # (m, dim)
         en = _seq_norms(emat)
         bc = corpus.sparkSession.sparkContext.broadcast((emat, en))
 
@@ -426,7 +415,7 @@ def semantic_decontamination(
                     sub = pdf.iloc[s : s + chunk]
                     if not len(sub):
                         continue
-                    cmat = _matrix(sub[vec_col])
+                    cmat = _matrix(sub["embedding"])
                     # per-dim accumulation: each (i, j) pair's adds happen
                     # in dimension order — the exact zip_with/aggregate
                     # sequence
@@ -442,13 +431,13 @@ def semantic_decontamination(
                     masked = np.where(hits, cos, -np.inf)
                     yield pd.DataFrame(
                         {
-                            "corpus_id": sub[id_col].to_numpy()[keep],
+                            "corpus_id": sub["vec_id"].to_numpy()[keep],
                             "n_eval_hits": n_hits[keep].astype(np.int64),
                             "raw_max": masked.max(axis=1)[keep],
                         }
                     )
 
-        out = corpus.select(id_col, vec_col).mapInPandas(
+        out = corpus.select("vec_id", "embedding").mapInPandas(
             score, schema=f"corpus_id {id_type}, n_eval_hits long, raw_max double"
         )
     else:  # empty eval set: nothing can be contaminated
@@ -536,14 +525,14 @@ def cosine_near_dup_pairs(vecs: DataFrame, threshold: float = 0.95) -> DataFrame
     )
 
 
-def _kmeans_lite(mat: np.ndarray, n_centroids: int, iters: int = 8, seed: int = 42):
-    """Deterministic seeded k-means on a (sampled) matrix — numpy only,
-    driver-side; the IVF coarse quantizer."""
+def _kmeans_lite(mat: np.ndarray, n_centroids: int, seed: int):
+    """Deterministic seeded k-means (8 Lloyd iterations) on a (sampled)
+    matrix — numpy only, driver-side; the IVF coarse quantizer."""
     rng = np.random.default_rng(seed)
     mat = _unit_rows(mat)
     idx = rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)
     cents = mat[idx].copy()
-    for _ in range(iters):
+    for _ in range(8):
         assign = np.argmax(mat @ cents.T, axis=1)
         for c in range(len(cents)):
             members = mat[assign == c]
@@ -555,14 +544,12 @@ def _kmeans_lite(mat: np.ndarray, n_centroids: int, iters: int = 8, seed: int = 
     return cents
 
 
-def _train_ivf_centroids(
-    corpus: DataFrame, n_centroids: int, seed: int, train_sample: int
-) -> np.ndarray:
+def _train_ivf_centroids(corpus: DataFrame, n_centroids: int, seed: int) -> np.ndarray:
     # orderBy before limit: a bare limit is not stable across partition
     # layouts, which would make the "deterministic seeded" quantizer
     # depend on scan order
-    train = corpus.orderBy("vec_id").limit(train_sample).toPandas()
-    return _kmeans_lite(_matrix(train["embedding"]), n_centroids, seed=seed)
+    train = corpus.orderBy("vec_id").limit(IVF_TRAIN_SAMPLE).toPandas()
+    return _kmeans_lite(_matrix(train["embedding"]), n_centroids, seed)
 
 
 def _ivf_corpus_lists(corpus: DataFrame, cents: np.ndarray) -> DataFrame:
@@ -613,7 +600,6 @@ def build_ivf_index(
     table,
     n_centroids: int = 16,
     seed: int = 42,
-    train_sample: int = 4096,
     n_buckets: int = 8,
     job_id: str | None = None,
     group_size: int = 8,
@@ -633,7 +619,7 @@ def build_ivf_index(
     fault-injection/commit-granularity knobs, tests)."""
     from batch_geocode_spark.snapshots import write_snapshotted
 
-    cents = _train_ivf_centroids(corpus, n_centroids, seed, train_sample)
+    cents = _train_ivf_centroids(corpus, n_centroids, seed)
     clists = _ivf_corpus_lists(corpus, cents)
     return write_snapshotted(
         clists,
@@ -648,7 +634,7 @@ def build_ivf_index(
                 "centroids": [[float(x) for x in row] for row in cents],
                 "n_centroids": n_centroids,
                 "seed": seed,
-                "train_sample": train_sample,
+                "train_sample": IVF_TRAIN_SAMPLE,
             }
         },
     )
@@ -683,7 +669,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     seed: int = 42,
-    train_sample: int = 4096,
 ) -> DataFrame:
     """IVF approximate top-k in one shot: a seeded k-means coarse
     quantizer assigns every corpus vector to its nearest centroid
@@ -694,6 +679,6 @@ def ivf_topk(
     cross join. For repeated query batches over a stable corpus, build
     the index once with ``build_ivf_index`` and serve with
     ``ivf_topk_from_index`` (identical results, no retraining)."""
-    cents = _train_ivf_centroids(corpus, n_centroids, seed, train_sample)
+    cents = _train_ivf_centroids(corpus, n_centroids, seed)
     clists = _ivf_corpus_lists(corpus, cents)
     return _rescore(_ivf_candidates(queries, cents, n_probe, clists), queries, corpus, k)

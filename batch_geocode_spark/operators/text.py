@@ -22,32 +22,34 @@ LANG_PROFILES: dict[str, list[str]] = {
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
 
 
-def _tokens(text_col):
-    return F.split(F.trim(text_col), r"\s+")
+def _tokens(text):
+    """Whitespace tokens of a text Column — the one tokenizer of the
+    text, dedup and curation operators."""
+    return F.split(F.trim(text), r"\s+")
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace tokens + BPE-ish regex pieces + chars per doc."""
-    toks = _tokens(F.col(text_col))
-    pieces = F.regexp_count(F.col(text_col), F.lit(TOKEN_REGEX))
+    toks = _tokens(F.col("text"))
+    pieces = F.regexp_count(F.col("text"), F.lit(TOKEN_REGEX))
     return docs.select(
         "doc_id",
-        F.length(text_col).alias("n_chars"),
+        F.length("text").alias("n_chars"),
         F.size(toks).alias("n_tokens"),
         pieces.alias("n_pieces"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
     )
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Heuristic quality features: length, mean token length, stopword
     ratio, type-token ratio, symbol ratio — the usual pre-training
     filters (C4/Gopher-style rules), each a Column expression."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     n_tok = F.size(toks)
     stop = F.size(F.filter(toks, lambda t: t.isin(*LANG_PROFILES["en"])))
-    symbols = F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9\s]", ""))
-    mean_tok_len = (F.length(F.col(text_col)) - n_tok + 1) / n_tok
+    symbols = F.length(F.regexp_replace(F.col("text"), r"[A-Za-z0-9\s]", ""))
+    mean_tok_len = (F.length(F.col("text")) - n_tok + 1) / n_tok
     ttr = F.size(F.array_distinct(toks)) / n_tok
     score = (
         F.when(n_tok < 5, 0.0)
@@ -55,7 +57,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .otherwise(
             F.least(
                 F.lit(1.0),
-                0.5 * ttr + 0.5 * (1.0 - symbols / F.greatest(F.length(text_col), F.lit(1))),
+                0.5 * ttr + 0.5 * (1.0 - symbols / F.greatest(F.length("text"), F.lit(1))),
             )
         )
     )
@@ -69,10 +71,10 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-profile language ID: score = matching stopword count per
     language, argmax via greatest/struct-max trick — stays JVM-side."""
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = _tokens(F.lower(F.col("text")))
 
     def _match(words):
         # single-arg lambda: a second (defaulted) parameter would make
@@ -95,7 +97,7 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """Gopher-style intra-document repetition signals — the standard
     pre-training filters t02's surface features don't cover:
 
@@ -113,7 +115,7 @@ def repetition_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     that would shuffle the full corpus text at 100 TB.
     """
     lines = F.filter(
-        F.transform(F.split(F.col(text_col), r"\n"), lambda l: F.trim(l)),
+        F.transform(F.split(F.col("text"), r"\n"), lambda l: F.trim(l)),
         lambda l: l != "",
     )
     n_lines = F.size(lines)
@@ -143,7 +145,7 @@ def repetition_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
         lambda st: st["acc"]
         + F.when(st["run"] >= 2, st["run"] * F.length(st["prev"])).otherwise(zl),
     )
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     n_tok = F.size(toks)
     n_bg = F.greatest(n_tok - 1, F.lit(0))
     bigrams = F.zip_with(
@@ -180,9 +182,7 @@ def repetition_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(
-    docs: DataFrame, text_col: str = "text", token_hash: str = "xxhash64"
-) -> DataFrame:
+def fingerprints(docs: DataFrame, token_hash: str = "xxhash64") -> DataFrame:
     """Document fingerprints: normalized-text hash (whitespace-collapsed
     lowercase md5) + a polynomial rolling hash of the token stream
     (order-sensitive, computed via aggregate() — still no UDF).
@@ -192,8 +192,8 @@ def fingerprints(
     value-for-value; xxhash64 stays the production default."""
     from batch_geocode_spark.functions import hashing
 
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    toks = _tokens(F.col(text_col))
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+    toks = _tokens(F.col("text"))
     # rolling hash: h = (h * 31 + hash(tok) mod p) mod p, p = 2^31-1
     p = (1 << 31) - 1
     rolling = F.aggregate(
@@ -210,11 +210,7 @@ def fingerprints(
     )
 
 
-def unigram_logprob_scores(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def unigram_logprob_scores(docs: DataFrame) -> DataFrame:
     """Per-doc mean unigram log-probability under the corpus's OWN
     unigram distribution — the classic perplexity-proxy quality filter
     (docs full of rare garbage tokens score low, fluent text scores
@@ -232,8 +228,8 @@ def unigram_logprob_scores(
     UDFs; log runs JVM-side."""
 
     def per_doc_counts() -> DataFrame:
-        toks = docs.select(id_col, F.explode(_tokens(F.col(text_col))).alias("tok"))
-        return toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("cnt"))
+        toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
+        return toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("cnt"))
 
     # lazy checkpoint + the total collect as its materializing action:
     # pass 1 runs exactly once and the scoring action reads the
@@ -248,7 +244,7 @@ def unigram_logprob_scores(
     # positive total will do
     total = freq.agg(F.sum("tf")).collect()[0][0] or 1
     logp = F.log(F.col("tf") / F.lit(float(total)))
-    return per_doc_counts().join(freq, "tok").groupBy(id_col).agg(
+    return per_doc_counts().join(freq, "tok").groupBy("doc_id").agg(
         F.sum("cnt").cast("bigint").alias("n_tokens"),
         F.round(F.sum(F.col("cnt") * logp) / F.sum("cnt"), 6).alias("avg_logprob"),
     )

@@ -26,22 +26,21 @@ from batch_geocode_spark.functions.cells import _Y_SHIFT, cell_encode, cell_pare
 
 def cell_density(
     points: DataFrame,
-    lat_col: str = "best_lat",
-    lng_col: str = "best_long",
     res: int = 9,
     salt_buckets: int = 0,
     distinct_col: str | None = None,
 ) -> DataFrame:
-    """groupBy(cell) → count (+ approx distinct). ``salt_buckets`` > 0
-    enables the two-phase salted plan for hot-cell skew."""
-    df = points.withColumn("cell", cell_encode(F.col(lat_col), F.col(lng_col), res))
+    """groupBy(cell of best_lat, best_long) → count (+ approx distinct).
+    ``salt_buckets`` > 0 enables the two-phase salted plan for hot-cell
+    skew."""
+    df = points.withColumn("cell", cell_encode(F.col("best_lat"), F.col("best_long"), res))
     if salt_buckets <= 1:
         aggs = [F.count(F.lit(1)).alias("n_images")]
         if distinct_col:
             aggs.append(F.approx_count_distinct(distinct_col).alias("n_distinct_approx"))
         return df.groupBy("cell").agg(*aggs)
     salted = df.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(distinct_col or lng_col)), F.lit(salt_buckets))
+        "salt", F.pmod(F.xxhash64(F.col(distinct_col or "best_long")), F.lit(salt_buckets))
     )
     partial = salted.groupBy("cell", "salt").agg(F.count(F.lit(1)).alias("pn"))
     return partial.groupBy("cell").agg(F.sum("pn").alias("n_images"))
@@ -54,12 +53,11 @@ def pick_salt_buckets(
     res: int,
     sample_fraction: float = 0.05,
     hot_ratio: float = 4.0,
-    max_buckets: int = 64,
 ) -> int:
     """Skew-histogram pre-pass (SURVEY.md §4 'skew detection'): sample
     the points, histogram cells, and size the salt so the hottest cell's
-    expected share per reducer is ~mean. Returns 0 (no salting needed)
-    when the max/mean ratio is below ``hot_ratio``."""
+    expected share per reducer is ~mean, at most 64 buckets. Returns 0
+    (no salting needed) when the max/mean ratio is below ``hot_ratio``."""
     hist = (
         points.sample(fraction=sample_fraction, seed=42)
         .select(cell_encode(F.col(lat_col), F.col(lng_col), res).alias("cell"))
@@ -73,12 +71,10 @@ def pick_salt_buckets(
     ratio = hist["mx"] / hist["mean"]
     if ratio < hot_ratio:
         return 0
-    return min(max_buckets, int(ratio))
+    return min(64, int(ratio))
 
 
-def assemble_raster_tiles(
-    density: DataFrame, res: int, tile_res: int, cell_col: str = "cell"
-) -> DataFrame:
+def assemble_raster_tiles(density: DataFrame, res: int, tile_res: int) -> DataFrame:
     """Group res-level cell counts under their tile_res parent and emit a
     dense per-tile raster: (tile, px array of counts, tile_px).
 
@@ -88,11 +84,11 @@ def assemble_raster_tiles(
     if tile_res > res:
         raise ValueError("tile_res must be <= res")
     px = 2 ** (res - tile_res)
-    with_tile = density.withColumn("tile", cell_parent(F.col(cell_col), res, tile_res))
+    with_tile = density.withColumn("tile", cell_parent(F.col("cell"), res, tile_res))
 
     def render(pdf: pd.DataFrame) -> pd.DataFrame:
         tile = int(pdf["tile"].iloc[0])
-        rem = pdf[cell_col].to_numpy(dtype=np.int64) % (2**58)
+        rem = pdf["cell"].to_numpy(dtype=np.int64) % (2**58)
         y = rem // _Y_SHIFT
         x = rem % _Y_SHIFT
         grid = np.zeros((px, px), dtype=np.int64)
@@ -198,8 +194,6 @@ def polygonize_cells(
     density: DataFrame,
     res: int,
     threshold: int = 1,
-    cell_col: str = "cell",
-    count_col: str = "n_images",
 ) -> DataFrame:
     """Raster → vector polygonization (GDAL-polygonize analog): group
     cells with count ≥ ``threshold`` into 4-connected regions and emit
@@ -227,9 +221,7 @@ def polygonize_cells(
     from batch_geocode_spark.operators.dedup import connected_components
 
     n = 2**res
-    hot = density.filter(F.col(count_col) >= threshold).select(
-        F.col(cell_col).alias("cell"), F.col(count_col).alias("n_images")
-    )
+    hot = density.filter(F.col("n_images") >= threshold).select("cell", "n_images")
     x = F.col("cell") % F.lit(_Y_SHIFT)
     east = F.col("cell") - x + (x + 1) % F.lit(n)
     north = F.col("cell") + F.lit(_Y_SHIFT)

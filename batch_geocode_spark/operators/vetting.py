@@ -33,21 +33,19 @@ def geo_columns(df: DataFrame) -> list[str]:
     return [c for c in df.columns if any(c.endswith(f"_{s}") for s in SUFFIXES)]
 
 
-def split_meta_geo(
-    wide: DataFrame, key_col: str = "image_id", caption_col: str = "caption"
-) -> tuple[DataFrame, DataFrame]:
-    """(meta, geo): column-wise partition, both carrying the join key.
-    The caption plays the reference's address-column role."""
+def split_meta_geo(wide: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(meta, geo): column-wise partition, both carrying the join key
+    ``image_id``. The caption plays the reference's address-column role."""
     geo_cols = geo_columns(wide)
-    geo = wide.select(key_col, caption_col, *geo_cols)
+    geo = wide.select("image_id", "caption", *geo_cols)
     meta = wide.select(*[c for c in wide.columns if c not in set(geo_cols)])
     return meta, geo
 
 
-def merge_vetted(meta: DataFrame, geo_postvet: DataFrame, key_col: str = "image_id") -> DataFrame:
-    """meta ⋈ post-vet geo (left join on the stable key)."""
-    dup = [c for c in geo_postvet.columns if c in meta.columns and c != key_col]
-    return meta.join(geo_postvet.drop(*dup), key_col, "left")
+def merge_vetted(meta: DataFrame, geo_postvet: DataFrame) -> DataFrame:
+    """meta ⋈ post-vet geo (left join on the stable key ``image_id``)."""
+    dup = [c for c in geo_postvet.columns if c in meta.columns and c != "image_id"]
+    return meta.join(geo_postvet.drop(*dup), "image_id", "left")
 
 
 # --------------------------------------------------------------- JSON wire
@@ -61,72 +59,66 @@ def merge_vetted(meta: DataFrame, geo_postvet: DataFrame, key_col: str = "image_
 # F.regexp_replace (SURVEY P10) — all Column expressions, no UDF.
 
 
-def vet_value_schema(geo: DataFrame, caption_col: str = "caption") -> T.StructType:
+def vet_value_schema(geo: DataFrame) -> T.StructType:
     """Schema of the JSON payload: every geo column except the caption
     (the caption rides in the key, reference-style)."""
-    return T.StructType([f for f in geo.schema.fields if f.name != caption_col])
+    return T.StructType([f for f in geo.schema.fields if f.name != "caption"])
 
 
-def to_vet_payload(
-    geo: DataFrame, key_col: str = "image_id", caption_col: str = "caption"
-) -> DataFrame:
+def to_vet_payload(geo: DataFrame) -> DataFrame:
     """(vet_key, payload): the reference's orient='index' rows as a
     DataFrame — vet_key = '<idx>: <caption>' with idx a deterministic
-    0-based rank over ``key_col`` (the reference synthesizes
+    0-based rank over ``image_id`` (the reference synthesizes
     ``__index = range(n)``; a rank over the stable key reproduces that
     deterministically under any partitioning). payload = to_json of all
     other geo columns. The global window is fine here by design:
     vetting batches are human-reviewed and therefore small."""
-    idx = F.row_number().over(W.orderBy(key_col)) - 1
-    value_cols = [c for c in geo.columns if c != caption_col]
+    idx = F.row_number().over(W.orderBy("image_id")) - 1
+    value_cols = [c for c in geo.columns if c != "caption"]
     return geo.select(
-        F.concat(idx.cast("string"), F.lit(": "), F.col(caption_col)).alias("vet_key"),
+        F.concat(idx.cast("string"), F.lit(": "), F.col("caption")).alias("vet_key"),
         F.to_json(F.struct(*value_cols)).alias("payload"),
     )
 
 
-def parse_vet_payload(
-    payload_df: DataFrame, value_schema: T.StructType, caption_col: str = "caption"
-) -> DataFrame:
+def parse_vet_payload(payload_df: DataFrame, value_schema: T.StructType) -> DataFrame:
     """Inverse of to_vet_payload: strip the '^\\d+: ' key prefix back to
     the caption (reference utilities.py:62) and explode the JSON payload
     through from_json into typed columns."""
     return payload_df.select(
-        F.regexp_replace(F.col("vet_key"), r"^\d+: ", "").alias(caption_col),
+        F.regexp_replace(F.col("vet_key"), r"^\d+: ", "").alias("caption"),
         F.from_json(F.col("payload"), value_schema).alias("v"),
-    ).select(caption_col, "v.*")
+    ).select("caption", "v.*")
 
 
-def vet_json_document(geo: DataFrame, key_col: str = "image_id") -> str:
+def vet_json_document(geo: DataFrame) -> str:
     """Driver-side assembly of the exact reference wire format — ONE
     JSON object {vet_key: {col: value}} (pandas to_json(orient='index'))
     for the browser exchange. Driver-side by design: this string goes to
     a human's screen, so the input is small."""
-    rows = to_vet_payload(geo, key_col=key_col).collect()
+    rows = to_vet_payload(geo).collect()
     return json.dumps(
         {r["vet_key"]: json.loads(r["payload"]) for r in rows}, ensure_ascii=False
     )
 
 
-def load_vet_json_document(
-    spark, doc: str, value_schema: T.StructType, caption_col: str = "caption"
-) -> DataFrame:
+def load_vet_json_document(spark, doc: str, value_schema: T.StructType) -> DataFrame:
     """Load an edited vet JSON document back into a typed DataFrame
     (reference load_vetted_data_json / json_to_dataframe)."""
     obj = json.loads(doc)
     pairs = [(k, json.dumps(v, ensure_ascii=False)) for k, v in obj.items()]
     payload_df = spark.createDataFrame(pairs, "vet_key string, payload string")
-    return parse_vet_payload(payload_df, value_schema, caption_col=caption_col)
+    return parse_vet_payload(payload_df, value_schema)
 
 
-def apply_vet_overlay(
-    wide: DataFrame, overlay: DataFrame, key_col: str = "image_id"
-) -> DataFrame:
-    """Apply manual best-choices: ``overlay(key, chosen_prefix)`` rows
+def apply_vet_overlay(wide: DataFrame, overlay: DataFrame) -> DataFrame:
+    """Apply manual best-choices: ``overlay(image_id, chosen_prefix)`` rows
     overwrite that row's best_* block from the chosen source's columns,
     with the reference's ' (from {src})' name annotation. Rows absent
     from the overlay keep their automatic composite best."""
-    joined = wide.join(F.broadcast(overlay.select(key_col, "chosen_prefix")), key_col, "left")
+    joined = wide.join(
+        F.broadcast(overlay.select("image_id", "chosen_prefix")), "image_id", "left"
+    )
     prefixes = sorted({c[: c.rindex("_")] for c in geo_columns(wide)} - {"best"})
     out_cols = []
     for c in wide.columns:

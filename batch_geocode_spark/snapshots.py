@@ -152,9 +152,13 @@ class SnapshotTable:
         """Expire all but the last ``keep_snapshots`` manifests and
         delete data directories no kept snapshot references — the
         expire_snapshots + remove_orphan_files maintenance pair. Returns
-        {'removed_dirs': [...], 'removed_manifests': [...]}."""
+        {'removed_dirs': [...], 'removed_manifests': [...]}.
+        ``keep_snapshots`` below 1 raises ``ValueError``: the current
+        snapshot is always kept."""
         import shutil
 
+        if keep_snapshots < 1:
+            raise ValueError(f"keep_snapshots must be >= 1, got {keep_snapshots}")
         hist = self.history()
         if not hist:
             return {"removed_dirs": [], "removed_manifests": []}

@@ -98,7 +98,6 @@ def read_csv_bytes(
     spark: SparkSession,
     data: bytes,
     schema: str | None = None,
-    encodings: list[str] | None = None,
     **read_csv_kwargs,
 ) -> tuple[DataFrame, str]:
     """Uploaded-stream ingest (reference utilities.py:131-150: browser
@@ -108,10 +107,9 @@ def read_csv_bytes(
     payload, bounded by the upload, never a distributed input."""
     import io
 
-    encodings = encodings or DEFAULT_ENCODINGS
     has_u16_bom = data[:2] in (b"\xff\xfe", b"\xfe\xff")
     text = enc = None
-    for cand in encodings:
+    for cand in DEFAULT_ENCODINGS:
         if cand.lower().startswith(("utf-16", "utf_16")) and not has_u16_bom:
             continue
         try:
@@ -136,16 +134,15 @@ def read_csv_with_encoding_sweep(
     spark: SparkSession,
     path: str,
     schema: str | None = None,
-    encodings: list[str] | None = None,
-    header: bool = True,
     **options,
 ) -> tuple[DataFrame, str]:
     """(DataFrame, encoding): pre-flight the charset on a sample, then
-    distributed CSV read with an explicit schema (schema inference is a
-    full extra pass at scale — callers should pass one)."""
-    enc = detect_csv_encoding(path, encodings=encodings)
+    distributed CSV read (with a header row) with an explicit schema
+    (schema inference is a full extra pass at scale — callers should
+    pass one)."""
+    enc = detect_csv_encoding(path)
     charset = _SPARK_CHARSET.get(enc.lower(), enc)
-    reader = spark.read.option("encoding", charset).option("header", str(header).lower())
+    reader = spark.read.option("encoding", charset).option("header", "true")
     for k, v in options.items():
         reader = reader.option(k, v)
     if schema is not None:

@@ -113,7 +113,6 @@ def stream_geocode_to_snapshots(
 def stream_exact_dedup(
     events: DataFrame,
     key_cols: list[str],
-    ts_col: str = "ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
     """STATEFUL streaming exact dedup: drop rows whose key was already
@@ -123,9 +122,9 @@ def stream_exact_dedup(
     which is exactly the bounded-state contract a 10^12-row stream
     needs; unbounded dropDuplicates state would grow forever). Works on
     batch DataFrames too (falls back to plain dropDuplicates there)."""
-    ev = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if ev.isStreaming:
-        return ev.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
+        return ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(key_cols)
     return ev.dropDuplicates(key_cols)
 
 
@@ -269,7 +268,6 @@ def stream_zonal_deltas(
     table: SnapshotTable,
     checkpoint_dir: str,
     res: int = 9,
-    pip_res: int = 4,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -289,9 +287,7 @@ def stream_zonal_deltas(
 
     process_batch = _snapshot_delta_batch(
         gazetteer, table, "cell", "stream-zonal-batch",
-        lambda best: zonal_cells(
-            T.cell_density(best, res=res), polygons, res=res, pip_res=pip_res
-        ),
+        lambda best: zonal_cells(T.cell_density(best, res=res), polygons, res=res),
     )
     return _start(
         _image_stream(spark, input_dir, max_files_per_trigger),
@@ -394,7 +390,7 @@ def read_cluster_hulls(
     )
 
 
-def eval_shingle_index(eval_docs: DataFrame, n: int = 8, text_col: str = "text") -> DataFrame:
+def eval_shingle_index(eval_docs: DataFrame, n: int = 8) -> DataFrame:
     """ONE-row static index of an eval/benchmark split for the stateless
     streaming decontamination map: ``eval_map`` is
     shingle → sorted array of eval doc_ids containing it. Broadcast
@@ -402,7 +398,7 @@ def eval_shingle_index(eval_docs: DataFrame, n: int = 8, text_col: str = "text")
     scale the batch d09 shape broadcasts."""
     from batch_geocode_spark.operators.dedup import word_shingles
 
-    sh = word_shingles(eval_docs, n=n, text_col=text_col)
+    sh = word_shingles(eval_docs, n=n)
     return sh.groupBy("shingle").agg(
         F.sort_array(F.collect_set("doc_id")).alias("eval_ids")
     ).agg(
@@ -414,7 +410,6 @@ def stream_ngram_decontamination(
     docs: DataFrame,
     eval_index: DataFrame,
     n: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """CONTINUOUS n-gram decontamination (the d09 shape as a stream
     map): each arriving doc is checked against the broadcast eval
@@ -430,7 +425,7 @@ def stream_ngram_decontamination(
     from batch_geocode_spark.operators.dedup import shingle_array
 
     shared = F.array_intersect(
-        F.array_distinct(shingle_array(n, text_col)), F.map_keys(F.col("eval_map"))
+        F.array_distinct(shingle_array(n)), F.map_keys(F.col("eval_map"))
     )
     hit_ids = F.array_distinct(
         F.flatten(F.transform(shared, lambda s: F.element_at(F.col("eval_map"), s)))
@@ -444,12 +439,12 @@ def stream_ngram_decontamination(
     )
 
 
-def eval_vector_index(eval_vecs: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def eval_vector_index(eval_vecs: DataFrame) -> DataFrame:
     """ONE-row static index for streaming semantic decontamination:
     array of (eval_id, unit-normalized vector) structs."""
     from batch_geocode_spark.operators.similarity import _as_double, _norm
 
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     nrm = _norm(v)
     unit = eval_vecs.select(
         F.col("vec_id").alias("eval_id"),
@@ -464,8 +459,6 @@ def stream_semantic_decontamination(
     vecs: DataFrame,
     eval_index: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """CONTINUOUS semantic decontamination (the e06 shape as a stream
     map): cosine of each arriving vector against every broadcast eval
@@ -475,7 +468,7 @@ def stream_semantic_decontamination(
     (pytest-pinned parity; max_sim rounded 6dp both sides)."""
     from batch_geocode_spark.operators.similarity import _as_double, _dot, _norm
 
-    cv = _as_double(F.col(vec_col))
+    cv = _as_double(F.col("embedding"))
     cn = _norm(cv)
     sims = F.transform(F.col("eval_vecs"), lambda e: _dot(cv, e["ev"]) / cn)
     hits = F.filter(sims, lambda s: s >= F.lit(threshold))
@@ -484,27 +477,20 @@ def stream_semantic_decontamination(
         .withColumn("n_eval_hits", F.size(hits).cast("long"))
         .withColumn("max_sim", F.round(F.array_max(hits), 6))
         .filter(F.col("n_eval_hits") > 0)
-        .select(
-            F.col(id_col).alias("corpus_id"), "n_eval_hits", "max_sim"
-        )
+        .select(F.col("vec_id").alias("corpus_id"), "n_eval_hits", "max_sim")
     )
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window counts — works on a streaming OR batch
-    DataFrame (same plan; late rows beyond the watermark are dropped in
-    streaming mode)."""
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window counts — works on a streaming
+    OR batch DataFrame (same plan; rows more than 2 hours late are
+    dropped in streaming mode)."""
     # watermarks require TIMESTAMP (not NTZ); session TZ is UTC so the
     # cast is value-preserving
-    events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col("event_type"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window(F.col("ts"), "1 hour").alias("win"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),

@@ -58,7 +58,7 @@ def main() -> int:
     lines = [
         "# PLANS — physical-plan shape audit (generated by scripts/plan_audit.py)",
         "",
-        f"EXECUTED (AQE-final) plans over `{sf_dir}` on local[{cpus}] — what",
+        f"EXECUTED (AQE-final) plans over `{sf_dir}` on {spark.sparkContext.master} — what",
         "actually ran, not the static pre-AQE guess. Counters: shuffle /",
         "broadcast / reused exchanges, broadcast-hash / sort-merge /",
         "nested-loop / cartesian joins, parquet scans, whole-stage-codegen",

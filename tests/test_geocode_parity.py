@@ -168,8 +168,8 @@ def test_wide_nan_pattern_parity(data):
 
 def test_wide_guards_out_of_grid_prefix(data):
     """A vetted row whose source×rank prefix is outside the default
-    static grid must FAIL the wide layout loudly (pointing at
-    prefixes='discover'), not silently vanish; an explicit prefix list
+    static grid must FAIL the wide layout loudly (pointing at an
+    explicit prefixes list), not silently vanish; an explicit prefix list
     stays a deliberate sub-grid projection."""
     import pytest
     from pyspark.sql import functions as F
@@ -177,7 +177,7 @@ def test_wide_guards_out_of_grid_prefix(data):
     _, _, images, gaz = data
     vetted, best = G.geocode_images(images, gaz)
     odd = vetted.withColumn("source", F.lit("XX"))
-    with pytest.raises(Exception, match="discover"):
+    with pytest.raises(Exception, match="pass an explicit prefixes list"):
         G.to_wide(images, odd, best).toPandas()
     # explicit list: projection semantics, no guard
     sub = G.to_wide(images, odd, best, prefixes=["GM1"]).toPandas()

@@ -157,6 +157,20 @@ def test_compact_and_vacuum(spark, tmp_path_factory):
     assert not glob.glob(os.path.join(t.data_dir, "ns=batch-*"))
 
 
+def test_vacuum_rejects_keeping_no_snapshot(tmp_path):
+    """``keep_snapshots`` below 1 raises instead of slicing the history
+    wrong: ``hist[-0:]`` is the whole list (silently keeps everything),
+    and a negative value expires the current manifest. Spark-free."""
+    t = SnapshotTable(str(tmp_path))
+    for i in range(3):
+        t.commit({i: 10}, job_id=f"j{i}")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_snapshots"):
+            t.vacuum(keep_snapshots=bad)
+    assert [s["snapshot_id"] for s in t.history()] == [0, 1, 2]
+    assert t.current()["snapshot_id"] == 2
+
+
 def test_schema_evolution_merge_read(spark, tmp_path_factory):
     """Additive column evolution: a later append namespace carries an
     extra column; merge_schema=True reads the union schema with nulls
