@@ -98,40 +98,15 @@ def caption_for(i: int, n_places: int = N_PLACES) -> tuple[str, int]:
 
 def make_images(n: int, seed: int = 42, with_bytes: bool = True) -> pd.DataFrame:
     """The input_hint table: (image_id, bytes, w, h, fmt, caption, phash)."""
-    ws = [16, 32, 64]
-    hs = [16, 24, 48]
-    fmts = ["ppm", "dctq"]
     rows = []
     for i in range(n):
-        w, h, fmt = ws[i % 3], hs[i % 3], fmts[i % 2]
-        caption, _pid = caption_for(i)
         if with_bytes:
-            rng = np.random.default_rng(seed + i)
-            yy, xx = np.mgrid[0:h, 0:w]
-            base = (yy * 255 // max(h - 1, 1))[:, :, None] * np.asarray([1, 0, 0]) + (
-                xx * 255 // max(w - 1, 1)
-            )[:, :, None] * np.asarray([0, 1, 0])
-            img = np.clip(base + rng.integers(0, 32, size=(h, w, 3)), 0, 255).astype(np.uint8)
-            buf = codecs.encode_image(img, fmt)
-            ph = codecs.average_hash(codecs.decode_image(buf, fmt))
-        else:
-            buf, ph = b"", 0
-        rows.append(
-            dict(
-                image_id=f"img{i:012d}",
-                bytes=buf,
-                w=np.int32(w),
-                h=np.int32(h),
-                fmt=fmt,
-                caption=caption,
-                phash=np.int64(ph),
-            )
-        )
-    df = pd.DataFrame(rows)
-    df["w"] = df["w"].astype("int32")
-    df["h"] = df["h"].astype("int32")
-    df["phash"] = df["phash"].astype("int64")
-    return df
+            rows.append(make_image_row(i, seed))
+            continue
+        w, h, fmt = _image_shape(i)
+        rows.append(dict(image_id=f"img{i:012d}", bytes=b"", w=w, h=h, fmt=fmt,
+                         caption=caption_for(i)[0], phash=0))
+    return pd.DataFrame(rows).astype({"w": "int32", "h": "int32", "phash": "int64"})
 
 
 def make_admin_polygons(grid: int = 8) -> pd.DataFrame:
@@ -188,10 +163,15 @@ def _poly_row(aid, iso, level, name, w, s, e, n):
     )
 
 
+def _image_shape(i: int) -> tuple[int, int, str]:
+    """(w, h, fmt) of image ``i``."""
+    return [16, 32, 64][i % 3], [16, 24, 48][i % 3], ["ppm", "dctq"][i % 2]
+
+
 def make_image_row(i: int, seed: int = 42) -> dict:
-    """One deterministic image row (used by the distributed generator)."""
-    ws, hs, fmts = [16, 32, 64], [16, 24, 48], ["ppm", "dctq"]
-    w, h, fmt = ws[i % 3], hs[i % 3], fmts[i % 2]
+    """One deterministic image row (``make_images`` and the distributed
+    generator)."""
+    w, h, fmt = _image_shape(i)
     caption, _ = caption_for(i)
     rng = np.random.default_rng(seed + i)
     yy, xx = np.mgrid[0:h, 0:w]

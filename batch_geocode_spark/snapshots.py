@@ -14,8 +14,13 @@ manifest commit log:
   a replayed batch (same namespace) is idempotent — dynamic partition
   overwrite only touches that batch's own partitions.
 - a snapshot = JSON manifest listing committed buckets with per-bucket
-  row counts + lineage (parent snapshot id, job id). Manifests are
-  written temp-then-rename; ``CURRENT`` is updated last → atomic commit.
+  row counts + lineage (parent snapshot id, job id) + the row schema.
+  One builder (``SnapshotTable._commit``) writes every manifest
+  temp-then-rename; ``CURRENT`` is updated last → atomic commit.
+- reads use the manifest schema, so no job infers one from parquet
+  footers. A commit stores the union of its parent's schema and the
+  writer's (additive evolution: older rows read new columns as null);
+  a compaction stores the schema of the rows it rewrote.
 - the per-bucket counts (and ``stats_cols`` min/max) are taken by a
   ``DataFrame.observe`` on the write itself (``_write_buckets``): no
   writer reads its rows a second time to count them.
@@ -41,10 +46,33 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from batch_geocode_spark.operators import collect_capped
+
+
+# rows of one upsert call: its keys are collected to the driver and
+# broadcast to the anti-join
+MAX_UPSERT_ROWS = 1_000_000
 
 
 def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+def _schema(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _schema_union(parent: str | None, writer: str | None) -> str | None:
+    """The parent's columns in their order, each as the writer has it
+    if the writer has it, then the writer's new columns: the schema of
+    a lineage whose writers add columns over time."""
+    if parent is None or writer is None:
+        return writer or parent
+    old, new = _schema(parent), _schema(writer)
+    fields = [new[f.name] if f.name in new.names else f for f in old.fields]
+    return StructType(fields + [f for f in new.fields if f.name not in old.names]).json()
 
 
 class SnapshotTable:
@@ -58,14 +86,16 @@ class SnapshotTable:
         os.makedirs(self.manifest_dir, exist_ok=True)
 
     # ------------------------------------------------------------- manifest
+    def _load(self, name: str) -> dict:
+        with open(os.path.join(self.manifest_dir, name)) as f:
+            return json.load(f)
+
     def current(self) -> dict | None:
         cur = os.path.join(self.manifest_dir, "CURRENT")
         if not os.path.exists(cur):
             return None
         with open(cur) as f:
-            name = f.read().strip()
-        with open(os.path.join(self.manifest_dir, name)) as f:
-            return json.load(f)
+            return self._load(f.read().strip())
 
     def committed_buckets(self) -> dict[str, int]:
         """bucket key -> row count across the whole committed lineage.
@@ -83,8 +113,11 @@ class SnapshotTable:
         schema_json: str | None = None,
         new_stats: dict | None = None,
     ) -> dict:
+        """Commit ``new_buckets`` on top of the lineage: the snapshot
+        lists the parent's buckets updated with these, and its schema is
+        the union of the parent's and the writer's (additive evolution:
+        columns an older bucket lacks read as null)."""
         parent = self.current()
-        snap_id = (parent["snapshot_id"] + 1) if parent else 0
         buckets = dict((parent or {}).get("buckets", {}))
         buckets.update({str(b): int(n) for b, n in new_buckets.items()})
         # per-bucket min/max column stats (data skipping): a REWRITTEN
@@ -96,21 +129,33 @@ class SnapshotTable:
             stats.pop(str(b), None)
         for b, s in (new_stats or {}).items():
             stats[str(b)] = s
+        schema = _schema_union((parent or {}).get("schema"), schema_json)
+        return self._commit(parent, buckets, job_id, extra or {}, schema, stats)
+
+    def _commit(
+        self,
+        parent: dict | None,
+        buckets: dict[str, int],
+        job_id: str,
+        metrics: dict,
+        schema: str | None,
+        stats: dict,
+    ) -> dict:
+        """Write the child snapshot of ``parent`` (the current snapshot):
+        the manifest temp-then-rename, then ``CURRENT`` — the atomic
+        flip. Every manifest, a compaction's too, is built here."""
         snap = {
-            "snapshot_id": snap_id,
+            "snapshot_id": (parent["snapshot_id"] + 1) if parent else 0,
             "parent_id": parent["snapshot_id"] if parent else None,
             "job_id": job_id,
             "committed_at": time.time(),
             "buckets": buckets,
             "total_rows": int(sum(buckets.values())),
             "column_stats": stats,
-            "metrics": extra or {},
-            # row schema (JSON) so sparse/empty tables stay readable
-            "schema": schema_json or (parent or {}).get("schema"),
+            "metrics": metrics,
+            # row schema (JSON): what ``read`` reads the files with
+            "schema": schema,
         }
-        return self._write_manifest(snap)
-
-    def _write_manifest(self, snap: dict) -> dict:
         name = f"snapshot-{snap['snapshot_id']:06d}.json"
         tmp = os.path.join(self.manifest_dir, f".{name}.tmp")
         with open(tmp, "w") as f:
@@ -121,32 +166,6 @@ class SnapshotTable:
             f.write(name)
         os.replace(cur_tmp, os.path.join(self.manifest_dir, "CURRENT"))
         return snap
-
-    def commit_replace(
-        self,
-        new_buckets: dict[str, int],
-        job_id: str,
-        extra: dict | None = None,
-        schema_json: str | None = None,
-    ) -> dict:
-        """Commit a snapshot whose bucket set REPLACES the lineage view
-        (compaction): the new snapshot references only ``new_buckets``;
-        older data dirs stay on disk so time travel to pre-compaction
-        snapshots keeps working until ``vacuum``."""
-        parent = self.current()
-        snap_id = (parent["snapshot_id"] + 1) if parent else 0
-        buckets = {str(b): int(n) for b, n in new_buckets.items()}
-        snap = {
-            "snapshot_id": snap_id,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "job_id": job_id,
-            "committed_at": time.time(),
-            "buckets": buckets,
-            "total_rows": int(sum(buckets.values())),
-            "metrics": {**(extra or {}), "replace": True},
-            "schema": schema_json or (parent or {}).get("schema"),
-        }
-        return self._write_manifest(snap)
 
     def vacuum(self, keep_snapshots: int = 1) -> dict:
         """Expire all but the last ``keep_snapshots`` manifests and
@@ -205,11 +224,7 @@ class SnapshotTable:
         names = sorted(
             n for n in os.listdir(self.manifest_dir) if n.startswith("snapshot-")
         )
-        out = []
-        for n in names:
-            with open(os.path.join(self.manifest_dir, n)) as f:
-                out.append(json.load(f))
-        return out
+        return [self._load(n) for n in names]
 
     # ----------------------------------------------------------------- read
     def _bucket_path(self, key: str) -> str:
@@ -222,7 +237,6 @@ class SnapshotTable:
         self,
         spark: SparkSession,
         snapshot_id: int | None = None,
-        merge_schema: bool = False,
         prune: dict[str, tuple] | None = None,
     ) -> DataFrame:
         """Committed rows only (uncommitted bucket dirs are invisible).
@@ -235,15 +249,18 @@ class SnapshotTable:
         optimization, not a filter — returned rows still need the real
         predicate applied; buckets without stats are always kept.
 
-        ``merge_schema=True`` unions the schemas across committed file
-        sets (parquet mergeSchema) — the additive-column evolution path:
-        appenders may add columns over time; older rows read as null.
+        Files are read with the snapshot's manifest ``schema``, so no job
+        infers one from their footers. That schema is the union of every
+        committed writer's (``commit``): when appenders add columns over
+        time, older rows read them as null. A compaction replaces it.
+        Only a manifest committed without a schema (by hand) falls back
+        to the schema parquet infers from the files.
 
         Zero-count buckets are committed in the manifest but produce no
         directory under dynamic partition overwrite, so they are skipped
         when assembling the path list (sparse/skewed inputs would
         otherwise raise PATH_NOT_FOUND). An all-empty committed table
-        reads back as an empty DataFrame via the manifest schema.
+        reads back as an empty DataFrame of the manifest schema.
 
         ``snapshot_id`` time-travels: buckets visible as of that commit.
         NOTE: bucket dirs are overwritten in place, so time travel is
@@ -254,29 +271,25 @@ class SnapshotTable:
         snap = self.current() if snapshot_id is None else self.snapshot(snapshot_id)
         if snap is None:
             raise ValueError(f"no committed snapshot in {self.root}")
-        buckets = {str(k): int(v) for k, v in snap.get("buckets", {}).items()}
-        if not buckets:
+        if not snap.get("buckets"):
             raise ValueError(f"no committed snapshot in {self.root}")
         paths = [
             self._bucket_path(k)
             for k in self.live_bucket_keys(snap, prune=prune)
         ]
+        schema_json = snap.get("schema")
         if not paths:
-            schema_json = snap.get("schema")
             if schema_json is None:
                 raise ValueError(
                     f"committed table in {self.root} is empty and carries no schema"
                 )
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(schema_json))
             # a truly empty frame — scanning data_dir here would surface
             # uncommitted bucket dirs left by a crashed writer, violating
             # the committed-rows-only invariant exactly when it matters
-            return spark.createDataFrame([], schema)
+            return spark.createDataFrame([], _schema(schema_json))
         reader = spark.read.option("basePath", self.data_dir)
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
+        if schema_json is not None:
+            reader = reader.schema(_schema(schema_json))
         return reader.parquet(*paths)
 
     def live_bucket_keys(
@@ -318,9 +331,7 @@ class SnapshotTable:
         return keys
 
     def snapshot(self, snapshot_id: int) -> dict:
-        path = os.path.join(self.manifest_dir, f"snapshot-{snapshot_id:06d}.json")
-        with open(path) as f:
-            return json.load(f)
+        return self._load(f"snapshot-{snapshot_id:06d}.json")
 
 
 def _write_buckets(
@@ -383,13 +394,17 @@ def upsert_snapshotted(
     (boolean) tombstone is true remove that key from the table instead
     of inserting; the column itself never lands in storage. Deleting a
     key that does not exist is a no-op — the full WHEN MATCHED THEN
-    DELETE contract, still bucket-pruned."""
+    DELETE contract, still bucket-pruned.
+
+    ``df`` is derived once, into a checkpoint, and may hold at most
+    ``MAX_UPSERT_ROWS`` rows: its keys are broadcast to the anti-join
+    that drops the replaced rows, so a larger input raises
+    ``ValueError`` instead."""
     spark = df.sparkSession
     job_id = job_id or f"upsert-{uuid.uuid4().hex[:8]}"
     cur = table.current()
     if cur is not None:
-        committed = table.committed_buckets()
-        if any("/" in k for k in committed):
+        if any("/" in k for k in cur["buckets"]):
             raise ValueError(
                 "upsert requires a plain-layout table "
                 "(run compact_table(layout='plain') first)"
@@ -400,30 +415,29 @@ def upsert_snapshotted(
                 f"table was written with n_buckets={manifest_n}, got {n_buckets}"
             )
 
-    touched_keys = df.select(key_col).distinct()
+    # the caller's frame is derived ONCE: the affected buckets, the
+    # anti-join keys and the incoming rows all come from this checkpoint
+    staged = df.withColumn("bucket", bucket_expr(key_col, n_buckets)).localCheckpoint()
+    touched = collect_capped(
+        staged.select("bucket"), MAX_UPSERT_ROWS, "the upsert input",
+        "upsert it in smaller batches",
+    )
+    affected = sorted(int(b) for b in touched["bucket"].unique())
+    incoming = staged
     if tombstone_col is not None:
         flag = F.coalesce(F.col(tombstone_col).cast("boolean"), F.lit(False))
-        df = df.filter(~flag).drop(tombstone_col)
-    incoming = df.withColumn("bucket", bucket_expr(key_col, n_buckets))
-    affected = sorted(
-        int(r["bucket"])
-        for r in touched_keys.select(bucket_expr(key_col, n_buckets).alias("bucket"))
-        .distinct()
-        .collect()
-    )
-    if cur is None:
-        merged = incoming
-    else:
+        incoming = staged.filter(~flag).drop(tombstone_col)
+    merged = incoming
+    if cur is not None:
         old = table.read(spark).filter(F.col("bucket").isin(affected))
-        keep = old.join(touched_keys, key_col, "left_anti")
-        merged = keep.select(*incoming.columns).unionByName(incoming)
-    # materialize BEFORE overwriting: the merge plan reads the very
-    # bucket directories the write replaces (classic self-overwrite
-    # hazard). The checkpoint holds only the affected buckets — small
-    # by design.
-    counts, _ = _write_buckets(
-        merged.localCheckpoint(), table, ["bucket"], affected, str
-    )
+        # broadcast: the capped collect above bounds the incoming keys
+        keep = old.join(F.broadcast(staged.select(key_col)), key_col, "left_anti")
+        # materialize BEFORE overwriting: the merge plan reads the very
+        # bucket directories the write replaces (classic self-overwrite
+        # hazard). The checkpoint holds only the affected buckets — small
+        # by design.
+        merged = keep.select(*incoming.columns).unionByName(incoming).localCheckpoint()
+    counts, _ = _write_buckets(merged, table, ["bucket"], affected, str)
     return table.commit(
         counts,
         job_id,
@@ -473,11 +487,15 @@ def compact_table(
     counts, _ = _write_buckets(
         bucketed, table, part_cols, list(range(n_buckets)), key_of
     )
-    return table.commit_replace(
+    # a REPLACING snapshot: only the compacted buckets, and the schema
+    # of the rewritten rows (a plain rewrite drops ``ns``), no stats
+    return table._commit(
+        cur,
         counts,
         job_id or f"compact-{cur['snapshot_id'] + 1}",
-        extra={"compacted_from": cur["snapshot_id"], "n_buckets": n_buckets},
-        schema_json=bucketed.schema.json(),
+        {"compacted_from": cur["snapshot_id"], "n_buckets": n_buckets, "replace": True},
+        bucketed.schema.json(),
+        {},
     )
 
 

@@ -13,6 +13,7 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import _jobs_in
 from pyspark.sql import functions as F
 
 from batch_geocode_spark.functions.cells import np_cell_encode
@@ -188,14 +189,7 @@ _GROUPS = itertools.count()
 def _jobs(spark, fn) -> int:
     """Spark jobs that ``fn()`` runs, counted with a job group of its
     own (a group's job ids accumulate over every use of its name)."""
-    sc = spark.sparkContext
-    group = f"cluster-jobs-{next(_GROUPS)}"
-    sc.setJobGroup(group, "cluster job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return _jobs_in(spark, f"cluster-jobs-{next(_GROUPS)}", fn)
 
 
 def _tie(x: float, places: int) -> float:

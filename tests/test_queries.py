@@ -7,6 +7,7 @@ backbone at a component depth far beyond round-2's iteration cap."""
 import os
 
 import pytest
+from conftest import _jobs_in
 
 from batch_geocode_spark import entry_queries as EQ
 from batch_geocode_spark.datagen import chain_docs_to_spark
@@ -127,16 +128,6 @@ SF01_STAGE_ROWS = {
     "after_quality_filter": 400,
     "after_stratified_sample": 152,
 }
-
-
-def _jobs_in(spark, group: str, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_curation_metrics_ride_the_pipeline_jobs(spark):

@@ -4,6 +4,7 @@ run (north_rule resumability; SURVEY.md §5 item 5)."""
 
 import pandas as pd
 import pytest
+from conftest import _jobs_in
 
 from batch_geocode_spark import datagen
 from batch_geocode_spark.operators import geocode as G
@@ -173,17 +174,101 @@ def test_vacuum_rejects_keeping_no_snapshot(tmp_path):
 
 def test_schema_evolution_merge_read(spark, tmp_path_factory):
     """Additive column evolution: a later append namespace carries an
-    extra column; merge_schema=True reads the union schema with nulls
-    for older rows."""
+    extra column; the read has the union schema with nulls for older
+    rows, a narrower write after it keeps the column, and a time-travel
+    read of the snapshot before it has no such column."""
     t = SnapshotTable(str(tmp_path_factory.mktemp("evolve")))
     v1 = spark.createDataFrame([("a", 1)], "cell string, n int")
     v2 = spark.createDataFrame([("b", 2, "x")], "cell string, n int, tag string")
+    v3 = spark.createDataFrame([("c", 3)], "cell string, n int")
     write_snapshotted(v1, t, key_col="cell", n_buckets=2, group_size=2, namespace="b0")
+    pre_evolution = t.current()["snapshot_id"]
     write_snapshotted(v2, t, key_col="cell", n_buckets=2, group_size=2, namespace="b1")
-    got = t.read(spark, merge_schema=True).toPandas().set_index("cell")
+    write_snapshotted(v3, t, key_col="cell", n_buckets=2, group_size=2, namespace="b2")
+    got = t.read(spark).toPandas().set_index("cell")
     assert "tag" in got.columns
     assert got.loc["b", "tag"] == "x"
-    assert got.loc["a", "tag"] is None or got.loc["a", "tag"] != got.loc["a", "tag"]
+    for older in ("a", "c"):
+        assert got.loc[older, "tag"] is None or got.loc[older, "tag"] != got.loc[older, "tag"]
+    old = t.read(spark, snapshot_id=pre_evolution)
+    assert "tag" not in old.columns
+    assert [r["cell"] for r in old.collect()] == ["a"]
+
+
+def test_plain_compaction_reads_like_a_plain_write(spark, tmp_path_factory):
+    """A compaction replaces the table's schema instead of merging it: a
+    namespaced table compacted to the plain layout reads back with
+    exactly the columns of a plain write (no all-null ``ns``)."""
+    from pyspark.sql import functions as F
+
+    from batch_geocode_spark.snapshots import compact_table
+
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(20)], "image_id string, v int")
+    plain = SnapshotTable(str(tmp_path_factory.mktemp("plain_ref")))
+    write_snapshotted(df, plain, n_buckets=4)
+    t = SnapshotTable(str(tmp_path_factory.mktemp("ns_to_plain")))
+    for b in range(2):
+        write_snapshotted(df.filter(F.col("v") % 2 == b), t, n_buckets=4, namespace=f"b{b}")
+    assert "ns" in t.read(spark).columns
+
+    compact_table(spark, t, key_col="image_id", n_buckets=4, layout="plain")
+    got = t.read(spark)
+    assert got.columns == plain.read(spark).columns == ["image_id", "v", "bucket"]
+    assert sorted(got.collect()) == sorted(plain.read(spark).collect())
+
+
+def test_snapshot_call_job_counts(spark, tmp_path_factory):
+    """Jobs per call on a 20-row, 4-bucket table. A single-group write
+    is its one write; four groups are a checkpoint plus four writes. An
+    upsert of 4 rows checkpoints its input once, collects the affected
+    buckets from it, checkpoints the merge (broadcasting the incoming
+    keys) and writes: 5 jobs, where deriving the input twice took 8. A
+    read runs no schema-inference job, so reading and counting takes 2,
+    and a plain compaction checkpoints and writes."""
+    from pyspark.sql import functions as F
+
+    from batch_geocode_spark.snapshots import compact_table, upsert_snapshotted
+
+    base = spark.createDataFrame([(f"k{i}", i) for i in range(20)], "image_id string, v int")
+    one = SnapshotTable(str(tmp_path_factory.mktemp("jobs_one")))
+    four = SnapshotTable(str(tmp_path_factory.mktemp("jobs_four")))
+    assert _jobs_in(spark, "snap-write-one",
+                    lambda: write_snapshotted(base, one, n_buckets=4, group_size=4)) <= 1
+    assert _jobs_in(spark, "snap-write-four",
+                    lambda: write_snapshotted(base, four, n_buckets=4, group_size=1)) <= 5
+
+    up = spark.createDataFrame(
+        [("k0", 100), ("k1", 101), ("k3", 5), ("new", 7)], "image_id string, v int"
+    )
+    assert _jobs_in(spark, "snap-upsert", lambda: upsert_snapshotted(up, one, n_buckets=4)) <= 6
+    assert _jobs_in(spark, "snap-read-count", lambda: one.read(spark).count()) <= 2
+    assert one.read(spark).count() == 21
+
+    ns = SnapshotTable(str(tmp_path_factory.mktemp("jobs_ns")))
+    for b in range(2):
+        write_snapshotted(base.filter(F.col("v") % 2 == b), ns, n_buckets=4, namespace=f"b{b}")
+    assert _jobs_in(
+        spark, "snap-compact-plain",
+        lambda: compact_table(spark, ns, key_col="image_id", n_buckets=4, layout="plain"),
+    ) <= 2
+    assert ns.read(spark).count() == 20
+
+
+def test_oversized_upsert_fails_before_writing(spark, tmp_path_factory, monkeypatch):
+    """The upsert broadcasts its incoming keys, so it caps them first: an
+    input above ``MAX_UPSERT_ROWS`` raises and commits nothing."""
+    from batch_geocode_spark import snapshots as S
+
+    t = SnapshotTable(str(tmp_path_factory.mktemp("upsert_cap")))
+    base = spark.createDataFrame([(f"k{i}", i) for i in range(20)], "image_id string, v int")
+    write_snapshotted(base, t, n_buckets=4)
+    before = t.current()
+    monkeypatch.setattr(S, "MAX_UPSERT_ROWS", 3)
+    up = spark.createDataFrame([(f"k{i}", -i) for i in range(4)], "image_id string, v int")
+    with pytest.raises(ValueError, match="3 rows"):
+        S.upsert_snapshotted(up, t, n_buckets=4)
+    assert t.current() == before
+    assert sorted(t.read(spark).drop("bucket").collect()) == sorted(base.collect())
 
 
 def test_upsert_with_bucket_pruning(spark, tmp_path_factory):
