@@ -18,8 +18,9 @@ manifest commit log:
   One builder (``SnapshotTable._commit``) writes every manifest
   temp-then-rename; ``CURRENT`` is updated last → atomic commit.
 - reads use the manifest schema, so no job infers one from parquet
-  footers. A commit stores the union of its parent's schema and the
-  writer's (additive evolution: older rows read new columns as null);
+  footers (a manifest without one cannot be read). A commit stores
+  the union of its parent's schema and the writer's (additive
+  evolution: older rows read new columns as null);
   a compaction stores the schema of the rows it rewrote.
 - the per-bucket counts (and ``stats_cols`` min/max) are taken by a
   ``DataFrame.observe`` on the write itself (``_write_buckets``): no
@@ -28,6 +29,8 @@ manifest commit log:
   leaves partially-written bucket dirs that the retry simply overwrites.
 - resume = read CURRENT → committed bucket set → process only pending
   buckets → commit a child snapshot.
+- ``upsert_snapshotted`` takes at most ``MAX_UPSERT_ROWS`` input rows
+  (more raise ``ValueError``): upsert in smaller batches.
 
 Reference contrast: the reference has no checkpointing at all — a crash
 restarts the whole CSV (SURVEY.md §4 'checkpoint/resume' row).
@@ -253,8 +256,7 @@ class SnapshotTable:
         infers one from their footers. That schema is the union of every
         committed writer's (``commit``): when appenders add columns over
         time, older rows read them as null. A compaction replaces it.
-        Only a manifest committed without a schema (by hand) falls back
-        to the schema parquet infers from the files.
+        A manifest committed without a schema raises ``ValueError``.
 
         Zero-count buckets are committed in the manifest but produce no
         directory under dynamic partition overwrite, so they are skipped
@@ -277,19 +279,15 @@ class SnapshotTable:
             self._bucket_path(k)
             for k in self.live_bucket_keys(snap, prune=prune)
         ]
-        schema_json = snap.get("schema")
+        if snap.get("schema") is None:
+            raise ValueError(f"committed table in {self.root} carries no schema")
+        schema = _schema(snap["schema"])
         if not paths:
-            if schema_json is None:
-                raise ValueError(
-                    f"committed table in {self.root} is empty and carries no schema"
-                )
             # a truly empty frame — scanning data_dir here would surface
             # uncommitted bucket dirs left by a crashed writer, violating
             # the committed-rows-only invariant exactly when it matters
-            return spark.createDataFrame([], _schema(schema_json))
-        reader = spark.read.option("basePath", self.data_dir)
-        if schema_json is not None:
-            reader = reader.schema(_schema(schema_json))
+            return spark.createDataFrame([], schema)
+        reader = spark.read.option("basePath", self.data_dir).schema(schema)
         return reader.parquet(*paths)
 
     def live_bucket_keys(
@@ -488,9 +486,10 @@ def compact_table(
         bucketed, table, part_cols, list(range(n_buckets)), key_of
     )
     # a REPLACING snapshot: only the compacted buckets, and the schema
-    # of the rewritten rows (a plain rewrite drops ``ns``), no stats
+    # of the rewritten rows (a plain rewrite drops ``ns``), no stats; the
+    # parent is re-read so a commit made meanwhile is not overwritten
     return table._commit(
-        cur,
+        table.current(),
         counts,
         job_id or f"compact-{cur['snapshot_id'] + 1}",
         {"compacted_from": cur["snapshot_id"], "n_buckets": n_buckets, "replace": True},
