@@ -142,19 +142,28 @@ def decode_dctq_batch(raws: list[np.ndarray], h: int, w: int, c: int) -> np.ndar
 
 
 def average_hash_batch(imgs: np.ndarray) -> np.ndarray:
-    """Vectorized :func:`average_hash` over a (B, h, w, 3) uint8 stack
-    with h, w multiples of 8 (the general-dims fallback stays per-image
-    in the caller). Same exact integer arithmetic — block_sum * 64 >
-    total_sum — so values match the scalar path bit for bit."""
-    b, h, w = imgs.shape[:3]
-    # 3-slice uint16 add is ~15× faster than sum(axis=3, dtype=int64)
-    # (numpy's promoted last-axis reduction is element-at-a-time);
-    # channel sums ≤ 765 fit uint16 exactly
+    """Vectorized :func:`average_hash` over a (B, h, w, c) uint8 stack of
+    any dims. Same exact integer arithmetic — block_sum * h * w >
+    total_sum * block_size over the bounds ``(arange(9) * h) // 8`` —
+    so values match the scalar path bit for bit, including the empty
+    blocks of images under 8 px (their sum and size are both 0)."""
+    b, h, w, c = imgs.shape
+    # per-channel uint16 adds are ~15× faster than sum(axis=3,
+    # dtype=int64) (numpy's promoted last-axis reduction is
+    # element-at-a-time); c ≤ 255 (a header byte), so sums ≤ 65025 fit
     gray = imgs[..., 0].astype(np.uint16)
-    gray += imgs[..., 1]
-    gray += imgs[..., 2]
-    small = gray.reshape(b, 8, h // 8, 8, w // 8).sum(axis=(2, 4), dtype=np.int64)
-    bits = small * 64 > small.sum(axis=(1, 2))[:, None, None]
+    for ci in range(1, c):
+        gray += imgs[..., ci]
+    ys, xs = (np.arange(9) * h) // 8, (np.arange(9) * w) // 8
+    sizes = np.diff(ys)[:, None] * np.diff(xs)[None, :]
+    # reduceat sums each [bound, next bound) slice; an empty slice yields
+    # the element at its bound instead of 0, so mask those blocks
+    sums = np.add.reduceat(
+        np.add.reduceat(gray, ys[:-1], axis=1, dtype=np.int64), xs[:-1], axis=2
+    )
+    sums = np.where(sizes > 0, sums, 0)
+    total = sums.sum(axis=(1, 2))[:, None, None]
+    bits = sums * (h * w) > total * sizes
     packed = np.packbits(bits.reshape(b, 64), axis=1)  # (B, 8) big-endian bytes
     shifts = (np.arange(7, -1, -1, dtype=np.uint64) * np.uint64(8))
     vals = np.bitwise_or.reduce(packed.astype(np.uint64) << shifts, axis=1)

@@ -31,27 +31,13 @@ def validate_images(images: DataFrame) -> DataFrame:
     integrity: (image_id, fmt, decode_ok, dims_ok, phash_match,
     phash_hamming, mean_px). The input_hint integrity check.
 
-    BATCHED kernel: rows in each Arrow batch are grouped by
-    (fmt, payload dims) and each group decodes + phashes in one fused
+    BATCHED kernel: rows in each Arrow batch are grouped by (fmt,
+    payload dims, channels) and each group decodes + phashes in one fused
     numpy pass (``decode_dctq_batch`` / ``average_hash_batch``) —
     per-image Python/numpy dispatch was the dominant CPU cost for
-    16-64px images. Malformed payloads and odd shapes fall back to the
-    per-row scalar path; values are bit-identical either way."""
-
-    def scalar_row(buf, fmt, w, h, phash):
-        try:
-            img = codecs.decode_image(buf, fmt)
-            ph = codecs.average_hash(img)
-            ham = bin((ph ^ phash) & (2**64 - 1)).count("1")
-            return (
-                True,
-                img.shape[0] == h and img.shape[1] == w,
-                ph == phash,
-                ham,
-                float(img.mean()),
-            )
-        except Exception:  # noqa: BLE001 — malformed payloads become rows
-            return (False, False, False, 64, None)
+    16-64px images. Values equal the scalar ``codecs.decode_image`` /
+    ``codecs.average_hash`` bit for bit; a payload that does not
+    decode reports (decode_ok=False, hamming 64, null mean)."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -64,8 +50,7 @@ def validate_images(images: DataFrame) -> DataFrame:
             # null w/h/phash (nullable parquet schema) must NOT reach the
             # int64 conversion — NaN silently casts to INT64_MIN and the
             # row would report decode_ok=True with garbage hamming. Such
-            # rows keep the all-False defaults, matching the scalar path
-            # (int(None)/None^int raise → (False, False, False, 64, None)).
+            # rows keep the all-False defaults, as undecodable rows do.
             meta_null = pdf[["w", "h", "phash"]].isna().to_numpy().any(axis=1)
             meta_w = pdf["w"].fillna(0).to_numpy(np.int64)
             meta_h = pdf["h"].fillna(0).to_numpy(np.int64)
@@ -73,18 +58,11 @@ def validate_images(images: DataFrame) -> DataFrame:
             bufs = pdf["bytes"].to_numpy(object)
             fmts = pdf["fmt"].to_numpy(object)
 
-            # batch path: _group_decode's (fmt, dims) groups whose dims
-            # the batch phash takes (multiples of 8); parse failures and
-            # other dims take the scalar path, null-metadata rows neither
+            # undecodable rows (not in any group) keep the defaults too
             rows = np.flatnonzero(~meta_null)
-            groups, fallback = _group_decode(bufs[rows], fmts[rows])
-            fallback = list(rows[fallback])
-            for idx, imgs in groups:
+            for idx, imgs in _group_decode(bufs[rows], fmts[rows])[0]:
                 ii = rows[idx]
                 h, w = imgs.shape[1:3]
-                if h % 8 or w % 8:
-                    fallback.extend(ii)
-                    continue
                 got_ph = codecs.average_hash_batch(imgs)
                 decode_ok[ii] = True
                 dims_ok[ii] = (meta_h[ii] == h) & (meta_w[ii] == w)
@@ -92,14 +70,6 @@ def validate_images(images: DataFrame) -> DataFrame:
                 hamming[ii] = codecs.hamming64_batch(got_ph, want_ph[ii])
                 for j, m in zip(ii, imgs.mean(axis=(1, 2, 3))):
                     mean_px[j] = float(m)
-
-            for i in fallback:
-                ok, dok, pm, ham, mp = scalar_row(
-                    bufs[i], fmts[i], int(meta_w[i]), int(meta_h[i]), int(want_ph[i])
-                )
-                decode_ok[i], dims_ok[i], phash_match[i] = ok, dok, pm
-                hamming[i] = ham
-                mean_px[i] = mp
 
             yield pd.DataFrame(
                 {
@@ -123,18 +93,17 @@ def validate_images(images: DataFrame) -> DataFrame:
 
 
 def _group_decode(bufs, fmts):
-    """Group an Arrow batch's payloads by (fmt, dims) and BATCH-decode
-    each group (fused ``decode_dctq_batch`` / one ``np.stack``), for
-    validate_images and resize_images. Returns (groups, fallback):
-    groups is a list of (row_indices ndarray, (B, h, w, 3) uint8 stack);
-    fallback holds the indices of rows that can't join a batchable group
-    (malformed header, truncated payload, non-3-channel) for the
-    caller's per-row scalar path."""
+    """Group an Arrow batch's payloads by (fmt, h, w, c) and BATCH-decode
+    each group (fused ``decode_dctq_batch`` / one ``np.stack``). Returns
+    (groups, undecodable): groups is a list of (row_indices ndarray,
+    (B, h, w, c) uint8 stack); undecodable holds the indices of rows
+    whose payload does not decode (unknown fmt, malformed header,
+    truncated payload, an empty image)."""
     import struct
     import zlib
 
     raw_groups: dict[tuple, tuple[list[int], list]] = {}
-    fallback: list[int] = []
+    undecodable: list[int] = []
     for i in range(len(bufs)):
         buf, fmt = bufs[i], fmts[i]
         try:
@@ -144,20 +113,20 @@ def _group_decode(bufs, fmts):
                     zlib.decompress(bytes(buf[9:])), dtype=np.int16
                 )
                 ph_, pw_ = h + ((-h) % 8), w + ((-w) % 8)
-                if c != 3 or len(raw) != c * ph_ * pw_:
-                    raise ValueError("unbatchable DCTQ payload")
-                key = ("dctq", h, w, c)
-                raw_groups.setdefault(key, ([], []))[0].append(i)
-                raw_groups[key][1].append(raw)
+                if len(raw) != c * ph_ * pw_:
+                    raise ValueError("truncated DCTQ payload")
+                key, payload = ("dctq", h, w, c), raw
             elif fmt == "ppm" and buf[:2] == b"P6":
-                img = codecs.decode_ppm(bytes(buf))
-                key = ("ppm",) + img.shape
-                raw_groups.setdefault(key, ([], []))[0].append(i)
-                raw_groups[key][1].append(img)
+                payload = codecs.decode_ppm(bytes(buf))
+                key = ("ppm",) + payload.shape
             else:
                 raise ValueError("unknown payload")
-        except Exception:  # noqa: BLE001 — malformed rows → scalar path
-            fallback.append(i)
+            if not all(key[1:]):
+                raise ValueError("empty image")
+            raw_groups.setdefault(key, ([], []))[0].append(i)
+            raw_groups[key][1].append(payload)
+        except Exception:  # noqa: BLE001 — malformed rows are reported
+            undecodable.append(i)
 
     groups = []
     for key, (idx, payloads) in raw_groups.items():
@@ -166,7 +135,20 @@ def _group_decode(bufs, fmts):
         else:
             imgs = np.stack(payloads)
         groups.append((np.asarray(idx), imgs))
-    return groups, fallback
+    return groups, undecodable
+
+
+def _decode_rgb(pdf: pd.DataFrame) -> list:
+    """``_group_decode`` for the operators that need 3-channel pixels:
+    raise a ValueError naming the first image whose payload does not
+    decode, or whose header says c != 3."""
+    groups, bad = _group_decode(pdf["bytes"].to_numpy(object), pdf["fmt"].to_numpy(object))
+    bad += [idx[0] for idx, imgs in groups if imgs.shape[3] != 3]
+    if bad:
+        raise ValueError(
+            f"image {pdf['image_id'].iloc[min(bad)]!r} does not decode to 3-channel pixels"
+        )
+    return groups
 
 
 def resize_images(images: DataFrame, out_h: int, out_w: int) -> DataFrame:
@@ -177,34 +159,22 @@ def resize_images(images: DataFrame, out_h: int, out_w: int) -> DataFrame:
     batch-decodes and resizes as ONE fancy-index over the (B, h, w, 3)
     stack — nearest-neighbor uses the exact index arrays of
     ``codecs.resize_nearest``, so pixels are bit-identical to the scalar
-    path; the phash uses the vectorized batch hash when the output dims
-    are multiples of 8 (same exact integer arithmetic)."""
-    hash_batch_ok = out_h % 8 == 0 and out_w % 8 == 0
+    reference, and the batch phash equals ``codecs.average_hash``. A
+    payload that does not decode to 3-channel pixels raises ValueError."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             n = len(pdf)
-            bufs = pdf["bytes"].to_numpy(object)
-            fmts = pdf["fmt"].to_numpy(object)
             out_bytes = np.empty(n, dtype=object)
             phashes = np.zeros(n, dtype=np.int64)
-            groups, fallback = _group_decode(bufs, fmts)
-            for idx, imgs in groups:
+            for idx, imgs in _decode_rgb(pdf):
                 h, w = imgs.shape[1:3]
                 yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
                 xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
                 small = np.ascontiguousarray(imgs[:, yi][:, :, xi])
-                if hash_batch_ok:
-                    phashes[idx] = codecs.average_hash_batch(small)
+                phashes[idx] = codecs.average_hash_batch(small)
                 for j, k in enumerate(idx):
                     out_bytes[k] = codecs.encode_ppm(small[j])
-                    if not hash_batch_ok:
-                        phashes[k] = codecs.average_hash(small[j])
-            for i in fallback:
-                img = codecs.decode_image(bufs[i], fmts[i])
-                small = codecs.resize_nearest(img, out_h, out_w)
-                out_bytes[i] = codecs.encode_ppm(small)
-                phashes[i] = codecs.average_hash(small)
             yield pd.DataFrame(
                 {
                     "image_id": pdf["image_id"].to_numpy(),
@@ -230,10 +200,9 @@ def _features_from_stack(imgs: np.ndarray) -> np.ndarray:
     All statistics derive from EXACT int64 pixel sums (sum, sum-of-
     squares over uint8 values are integers < 2^53, so float64 division
     reproduces them exactly), which makes the result independent of
-    batch size — the scalar fallback is literally this function on a
-    B=1 stack, bit-identical by construction. Layout: [mean_r, mean_g,
-    mean_b, std_r, std_g, std_b, lum_q00, lum_q01, lum_q10, lum_q11,
-    aspect, lum_std]."""
+    batch size: a B=1 stack is the scalar reference. Layout: [mean_r,
+    mean_g, mean_b, std_r, std_g, std_b, lum_q00, lum_q01, lum_q10,
+    lum_q11, aspect, lum_std]."""
     b, h, w = imgs.shape[:3]
     npx = h * w
     # exact integer sums WITHOUT materializing an int64 copy of the
@@ -282,23 +251,16 @@ def extract_features(images: DataFrame) -> DataFrame:
 
     BATCHED kernel (VERDICT r3): rows group by (fmt, dims) and each
     group runs batch decode → ONE vectorized statistics pass over the
-    (B, h, w, 3) stack (``_features_from_stack``); unbatchable rows
-    take the same function on a B=1 stack — identical values."""
+    (B, h, w, 3) stack (``_features_from_stack``). A payload that does
+    not decode to 3-channel pixels raises ValueError."""
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            n = len(pdf)
-            bufs = pdf["bytes"].to_numpy(object)
-            fmts = pdf["fmt"].to_numpy(object)
-            feats = np.empty(n, dtype=object)
-            groups, fallback = _group_decode(bufs, fmts)
-            for idx, imgs in groups:
+            feats = np.empty(len(pdf), dtype=object)
+            for idx, imgs in _decode_rgb(pdf):
                 fm = _features_from_stack(imgs)
                 for j, k in enumerate(idx):
                     feats[k] = fm[j]
-            for i in fallback:
-                img = codecs.decode_image(bufs[i], fmts[i])
-                feats[i] = _features_from_stack(img[None])[0]
             yield pd.DataFrame(
                 {"image_id": pdf["image_id"].to_numpy(), "features": feats}
             )

@@ -397,8 +397,8 @@ def semantic_decontamination(
         "semantic_decontamination's eval set",
         "pre-block it with hyperplane_signatures the way ann_lsh_topk does",
     )
-    id_type = corpus.schema["vec_id"].dataType.simpleString()
     if len(evals):
+        id_type = corpus.schema["vec_id"].dataType.simpleString()
         emat = _matrix(evals["embedding"])  # (m, dim)
         en = _seq_norms(emat)
         bc = corpus.sparkSession.sparkContext.broadcast((emat, en))
@@ -440,10 +440,13 @@ def semantic_decontamination(
         out = corpus.select("vec_id", "embedding").mapInPandas(
             score, schema=f"corpus_id {id_type}, n_eval_hits long, raw_max double"
         )
-    else:  # empty eval set: nothing can be contaminated
-        out = corpus.sparkSession.createDataFrame(
-            [], schema=f"corpus_id {id_type}, n_eval_hits long, raw_max double"
-        )
+    else:  # empty eval set: nothing can be contaminated. Derived from
+        # corpus, not a local relation, so a streaming corpus stays one
+        out = corpus.select(
+            F.col("vec_id").alias("corpus_id"),
+            F.lit(0).cast("long").alias("n_eval_hits"),
+            F.lit(None).cast("double").alias("raw_max"),
+        ).filter(F.lit(False))
     # Spark-side round: HALF_UP semantics identical to the JVM path
     return out.select(
         "corpus_id", "n_eval_hits", F.round("raw_max", 6).alias("max_sim")

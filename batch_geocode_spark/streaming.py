@@ -3,13 +3,16 @@ is strictly batch — SURVEY.md §2.9).
 
 Two shapes:
 
-- stream_geocode_to_snapshots: micro-batch ingestion of image+caption
-  parquet drops → per-batch geocode (stream-static broadcast join
-  against the gazetteer) → per-cell density deltas appended to a
-  SnapshotTable via foreachBatch. foreachBatch is the idiomatic way to
-  reuse the exact batch operators (incl. multi-stage aggregation) under
-  a streaming trigger, and gives exactly-once sinks through the
-  snapshot manifest (batch_id recorded per commit).
+- stream_geocode_to_snapshots and its siblings (pyramid, zonal, sites,
+  kNN): micro-batch ingestion of image+caption parquet drops →
+  per-batch geocode (stream-static broadcast join against the
+  gazetteer) → a delta appended to a SnapshotTable via foreachBatch.
+  foreachBatch is the idiomatic way to reuse the exact batch operators
+  (incl. multi-stage aggregation and windows) under a streaming
+  trigger, and every such sink gets exactly-once output from one
+  mechanism, ``_snapshot_delta_batch``'s batch-scoped namespaces.
+  A stateless batch operator needs no stream copy at all:
+  ``similarity.semantic_decontamination`` runs unchanged on a stream.
 
 - windowed_event_counts: a genuine watermarked event-time aggregation
   (tumbling window + late-data bound) for stream tables like ``events``.
@@ -39,25 +42,25 @@ def _image_stream(
     return reader.parquet(input_dir)
 
 
-def _start(stream: DataFrame, process_batch, checkpoint_dir: str, available_now: bool):
-    """Start a foreachBatch query: ``process_batch(batch_df, batch_id)``
-    runs once per micro-batch, and the checkpoint records source offsets
-    so a restart replays only the last uncommitted batch."""
-    writer = (
+def _start(stream: DataFrame, process_batch, checkpoint_dir: str):
+    """Start an availableNow foreachBatch query: ``process_batch(batch_df,
+    batch_id)`` runs once per micro-batch over the drops present at
+    start, and the checkpoint records source offsets so a restart
+    replays only the last uncommitted batch."""
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _snapshot_delta_batch(
     gazetteer: DataFrame, table: SnapshotTable, key_col: str, job_prefix: str, to_delta
 ):
-    """foreachBatch body shared by the snapshot sinks: geocode the batch,
-    turn its best rows into a delta with ``to_delta(best)``, and append
+    """foreachBatch body shared by every sink: geocode the batch, turn
+    its frames into a delta with ``to_delta(vetted, best)``, and append
     the delta under the batch-scoped namespace ``batch-<id>``. Later
     batches never collide with earlier ones, and a replayed batch reuses
     its namespace, whose committed buckets ``write_snapshotted`` skips —
@@ -66,8 +69,8 @@ def _snapshot_delta_batch(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        _, best = G.geocode_images(batch_df, gazetteer)
-        delta = to_delta(best).withColumn("batch_id", F.lit(int(batch_id)))
+        vetted, best = G.geocode_images(batch_df, gazetteer)
+        delta = to_delta(vetted, best).withColumn("batch_id", F.lit(int(batch_id)))
         write_snapshotted(
             delta,
             table,
@@ -88,7 +91,6 @@ def stream_geocode_to_snapshots(
     table: SnapshotTable,
     checkpoint_dir: str,
     res: int = 9,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Stream image parquet drops → geocode → cell density → snapshot.
@@ -102,11 +104,11 @@ def stream_geocode_to_snapshots(
     output): a replayed batch reuses its namespace and is idempotent."""
     process_batch = _snapshot_delta_batch(
         gazetteer, table, "cell", "stream-batch",
-        lambda best: T.cell_density(best, res=res),
+        lambda _, best: T.cell_density(best, res=res),
     )
     return _start(
         _image_stream(spark, input_dir, max_files_per_trigger),
-        process_batch, checkpoint_dir, available_now,
+        process_batch, checkpoint_dir
     )
 
 
@@ -158,55 +160,32 @@ def stream_pip_matches(
     )
 
 
-def stream_knn_to_parquet(
+def stream_knn_to_snapshots(
     spark: SparkSession,
     input_dir: str,
     gazetteer: DataFrame,
-    out_dir: str,
+    table: SnapshotTable,
     checkpoint_dir: str,
     k: int = 3,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Stream-static kNN: per-image candidate ranking needs a window
     over image_id — a stateful shape — so each micro-batch runs the
-    batch operator via foreachBatch and lands its results under a
-    ``batch_id=N`` partition with dynamic partition overwrite (an
-    image's candidates arrive together in one file drop, so per-batch
-    windows are exact).
-
-    EXACTLY-ONCE output: Structured Streaming replays the last
-    uncommitted batch after a crash; a plain append sink would
-    duplicate those rows. Keying the write by batch_id makes the replay
-    overwrite its own partition and nothing else — the same idempotence
-    contract stream_geocode_to_snapshots gets from per-batch snapshot
-    namespaces."""
-    return _start(
-        _image_stream(spark, input_dir, max_files_per_trigger),
-        _knn_batch_writer(gazetteer, out_dir, k), checkpoint_dir, available_now,
-    )
-
-
-def _knn_batch_writer(gazetteer: DataFrame, out_dir: str, k: int):
-    """foreachBatch body for stream_knn_to_parquet — module-level so the
-    replay-idempotence contract is directly testable: calling it twice
-    with the same batch_id must leave exactly one copy of the rows."""
+    batch ``knn_within_image`` over its vetted candidates (an image's
+    candidates arrive together in one file drop, so per-batch windows
+    are exact) and appends the rows under the batch-scoped namespace
+    ``batch-<id>``: the same exactly-once contract as
+    stream_geocode_to_snapshots, so a replayed batch is idempotent."""
     from batch_geocode_spark.operators import knn as KNN
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        vetted = G.vet_candidates(G.build_candidates(batch_df, gazetteer))
-        (
-            KNN.knn_within_image(vetted, k=k)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    return process_batch
+    process_batch = _snapshot_delta_batch(
+        gazetteer, table, "image_id", "stream-knn-batch",
+        lambda vetted, _: KNN.knn_within_image(vetted, k=k),
+    )
+    return _start(
+        _image_stream(spark, input_dir, max_files_per_trigger),
+        process_batch, checkpoint_dir
+    )
 
 
 def read_density(spark: SparkSession, table: SnapshotTable) -> DataFrame:
@@ -221,7 +200,6 @@ def stream_geocode_to_pyramid(
     table: SnapshotTable,
     checkpoint_dir: str,
     levels: tuple[int, ...] = (9, 6, 3),
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """INCREMENTAL pyramid maintenance (VERDICT r3 #6): each micro-batch
@@ -240,11 +218,11 @@ def stream_geocode_to_pyramid(
 
     process_batch = _snapshot_delta_batch(
         gazetteer, table, "cell", "stream-pyr-batch",
-        lambda best: tile_pyramid(T.cell_density(best, res=levels[0]), levels=levels),
+        lambda _, best: tile_pyramid(T.cell_density(best, res=levels[0]), levels=levels),
     )
     return _start(
         _image_stream(spark, input_dir, max_files_per_trigger),
-        process_batch, checkpoint_dir, available_now,
+        process_batch, checkpoint_dir
     )
 
 
@@ -268,7 +246,6 @@ def stream_zonal_deltas(
     table: SnapshotTable,
     checkpoint_dir: str,
     res: int = 9,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """INCREMENTAL zonal statistics (the streaming sibling of g17):
@@ -287,11 +264,11 @@ def stream_zonal_deltas(
 
     process_batch = _snapshot_delta_batch(
         gazetteer, table, "cell", "stream-zonal-batch",
-        lambda best: zonal_cells(T.cell_density(best, res=res), polygons, res=res),
+        lambda _, best: zonal_cells(T.cell_density(best, res=res), polygons, res=res),
     )
     return _start(
         _image_stream(spark, input_dir, max_files_per_trigger),
-        process_batch, checkpoint_dir, available_now,
+        process_batch, checkpoint_dir
     )
 
 
@@ -316,7 +293,6 @@ def stream_site_weights(
     gazetteer: DataFrame,
     table: SnapshotTable,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """INCREMENTAL weighted-site maintenance (the streaming sibling of
@@ -333,7 +309,7 @@ def stream_site_weights(
     so recompute-on-read serving is cheap and always consistent."""
     process_batch = _snapshot_delta_batch(
         gazetteer, table, "site_key", "stream-sites-batch",
-        lambda best: (
+        lambda _, best: (
             best.groupBy(
                 F.col("best_lat").alias("lat"), F.col("best_long").alias("lng")
             )
@@ -343,7 +319,7 @@ def stream_site_weights(
     )
     return _start(
         _image_stream(spark, input_dir, max_files_per_trigger),
-        process_batch, checkpoint_dir, available_now,
+        process_batch, checkpoint_dir
     )
 
 
@@ -367,27 +343,6 @@ def read_spatial_clusters(
         .agg(F.min("site_id").alias("site_id"), F.sum("w").alias("w"))
     )
     return cluster_sites(sites, eps_km=eps_km, min_pts=min_pts, res=res)
-
-
-def read_cluster_hulls(
-    spark: SparkSession,
-    table: SnapshotTable,
-    eps_km: float,
-    min_pts: int,
-    res: int,
-) -> DataFrame:
-    """Serving read: per-cluster convex-hull outlines over the
-    incrementally-maintained site table — ``read_spatial_clusters``'s
-    fold + the identical batch ``cluster.cluster_hulls`` tail, so a
-    stream of point deltas serves the same hull rings a batch run
-    produces (per-group state stays gazetteer-scale sites)."""
-    from batch_geocode_spark.operators.cluster import cluster_hulls
-
-    return cluster_hulls(
-        read_spatial_clusters(
-            spark, table, eps_km=eps_km, min_pts=min_pts, res=res
-        )
-    )
 
 
 def eval_shingle_index(eval_docs: DataFrame, n: int = 8) -> DataFrame:
@@ -436,48 +391,6 @@ def stream_ngram_decontamination(
         .withColumn("n_eval_docs", F.size(hit_ids).cast("long"))
         .filter(F.col("n_shared_shingles") > 0)
         .select("doc_id", "n_shared_shingles", "n_eval_docs")
-    )
-
-
-def eval_vector_index(eval_vecs: DataFrame) -> DataFrame:
-    """ONE-row static index for streaming semantic decontamination:
-    array of (eval_id, unit-normalized vector) structs."""
-    from batch_geocode_spark.operators.similarity import _as_double, _norm
-
-    v = _as_double(F.col("embedding"))
-    nrm = _norm(v)
-    unit = eval_vecs.select(
-        F.col("vec_id").alias("eval_id"),
-        F.transform(v, lambda x: x / nrm).alias("ev"),
-    )
-    return unit.agg(
-        F.collect_list(F.struct("eval_id", "ev")).alias("eval_vecs")
-    )
-
-
-def stream_semantic_decontamination(
-    vecs: DataFrame,
-    eval_index: DataFrame,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """CONTINUOUS semantic decontamination (the e06 shape as a stream
-    map): cosine of each arriving vector against every broadcast eval
-    vector via nested higher-order functions — per-row, stateless,
-    append-safe. Emits (corpus_id, n_eval_hits, max_sim) with the same
-    values as the batch ``similarity.semantic_decontamination``
-    (pytest-pinned parity; max_sim rounded 6dp both sides)."""
-    from batch_geocode_spark.operators.similarity import _as_double, _dot, _norm
-
-    cv = _as_double(F.col("embedding"))
-    cn = _norm(cv)
-    sims = F.transform(F.col("eval_vecs"), lambda e: _dot(cv, e["ev"]) / cn)
-    hits = F.filter(sims, lambda s: s >= F.lit(threshold))
-    return (
-        vecs.crossJoin(F.broadcast(eval_index))
-        .withColumn("n_eval_hits", F.size(hits).cast("long"))
-        .withColumn("max_sim", F.round(F.array_max(hits), 6))
-        .filter(F.col("n_eval_hits") > 0)
-        .select(F.col("vec_id").alias("corpus_id"), "n_eval_hits", "max_sim")
     )
 
 

@@ -41,12 +41,14 @@ import sys
 from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import wait_for_quiet  # noqa: E402
 
 
 def run_level(cores: int, n: int, data_dir: str) -> dict:
     import time
 
-    sys.path.insert(0, REPO)
     from batch_geocode_spark.loadmeter import host_busy_s as _host_busy_s
 
     busy0, t0 = _host_busy_s(), time.time()
@@ -77,25 +79,6 @@ def run_level(cores: int, n: int, data_dir: str) -> dict:
     return rep
 
 
-def wait_for_quiet(max_load: float = 5.0, timeout_s: int = 900) -> tuple[float, bool]:
-    """This host carries sustained EXTERNAL tenant load in multi-minute
-    bursts (2-5× timing swings); measuring scaling during a noisy window
-    distorts the high-core level far more than the low one. Wait
-    (bounded) for the 1-min load average to dip before measuring.
-    Returns (load_at_start, gate_timed_out) — a timed-out gate means the
-    pair ran KNOWINGLY contaminated and is flagged as such."""
-    import time
-
-    t0 = time.time()
-    while True:
-        load = os.getloadavg()[0]
-        if load <= max_load:
-            return load, False
-        if time.time() - t0 > timeout_s:
-            return load, True
-        time.sleep(15)
-
-
 def measure() -> None:
     lo = int(os.environ.get("SCALING_LO", "2"))
     hi = int(os.environ.get("SCALING_HI", "8"))
@@ -116,7 +99,9 @@ def measure() -> None:
     pairs: list[dict] = []
     best = None
     for i in range(attempts):
-        gate_load, gate_timed_out = wait_for_quiet()
+        # a noisy window distorts the high-core level far more than the
+        # low one; a timed-out gate flags the pair as contaminated
+        gate_load, gate_timed_out = wait_for_quiet(max_load=5.0, timeout_s=900)
         load_before = os.getloadavg()
         cur_hi = run_level(hi, n, data_dir)
         load_mid = os.getloadavg()

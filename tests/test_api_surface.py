@@ -9,7 +9,7 @@ import pathlib
 PKG = pathlib.Path(__file__).resolve().parent.parent / "batch_geocode_spark"
 
 # lower it when an option goes; never raise it to make room for one
-MAX_DEFAULTED_PARAMS = 177
+MAX_DEFAULTED_PARAMS = 171
 
 
 def _public_defs(body):

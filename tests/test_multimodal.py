@@ -126,18 +126,41 @@ def test_image_near_dup_pairs_via_phash(spark):
     assert not any(3 in p for p in pairs)
 
 
+IMAGES_SCHEMA = (
+    "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
+)
+
+
+def _payload_rows(name: str, img: np.ndarray, fmts=("ppm", "dctq")):
+    """One row per fmt carrying ``img``'s payload, with the phash and
+    dims of its decoded pixels (the scalar reference)."""
+    import pandas as pd
+
+    rows = []
+    for fmt in fmts:
+        buf = codecs.encode_image(img, fmt)
+        dec = codecs.decode_image(buf, fmt)
+        rows.append((f"{name}_{fmt}", buf, dec.shape[1], dec.shape[0], fmt, name,
+                     codecs.average_hash(dec)))
+    return pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
+
+
 def test_resize_batch_equals_scalar(spark):
-    """The grouped batch resize (round 4) must reproduce the per-row
-    scalar path bit for bit — same nearest-neighbor index arrays, same
-    PPM bytes, same phash — on both the batch-hash path (out dims
-    multiples of 8) and the scalar-hash path (odd out dims)."""
-    pdf = datagen.make_images(40, with_bytes=True)
-    df = spark.createDataFrame(
-        pdf,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
+    """The grouped batch resize must reproduce the scalar reference bit
+    for bit — same nearest-neighbor index arrays, same PPM bytes, same
+    phash — for out dims that are multiples of 8, odd out dims, and
+    out dims under 8 px (empty hash blocks), from regular and tiny
+    (5×3) inputs."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    tiny = rng.integers(0, 256, size=(3, 5, 3)).astype(np.uint8)
+    pdf = pd.concat(
+        [datagen.make_images(40, with_bytes=True), _payload_rows("tiny", tiny)],
+        ignore_index=True,
     )
-    for out_h, out_w in [(8, 8), (7, 9)]:
+    df = spark.createDataFrame(pdf, IMAGES_SCHEMA)
+    for out_h, out_w in [(8, 8), (7, 9), (3, 5)]:
         got = MM.resize_images(df, out_h, out_w).toPandas().set_index("image_id")
         for r in pdf.itertuples():
             img = codecs.decode_image(r.bytes, r.fmt)
@@ -168,9 +191,11 @@ def test_extract_features_batch_equals_scalar(spark):
 
 
 def test_validate_images_batch_equals_scalar(spark):
-    """The grouped batch kernel (round 3) must reproduce the per-row
-    scalar path bit for bit — including malformed payloads dropping to
-    the fallback with decode_ok=False and a null mean."""
+    """The grouped batch kernel must reproduce the scalar reference
+    (``decode_image`` + ``average_hash``) bit for bit on every shape:
+    odd dims, tiny 5×3 images (empty hash blocks), a 1-channel DCTQ
+    payload — and malformed payloads report decode_ok=False and a null
+    mean."""
     import pandas as pd
 
     pdf = datagen.make_images(40, with_bytes=True)
@@ -186,31 +211,16 @@ def test_validate_images_batch_equals_scalar(spark):
             "phash": [0, 0, 0],
         }
     )
-    # 20×12 images: a (fmt, dims) group the batch phash cannot take
     rng = np.random.default_rng(7)
-    odd_img = rng.integers(0, 256, size=(12, 20, 3)).astype(np.uint8)
-    odd = pd.DataFrame(
-        {
-            "image_id": [f"odd_{fmt}" for fmt in ("ppm", "dctq")],
-            "bytes": [codecs.encode_image(odd_img, fmt) for fmt in ("ppm", "dctq")],
-            "w": [20, 20],
-            "h": [12, 12],
-            "fmt": ["ppm", "dctq"],
-            "caption": ["o", "o"],
-            "phash": [
-                codecs.average_hash(
-                    codecs.decode_image(codecs.encode_image(odd_img, fmt), fmt)
-                )
-                for fmt in ("ppm", "dctq")
-            ],
-        }
-    )
-    full = pd.concat([pdf, bad, odd], ignore_index=True)
-    df = spark.createDataFrame(
-        full,
-        "image_id string, bytes binary, w int, h int, fmt string, "
-        "caption string, phash long",
-    )
+    shapes = [
+        _payload_rows("odd", rng.integers(0, 256, size=(12, 20, 3)).astype(np.uint8)),
+        _payload_rows("tiny", rng.integers(0, 256, size=(3, 5, 3)).astype(np.uint8)),
+        _payload_rows(
+            "gray", rng.integers(0, 256, size=(16, 16, 1)).astype(np.uint8), ("dctq",)
+        ),
+    ]
+    full = pd.concat([pdf, bad, *shapes], ignore_index=True)
+    df = spark.createDataFrame(full, IMAGES_SCHEMA)
     got = MM.validate_images(df).toPandas().set_index("image_id")
     for r in full.itertuples():
         row = got.loc[r.image_id]
@@ -226,3 +236,20 @@ def test_validate_images_batch_equals_scalar(spark):
             assert not bool(row["decode_ok"])
             assert int(row["phash_hamming"]) == 64
             assert row["mean_px"] is None or row["mean_px"] != row["mean_px"]
+
+
+@pytest.mark.parametrize("op", ["resize", "features"])
+def test_non_rgb_payload_raises_naming_the_image(spark, op):
+    """A DCTQ header may say c != 3; resize (which writes P6) and the
+    3-channel features cannot take such pixels and must fail with a
+    ValueError that names the image, not with a garbled payload or an
+    IndexError inside the worker."""
+    rng = np.random.default_rng(3)
+    gray = _payload_rows(
+        "gray16", rng.integers(0, 256, size=(16, 16, 1)).astype(np.uint8), ("dctq",)
+    )
+    df = spark.createDataFrame(gray, IMAGES_SCHEMA)
+    out = MM.resize_images(df, 8, 8) if op == "resize" else MM.extract_features(df)
+    with pytest.raises(Exception, match="gray16_dctq") as err:
+        out.collect()
+    assert "ValueError" in str(err.value)

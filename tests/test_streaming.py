@@ -28,7 +28,7 @@ def test_stream_geocode_matches_batch(spark, tmp_path_factory):
 
     gaz = datagen.gazetteer_to_spark(spark)
     q = streaming.stream_geocode_to_snapshots(
-        spark, in_dir, gaz, table, ckpt, res=9, available_now=True
+        spark, in_dir, gaz, table, ckpt, res=9
     )
     q.awaitTermination(300)
 
@@ -181,7 +181,7 @@ def test_stream_multi_batch_deltas_accumulate(spark, tmp_path_factory):
 
     gaz = datagen.gazetteer_to_spark(spark)
     q = streaming.stream_geocode_to_snapshots(
-        spark, in_dir, gaz, table, ckpt, res=9, available_now=True,
+        spark, in_dir, gaz, table, ckpt, res=9,
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -269,7 +269,7 @@ def test_stream_knn_matches_batch(spark, tmp_path_factory):
 
     in_dir = str(tmp_path_factory.mktemp("knn_in"))
     ckpt = str(tmp_path_factory.mktemp("knn_ckpt"))
-    out_dir = str(tmp_path_factory.mktemp("knn_out")) + "/results"
+    table = SnapshotTable(str(tmp_path_factory.mktemp("knn_snap")))
     images = datagen.images_to_spark(spark, 150, with_bytes=False)
     half_a = images.filter(F.col("image_id") < "img000000000075")
     half_b = images.filter(F.col("image_id") >= "img000000000075")
@@ -277,12 +277,12 @@ def test_stream_knn_matches_batch(spark, tmp_path_factory):
     half_b.coalesce(1).write.mode("append").parquet(in_dir)
 
     gaz = datagen.gazetteer_to_spark(spark)
-    q = streaming.stream_knn_to_parquet(
-        spark, in_dir, gaz, out_dir, ckpt, k=3, max_files_per_trigger=1
+    q = streaming.stream_knn_to_snapshots(
+        spark, in_dir, gaz, table, ckpt, k=3, max_files_per_trigger=1
     )
     q.awaitTermination(300)
     got = (
-        spark.read.parquet(out_dir)
+        table.read(spark)
         .orderBy("image_id", "knn_rank")
         .toPandas().reset_index(drop=True)
     )
@@ -311,23 +311,9 @@ def _assert_replay_idempotent(process_batch, images, total):
     assert total() > once
 
 
-def test_stream_knn_replay_is_idempotent(spark, tmp_path_factory):
-    """Crash-replay contract (ADVICE r2): the kNN sink keys its write by
-    batch_id with dynamic partition overwrite, so a replayed batch
-    overwrites its own partition and nothing else."""
-    out_dir = str(tmp_path_factory.mktemp("knn_replay")) + "/results"
-    images = datagen.images_to_spark(spark, 80, with_bytes=False)
-    gaz = datagen.gazetteer_to_spark(spark)
-    _assert_replay_idempotent(
-        streaming._knn_batch_writer(gaz, out_dir, k=3),
-        images,
-        lambda: spark.read.parquet(out_dir).count(),
-    )
-
-
-@pytest.mark.parametrize("sink", ["density", "pyramid", "zonal", "sites"])
+@pytest.mark.parametrize("sink", ["density", "pyramid", "zonal", "sites", "knn"])
 def test_snapshot_sink_replay_is_idempotent(spark, tmp_path_factory, monkeypatch, sink):
-    """The same replay contract for the four snapshot sinks: a replayed
+    """The replay contract for every foreachBatch sink: a replayed
     batch reuses its ``batch-<id>`` namespace, whose committed buckets
     are skipped. Each case drives the sink's own foreachBatch body,
     captured from ``_start``, and measures the sink's serving read."""
@@ -338,33 +324,36 @@ def test_snapshot_sink_replay_is_idempotent(spark, tmp_path_factory, monkeypatch
     images = datagen.images_to_spark(spark, 80, with_bytes=False)
     gaz = datagen.gazetteer_to_spark(spark)
     polys = _admin_polys_local(spark)
-    start, read, mass_col = {
+    start, read, mass = {
         "density": (
             lambda: streaming.stream_geocode_to_snapshots(spark, in_dir, gaz, table, ckpt),
             lambda: streaming.read_density(spark, table),
-            "n_images",
+            F.sum("n_images"),
         ),
         "pyramid": (
             lambda: streaming.stream_geocode_to_pyramid(spark, in_dir, gaz, table, ckpt),
             lambda: streaming.read_pyramid(spark, table),
-            "n_images",
+            F.sum("n_images"),
         ),
         "zonal": (
             lambda: streaming.stream_zonal_deltas(spark, in_dir, gaz, polys, table, ckpt),
             lambda: streaming.read_zonal(spark, table),
-            "n_images",
+            F.sum("n_images"),
         ),
         "sites": (
             lambda: streaming.stream_site_weights(spark, in_dir, gaz, table, ckpt),
             lambda: streaming.read_spatial_clusters(
                 spark, table, eps_km=2100.0, min_pts=1, res=3
             ),
-            "w",
+            F.sum("w"),
+        ),
+        "knn": (
+            lambda: streaming.stream_knn_to_snapshots(spark, in_dir, gaz, table, ckpt),
+            lambda: table.read(spark),
+            F.count(F.lit(1)),
         ),
     }[sink]
-    _assert_replay_idempotent(
-        start(), images, lambda: read().agg(F.sum(mass_col)).first()[0]
-    )
+    _assert_replay_idempotent(start(), images, lambda: read().agg(mass).first()[0])
 
 
 def test_stream_exact_dedup_across_batches(spark, sf_dir, tmp_path_factory):
@@ -423,7 +412,7 @@ def test_read_density_pyramid_over_streamed_deltas(spark, tmp_path_factory):
 
     gaz = datagen.gazetteer_to_spark(spark)
     q = streaming.stream_geocode_to_snapshots(
-        spark, in_dir, gaz, table, ckpt, res=9, available_now=True,
+        spark, in_dir, gaz, table, ckpt, res=9,
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -461,7 +450,7 @@ def test_incremental_pyramid_matches_batch(spark, tmp_path_factory):
 
     gaz = datagen.gazetteer_to_spark(spark)
     q = streaming.stream_geocode_to_pyramid(
-        spark, in_dir, gaz, table, ckpt, levels=(9, 6, 3), available_now=True,
+        spark, in_dir, gaz, table, ckpt, levels=(9, 6, 3),
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -559,21 +548,12 @@ def test_stream_decontamination_matches_batch(spark, tmp_path_factory):
         .sort_values("corpus_id")
         .reset_index(drop=True)
     )
-    vidx = streaming.eval_vector_index(eval_vecs)
-    got_sem = (
-        streaming.stream_semantic_decontamination(corpus_vecs, vidx, threshold=0.9)
-        .toPandas()
-        .sort_values("corpus_id")
-        .reset_index(drop=True)
-    )
-    assert list(got_sem["corpus_id"]) == list(want_sem["corpus_id"])
-    assert list(got_sem["n_eval_hits"]) == list(want_sem["n_eval_hits"])
-    assert np.allclose(got_sem["max_sim"], want_sem["max_sim"], atol=1e-6)
-
+    # the batch e06 operator itself on a file stream: exactly the batch frame
     vec_dir = str(tmp_path_factory.mktemp("sem_in"))
     corpus_vecs.coalesce(1).write.mode("append").parquet(vec_dir)
     vstream = spark.readStream.schema("vec_id long, embedding array<float>").parquet(vec_dir)
-    vout = streaming.stream_semantic_decontamination(vstream, vidx, threshold=0.9)
+    vout = S.semantic_decontamination(vstream, eval_vecs, threshold=0.9)
+    assert vout.isStreaming
     vq = (
         vout.writeStream.format("memory")
         .queryName("sem_stream")
@@ -585,8 +565,34 @@ def test_stream_decontamination_matches_batch(spark, tmp_path_factory):
     got_sem_stream = (
         spark.table("sem_stream").toPandas().sort_values("corpus_id").reset_index(drop=True)
     )
-    assert list(got_sem_stream["corpus_id"]) == list(got_sem["corpus_id"])
-    assert list(got_sem_stream["n_eval_hits"]) == list(got_sem["n_eval_hits"])
+    assert len(want_sem) > 0
+    assert got_sem_stream.equals(want_sem)
+
+
+def test_stream_semantic_decontamination_empty_eval(spark, tmp_path_factory):
+    """An empty eval set flags nothing; on a streaming corpus the result
+    must still be a streaming frame (a sink can attach) with zero rows."""
+    from batch_geocode_spark.operators import similarity as S
+
+    vec_dir = str(tmp_path_factory.mktemp("sem_empty_in"))
+    spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    ).coalesce(1).write.mode("append").parquet(vec_dir)
+    vstream = spark.readStream.schema("vec_id long, embedding array<float>").parquet(vec_dir)
+    no_evals = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = S.semantic_decontamination(vstream, no_evals, threshold=0.9)
+    assert out.isStreaming
+    q = (
+        out.writeStream.format("memory")
+        .queryName("sem_empty_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    got = spark.table("sem_empty_stream")
+    assert got.columns == ["corpus_id", "n_eval_hits", "max_sim"]
+    assert got.count() == 0
 
 
 def test_stream_zonal_deltas_match_batch(spark, tmp_path_factory):
@@ -611,7 +617,7 @@ def test_stream_zonal_deltas_match_batch(spark, tmp_path_factory):
     gaz = datagen.gazetteer_to_spark(spark)
     polys = _admin_polys_local(spark)
     q = streaming.stream_zonal_deltas(
-        spark, in_dir, gaz, polys, table, ckpt, res=9, available_now=True,
+        spark, in_dir, gaz, polys, table, ckpt, res=9,
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -652,7 +658,7 @@ def test_stream_site_weights_match_batch(spark, tmp_path_factory):
 
     gaz = datagen.gazetteer_to_spark(spark)
     q = streaming.stream_site_weights(
-        spark, in_dir, gaz, table, ckpt, available_now=True,
+        spark, in_dir, gaz, table, ckpt,
         max_files_per_trigger=1,
     )
     q.awaitTermination(300)
@@ -678,7 +684,9 @@ def test_stream_site_weights_match_batch(spark, tmp_path_factory):
     # hull serving read: the streamed-and-folded site table must yield
     # the identical hull rings the batch assignment produces
     got_h = (
-        streaming.read_cluster_hulls(spark, table, eps_km=eps, min_pts=min_pts, res=res)
+        C.cluster_hulls(
+            streaming.read_spatial_clusters(spark, table, eps_km=eps, min_pts=min_pts, res=res)
+        )
         .toPandas().sort_values(["cluster", "hull_idx"]).reset_index(drop=True)
     )
     want_h = (
