@@ -1348,11 +1348,11 @@ def g15_raster_roundtrip(spark, sf_dir):
 def g16_polygonize(spark, sf_dir):
     """Raster→vector polygonization: 4-connected regions of hot density
     cells (count ≥ 2) → one vector feature per region (label = min cell
-    id, n_cells, mass, degree bbox) via arithmetic neighbor equi-joins
-    + the alternating-star connected components (``tiles.
-    polygonize_cells``). Oracle: recursive-CTE transitive closure over
-    the same arithmetic adjacency — pins both the edge construction and
-    the CC labeling."""
+    id, n_cells, mass, degree bbox) from one capped collect of the hot
+    cells, with arithmetic neighbor lookups and the driver union-find
+    (``tiles.polygonize_cells``). Oracle: recursive-CTE transitive
+    closure over the same arithmetic adjacency — pins both the edge
+    construction and the CC labeling."""
     from batch_geocode_spark.operators import tiles as T
 
     _, best = _geocoded(spark, sf_dir)

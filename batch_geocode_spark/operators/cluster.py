@@ -21,15 +21,11 @@ Scale design (the part that matters at 100 TB):
    It is gazetteer-scale by construction (point 1), the same size class
    as the gazetteer that ``geocode.build_candidates`` already
    broadcasts, so one capped collect (``MAX_SITES``) brings it to the
-   driver and one vectorized numpy kernel runs DBSCAN there;
-   ``cluster_summary`` and ``cluster_hulls`` each collect the (local)
-   assignment once more and compute in numpy and plain Python. At this
-   size a distributed plan (ring join, checkpoints, a
-   connected-components loop, a gap search in array expressions, a
-   pandas UDF per cluster) costs Spark jobs and JIT-compiled plan code,
-   not compute; the driver path runs only the jobs of those collects.
-   A table over the cap raises an actionable error instead of running
-   the driver out of memory.
+   driver and one vectorized numpy kernel runs DBSCAN there; the
+   summary and hulls read the local assignment back, without a job up
+   to ``operators.LOCAL_ROWS`` sites. A distributed plan here costs
+   Spark jobs and JIT-compiled plan code, not compute. A table over
+   the cap raises an actionable error, not a driver out of memory.
 3. **Candidate pairs come from the cell ring** (same pattern as
    ``knn.knn_spatial``): each site meets only sites in its cell + 8
    neighbors at ``res``, found by ``np.searchsorted`` over the
@@ -62,7 +58,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import BooleanType, StructType
 
 from batch_geocode_spark.functions.cells import np_cell_encode, np_cell_ring_batch
 from batch_geocode_spark.functions.geo import np_haversine_km
@@ -120,12 +116,10 @@ def cluster_sites(sites: DataFrame, eps_km: float, min_pts: int, res: int) -> Da
         "round the coordinates before clustering so that nearby points "
         "share a site",
     )
-    schema = StructType(
-        sel.schema.fields
-        + [
-            StructField("cluster", sel.schema["site_id"].dataType),
-            StructField("is_core", BooleanType()),
-        ]
+    schema = (
+        StructType(list(sel.schema.fields))  # a copy: add() appends in place
+        .add("cluster", sel.schema["site_id"].dataType)
+        .add("is_core", BooleanType())
     )
     return sites.sparkSession.createDataFrame(
         _dbscan(pdf, eps_km, min_pts, res), schema
@@ -275,10 +269,8 @@ def cluster_summary(assigned: DataFrame) -> DataFrame:
     wrap-around gap (every cluster that does not span ±180) this is
     ALGEBRAICALLY the plain weighted mean; a wrap-spanning pair like
     {+179.9, -179.9} lands at ±180 instead of the misleading ~0 a
-    plain mean gives. Gap candidates are the internal gaps between
-    sorted distinct longitudes (origin = the eastern edge) and the wrap
-    gap (origin = the minimum); the largest gap wins, ties go to the
-    smaller origin.
+    plain mean gives. The gap search is :func:`_largest_gap_origins`
+    over the longitudes in 1e-8 units.
 
     Eager, like ``cluster_sites``: the assignment is collected once
     (:func:`_collect_sites`) and summarised on the driver in Spark SQL's
@@ -288,15 +280,9 @@ def cluster_summary(assigned: DataFrame) -> DataFrame:
     count), then the sum as a double divided by the point count. The
     rows come back as a local relation."""
     spark = assigned.sparkSession
-    schema = StructType(
-        [
-            StructField("cluster", assigned.schema["cluster"].dataType),
-            StructField("n_sites", LongType(), False),
-            StructField("n_core_sites", LongType()),
-            StructField("n_points", LongType()),
-            StructField("centroid_lat", DoubleType()),
-            StructField("centroid_lng", DoubleType()),
-        ]
+    schema = (
+        f"cluster {assigned.schema['cluster'].dataType.simpleString()}, n_sites long not null, "
+        "n_core_sites long, n_points long, centroid_lat double, centroid_lng double"
     )
     pdf = _collect_sites(assigned)
     if pdf.empty:
@@ -313,20 +299,8 @@ def cluster_summary(assigned: DataFrame) -> DataFrame:
     lat8, lng8 = _half_up(spark, lat, 8), _half_up(spark, lng, 8)
     starts = np.flatnonzero(np.r_[True, code[1:] != code[:-1]])
 
-    # one gap candidate per distinct (cluster, lng): the gap up from the
-    # previous distinct longitude, or, for a cluster's smallest, the
-    # wrap gap from its largest
-    d = np.flatnonzero(np.r_[True, (code[1:] != code[:-1]) | (lng[1:] != lng[:-1])])
-    dcode, d8, dlng = code[d], lng8[d], lng[d]
-    first = np.r_[True, dcode[1:] != dcode[:-1]]
-    last = np.r_[first[1:], True]
-    gap = np.r_[0, np.diff(d8)]
-    gap[first] = d8[first] - d8[last] + 360 * 10**8
-    # the winner is the maximum of (gap, -origin as decimal, origin):
-    # the last candidate of each cluster in that order
-    rank = np.lexsort((dlng, -d8, gap, dcode))
-    win = rank[np.r_[dcode[rank][1:] != dcode[rank][:-1], True]]
-    origin, origin8 = dlng[win][code], d8[win][code]
+    win = _largest_gap_origins(code, lng8, 360 * 10**8)
+    origin8 = lng8[win][code]
     rot8 = lng8 - origin8 + np.where(lng8 < origin8, 360 * 10**8, 0)
 
     n_points = np.add.reduceat(w, starts)
@@ -338,7 +312,7 @@ def cluster_summary(assigned: DataFrame) -> DataFrame:
         # decimal → double is correctly rounded, as int / int is in Python
         return np.array([s / 10**8 for s in sums8]) / n_points
 
-    raw_lng = mean(rot_sum) + origin[starts]
+    raw_lng = mean(rot_sum) + lng[win]
     raw_lng = np.where(raw_lng > 180, raw_lng - 360, raw_lng)
     out = pd.DataFrame(
         {
@@ -365,6 +339,21 @@ def _collect_sites(assigned: DataFrame) -> pd.DataFrame:
         "round the coordinates before clustering so that nearby points "
         "share a site",
     )
+
+
+def _largest_gap_origins(group: np.ndarray, v: np.ndarray, period: int) -> np.ndarray:
+    """Per group (codes 0..k-1; arrays sorted by (group, v)), the index
+    of its rotation origin on a circle of ``period`` integer units: the
+    element just east of the largest gap. The candidates are each
+    element's gap up from the one before it (zero for a repeat) and,
+    for the group's first, the wrap gap from its last; the larger gap
+    wins and ties go to the smaller origin."""
+    starts = np.flatnonzero(np.r_[True, group[1:] != group[:-1]])
+    ends = np.r_[starts[1:], len(v)] - 1
+    gap = np.r_[0, np.diff(v)]
+    gap[starts] = v[starts] - v[ends] + period
+    # each group's last element in (group, gap, -v) order is its winner
+    return np.lexsort((-v, gap, group))[ends]
 
 
 def _half_up(spark, x: np.ndarray, places: int) -> np.ndarray:

@@ -12,6 +12,8 @@ Scale design:
 - raster assembly groups fine cells under their parent tile and
   renders a (tile_px × tile_px) count grid per tile in applyInPandas
   (vectorized numpy scatter, no per-row Python).
+- polygonize runs on the driver over the hot cells (≤ 4^res rows, at
+  most ``MAX_CELLS``), where a distributed plan's jobs outweigh its work.
 """
 
 from __future__ import annotations
@@ -21,7 +23,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from batch_geocode_spark.functions.cells import _Y_SHIFT, cell_encode, cell_parent
+from batch_geocode_spark.functions.cells import _Y_SHIFT, cell_encode, cell_parent, np_cell_decode
+from batch_geocode_spark.operators import collect_capped
+from batch_geocode_spark.operators.cluster import _half_up, _largest_gap_origins
+from batch_geocode_spark.operators.dedup import _union_find_components
+
+MAX_CELLS = 1_000_000  # hot cells polygonize_cells collects to the driver
 
 
 def cell_density(
@@ -199,101 +206,71 @@ def polygonize_cells(
     cells with count ≥ ``threshold`` into 4-connected regions and emit
     one vector feature per region — (region label = min cell id,
     n_cells, n_images, degree bbox). With ``raster_blobs_to_cells``
-    this completes the raster↔vector loop in both directions: density
-    grids come back as first-class vector features, not just pixels.
+    this completes the raster↔vector loop in both directions.
 
-    Scale shape: neighbor edges are PURE ARITHMETIC equi-joins (east =
-    +1 with antimeridian wrap, north = +2^29 — no spatial library, no
-    theta-join), then the depth-robust alternating-star connected
-    components from the dedup family (O(log n) rounds). Everything runs
-    over the DENSITY table (≤ 4^res rows), orders smaller than the
-    point corpus; isolated hot cells become singleton regions via a
-    coalesce, never a join miss. Latitude clamps (no north wrap).
+    Eager: the hot cells (at most 4^res rows, capped at ``MAX_CELLS``)
+    are collected once and polygonized on the driver into a local
+    relation. Neighbors are arithmetic (east = x + 1 with antimeridian
+    wrap, north = +2^29, latitude clamps), found by ``np.searchsorted``;
+    the dedup family's union-find labels the regions.
 
     The longitude bbox is WRAP-AWARE via largest-gap rotation over the
-    region's distinct x columns (exact integer arithmetic): a region
-    crossing ±180 reports an interval with ``bb_w > bb_e`` (the
-    GeoJSON antimeridian-bbox convention, RFC 7946 §5.2) whose width
-    equals the region's true x extent, instead of a world-spanning
-    min/max. Regions not crossing ±180 keep the plain min/max exactly.
+    region's x columns (``cluster._largest_gap_origins``, exact integer
+    arithmetic): a region crossing ±180 reports ``bb_w > bb_e`` (the
+    GeoJSON antimeridian-bbox convention, RFC 7946 §5.2) with its true
+    x extent, a region on every column the canonical [-180, 180], and
+    any other region its plain min/max. Bounds are ``round(…, 6)``-ed
+    as Spark SQL does (``cluster._half_up``).
     """
-    from batch_geocode_spark.functions.cells import _RES_SHIFT, _Y_SHIFT
-    from batch_geocode_spark.operators.dedup import connected_components
-
+    spark = density.sparkSession
+    schema = (
+        f"region long{'' if density.schema['cell'].nullable else ' not null'}, "
+        "n_cells long not null, n_images long, bb_w double, bb_s double, bb_e double, bb_n double"
+    )
+    hot = collect_capped(
+        density.filter((F.col("n_images") >= threshold) & F.col("cell").isNotNull())
+        .select("cell", "n_images"),
+        MAX_CELLS,
+        "polygonize_cells' hot cells",
+        "raise the threshold or polygonize at a coarser res",
+    ).sort_values("cell")
+    if hot.empty:
+        return spark.createDataFrame([], schema)
     n = 2**res
-    hot = density.filter(F.col("n_images") >= threshold).select("cell", "n_images")
-    x = F.col("cell") % F.lit(_Y_SHIFT)
-    east = F.col("cell") - x + (x + 1) % F.lit(n)
-    north = F.col("cell") + F.lit(_Y_SHIFT)
-    nbrs = hot.select(
-        F.col("cell").alias("cell_a"),
-        F.explode(F.array(east, north)).alias("cell_b"),
-    )
-    edges = nbrs.join(hot.select(F.col("cell").alias("cell_b")), "cell_b")
-    cc = connected_components(edges, id_a="cell_a", id_b="cell_b")
-    labeled = (
-        hot.join(cc.withColumnRenamed("node", "cell"), "cell", "left")
-        .withColumn("region", F.coalesce("component", F.col("cell")))
-    )
-    from pyspark.sql import Window
+    cell = hot["cell"].to_numpy(np.int64)
+    _, x, y = np_cell_decode(cell)
+    # edges join row indices of the sorted cells, so the union-find's
+    # minimum index is the region's minimum cell
+    nbr = np.r_[cell - x + (x + 1) % n, cell + _Y_SHIFT]
+    j = np.minimum(np.searchsorted(cell, nbr), len(cell) - 1)
+    hit = cell[j] == nbr
+    label = np.arange(len(cell))
+    cc = _union_find_components(pd.DataFrame({"a": np.r_[label, label][hit], "b": j[hit]}))
+    label[cc["node"].to_numpy()] = cc["component"].to_numpy()
 
-    # per-region rotation origin: the x column immediately east of the
-    # largest circular gap between the region's distinct x values —
-    # pure integer windows over the tiny region table
-    labeled = labeled.withColumn("x", F.col("cell") % F.lit(_Y_SHIFT))
-    xs = labeled.select("region", "x").distinct()
-    w_x = Window.partitionBy("region").orderBy("x")
-    gap_internal = (
-        xs.withColumn("prev", F.lag("x").over(w_x))
-        .filter(F.col("prev").isNotNull())
-        .select(
-            "region",
-            F.col("x").alias("origin"),
-            (F.col("x") - F.col("prev")).alias("gap"),
-        )
+    # cells sorted by (region, x): each region a run, its columns ascending
+    order = np.lexsort((x, label))
+    region, x, y = cell[label[order]], x[order], y[order]
+    first = np.r_[True, region[1:] != region[:-1]]
+    group, starts = np.cumsum(first) - 1, np.flatnonzero(first)
+    origin = x[_largest_gap_origins(group, x, n)]
+    rot_max = np.maximum.reduceat((x - origin[group]) % n, starts)
+    # rot_max == n-1 ⟺ the column just west of the origin is present
+    # ⟺ the LARGEST gap is 1 ⟺ every column is present: a full ring
+    full_ring = rot_max == n - 1
+    raw_e = (origin + rot_max + 1) / n * 360.0 - 180.0
+    bounds = {
+        "bb_w": np.where(full_ring, -180.0, origin / n * 360.0 - 180.0),
+        "bb_s": np.minimum.reduceat(y, starts) / n * 180.0 - 90.0,
+        "bb_e": np.where(full_ring, 180.0, np.where(raw_e > 180.0, raw_e - 360.0, raw_e)),
+        "bb_n": (np.maximum.reduceat(y, starts) + 1) / n * 180.0 - 90.0,
+    }
+    out = pd.DataFrame(
+        {
+            "region": region[starts],
+            "n_cells": np.diff(np.r_[starts, len(cell)]),
+            "n_images": np.add.reduceat(hot["n_images"].to_numpy(np.int64)[order], starts),
+        }
+        | {k: _half_up(spark, v, 6) / 1e6 for k, v in bounds.items()}
     )
-    gap_wrap = xs.groupBy("region").agg(
-        F.min("x").alias("origin"),
-        (F.min("x") - F.max("x") + F.lit(n)).alias("gap"),
-    )
-    w_pick = Window.partitionBy("region").orderBy(
-        F.col("gap").desc(), F.col("origin").asc()
-    )
-    origins = (
-        gap_internal.unionByName(gap_wrap)
-        .withColumn("rn", F.row_number().over(w_pick))
-        .filter(F.col("rn") == 1)
-        .select("region", "origin")
-    )
-
-    rot_x = (F.col("x") - F.col("origin") + F.lit(n)) % F.lit(n)
-    yy = F.floor((F.col("cell") % F.lit(_RES_SHIFT)) / F.lit(_Y_SHIFT)).cast("double")
-    # max(rot_x) == n-1 ⟺ the column just west of the origin is present
-    # ⟺ the LARGEST gap is 1 ⟺ every column is present: a full ring,
-    # reported as the canonical [-180, 180]
-    full_ring = F.max(rot_x) == n - 1
-    raw_w = F.first("origin").cast("double") / n * 360.0 - 180.0
-    raw_e = (
-        (F.first("origin") + F.max(rot_x) + 1).cast("double") / n * 360.0 - 180.0
-    )
-    return (
-        labeled.join(F.broadcast(origins), "region")
-        .withColumn("bs", yy / n * 180.0 - 90.0)
-        .withColumn("bn", (yy + 1) / n * 180.0 - 90.0)
-        .groupBy("region")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("n_images").alias("n_images"),
-            F.round(F.when(full_ring, F.lit(-180.0)).otherwise(raw_w), 6).alias(
-                "bb_w"
-            ),
-            F.round(F.min("bs"), 6).alias("bb_s"),
-            F.round(
-                F.when(full_ring, F.lit(180.0)).otherwise(
-                    F.when(raw_e > 180.0, raw_e - 360.0).otherwise(raw_e)
-                ),
-                6,
-            ).alias("bb_e"),
-            F.round(F.max("bn"), 6).alias("bb_n"),
-        )
-    )
+    return spark.createDataFrame(out, schema)

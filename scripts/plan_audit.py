@@ -4,8 +4,8 @@ result) and tabulate the plan-shape counters the 100TB story depends
 on (exchanges, broadcasts, join strategies, scans, codegen spans,
 Arrow stages). Writes PLANS.md.
 
-Eager operators (minhash/d04 pair tables, DBSCAN site tables, t07's
-vocabulary pass) materialize their small intermediates at CONSTRUCTION
+Eager operators (minhash/d04 pair tables, DBSCAN site tables, g16's
+hot cells, t07's vocabulary pass) materialize their small intermediates at CONSTRUCTION
 by documented contract, so their terminal plans read checkpointed
 tables — the audit marks those rows `eager` rather than pretending the
 lineage is in the terminal plan.
@@ -44,7 +44,7 @@ def main() -> int:
     spark = get_spark(app_name="plan_audit")
     rows = []
     # rows whose constructor runs Spark jobs by documented eager contract
-    eager = {"d04", "d05", "c01", "e04", "g18", "g19", "g20", "t07"}
+    eager = {"d04", "d05", "c01", "e04", "g16", "g18", "g19", "g20", "t07"}
     for name, fn in entry_mod.queries().items():
         df = fn(spark, sf_dir)
         df.count()  # execute so AQE finalizes its runtime strategy choices

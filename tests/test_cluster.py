@@ -300,15 +300,18 @@ def test_half_up_follows_the_jvm_string(spark):
 
 def test_summary_and_clusters_job_count(spark, fixture_points):
     """spatial_clusters + cluster_summary().collect() on the fixture: the
-    site collect and the summary's collect of the assignment (6 jobs
-    with the Spark summary plan)."""
+    site collect only (6 jobs with the Spark summary plan). The
+    assignment is a local relation, so the summary collects it, and its
+    own result is collected, without a job."""
 
     def run():
         C.cluster_summary(
             C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
         ).collect()
 
-    assert _jobs(spark, run) <= 3
+    assert _jobs(spark, run) <= 2
+    assigned = C.spatial_clusters(fixture_points, eps_km=EPS, min_pts=MIN_PTS, res=RES)
+    assert _jobs(spark, lambda: C.cluster_summary(assigned).collect()) == 0
 
 
 def test_spatial_clusters_job_count(spark, fixture_points):
@@ -324,6 +327,37 @@ def test_spatial_clusters_job_count(spark, fixture_points):
 def test_res_guard(fixture_points):
     with pytest.raises(ValueError, match="res must be >= 2"):
         C.spatial_clusters(fixture_points, eps_km=100.0, min_pts=MIN_PTS, res=1)
+
+
+def test_collect_capped_local_relation(spark, monkeypatch):
+    """A small local relation is collected without a job, with the
+    values and dtypes of Arrow's ``toPandas`` (int32 stays int32, a
+    nullable long with a null is float64, nested structs, timestamps
+    and maps convert alike); above ``LOCAL_ROWS`` rows, and for a
+    frame that is not local, the Arrow collect runs."""
+    import datetime
+
+    import batch_geocode_spark.operators as O
+
+    pdf = pd.DataFrame(
+        {
+            "i": np.array([1, 2, 3], np.int32),
+            "n": pd.array([1, None, 3], dtype="Int64"),
+            "s": ["a", None, "c"],
+            "rings": [[[{"x": 1.0, "y": 2.0}]], None, [[{"x": 3.0, "y": 4.0}]]],
+            "ts": [datetime.datetime(2020, 1, 1, 3), None, datetime.datetime(2021, 2, 3)],
+        }
+    )
+    local = spark.createDataFrame(
+        pdf, "i int, n long, s string, rings array<array<struct<x:double,y:double>>>, ts timestamp"
+    ).withColumn("m", F.create_map(F.lit("k"), F.col("i")))
+    for df in (local, local.filter("i > 1"), local.limit(0)):
+        got = []
+        assert _jobs(spark, lambda: got.append(O.collect_capped(df, 10, "t", "r"))) == 0
+        pd.testing.assert_frame_equal(got[0], df.toPandas(), check_exact=True)
+    monkeypatch.setattr(O, "LOCAL_ROWS", 2)
+    assert _jobs(spark, lambda: O.collect_capped(local, 10, "t", "r")) == 1
+    assert _jobs(spark, lambda: O.collect_capped(spark.range(3), 10, "t", "r")) == 1
 
 
 def test_site_cap(fixture_points, monkeypatch):
@@ -470,9 +504,14 @@ def test_cluster_hulls_known_shapes(spark):
         (3, 7.0, -9.0),
     ]
     sdf = spark.createDataFrame(
-        [(c, lat, lng, 1, True) for (c, lat, lng) in rows], _SITES_SCHEMA
+        pd.DataFrame(
+            [(c, lat, lng, 1, True) for (c, lat, lng) in rows],
+            columns=["cluster", "lat", "lng", "w", "is_core"],
+        ),
+        _SITES_SCHEMA,
     )
-    assert _jobs(spark, lambda: C.cluster_hulls(sdf)) <= 1
+    # a local assignment is collected without a job
+    assert _jobs(spark, lambda: C.cluster_hulls(sdf)) == 0
     _assert_same_rows(C.cluster_hulls(sdf), _spark_cluster_hulls(sdf), ["cluster", "hull_idx"])
     got = (
         C.cluster_hulls(sdf)

@@ -213,18 +213,19 @@ def test_spatial_knn_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_polygonize_edges_are_equi_joins(spark):
-    """g16's neighbor edges are arithmetic equi-joins on the cell id —
-    never a cartesian/theta join — and the CC label join back onto the
-    density stays an equi-join too."""
+def test_polygonize_is_a_local_relation(spark):
+    """g16 collects its hot cells once and polygonizes them on the
+    driver: the plan it returns is a local table scan, with no
+    exchange, no join and no pandas stage left to run."""
     from batch_geocode_spark.operators import tiles as T
 
     images = datagen.images_to_spark(spark, 300, with_bytes=False)
     gaz = datagen.gazetteer_to_spark(spark)
     _, best = G.geocode_images(images, gaz)
     plan = _plan(T.polygonize_cells(T.cell_density(best, res=9), res=9, threshold=1))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "LocalTableScan" in plan
+    for node in ("Exchange", "Join", "InPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
 
 
 def test_zonal_stats_broadcasts_polygons(spark):

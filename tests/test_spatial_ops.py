@@ -1,3 +1,5 @@
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -241,50 +243,61 @@ def test_raster_blobs_to_cells_roundtrip(geo):
     assert back["n_images"].tolist() == want["n_images"].tolist()
 
 
+def _enc(res, x, y):
+    return res * (2**58) + y * (2**29) + x
+
+
+# hand-built res-3 density grids (cell, n_images), polygonized at
+# threshold 2
+_GRIDS = {
+    "l_bar_singleton": [
+        # L-shape: (1,1), (2,1), (2,2)
+        (_enc(3, 1, 1), 5), (_enc(3, 2, 1), 3), (_enc(3, 2, 2), 2),
+        # vertical bar: (5, 4), (5, 5)
+        (_enc(3, 5, 4), 2), (_enc(3, 5, 5), 7),
+        # isolated singleton
+        (_enc(3, 7, 7), 9),
+        # below threshold -> dropped
+        (_enc(3, 0, 5), 1),
+    ],
+    # (7, 3) and (0, 3) are 4-connected across the antimeridian
+    "wrap": [(_enc(3, 7, 3), 2), (_enc(3, 0, 3), 2)],
+    # every x column at y = 2
+    "full_ring": [(_enc(3, x, 2), 2) for x in range(8)],
+}
+
+
+def _grid(spark, name):
+    return spark.createDataFrame(_GRIDS[name], "cell long, n_images long")
+
+
 def test_polygonize_cells(spark):
     """Hand-built res-3 density grid: an L-shaped 3-cell region, a
     2-cell vertical bar, an isolated singleton, and a below-threshold
     cell that must vanish. Labels = min cell id per region."""
     res, n = 3, 8
-    enc = lambda x, y: res * (2**58) + y * (2**29) + x  # noqa: E731
-    rows = [
-        # L-shape: (1,1), (2,1), (2,2)
-        (enc(1, 1), 5), (enc(2, 1), 3), (enc(2, 2), 2),
-        # vertical bar: (5, 4), (5, 5)
-        (enc(5, 4), 2), (enc(5, 5), 7),
-        # isolated singleton
-        (enc(7, 7), 9),
-        # below threshold -> dropped
-        (enc(0, 5), 1),
-    ]
-    dens = spark.createDataFrame(rows, "cell long, n_images long")
     got = (
-        tiles.polygonize_cells(dens, res=res, threshold=2)
+        tiles.polygonize_cells(_grid(spark, "l_bar_singleton"), res=res, threshold=2)
         .toPandas()
         .sort_values("region")
         .reset_index(drop=True)
     )
     assert len(got) == 3
-    l_shape = got[got.region == enc(1, 1)].iloc[0]
+    l_shape = got[got.region == _enc(res, 1, 1)].iloc[0]
     assert l_shape["n_cells"] == 3 and l_shape["n_images"] == 10
     # bbox spans cells x in [1,2], y in [1,2] at res 3 (45-degree cells)
     assert l_shape["bb_w"] == pytest.approx(1 / n * 360 - 180)
     assert l_shape["bb_e"] == pytest.approx(3 / n * 360 - 180)
-    bar = got[got.region == enc(5, 4)].iloc[0]
+    bar = got[got.region == _enc(res, 5, 4)].iloc[0]
     assert bar["n_cells"] == 2 and bar["n_images"] == 9
-    single = got[got.region == enc(7, 7)].iloc[0]
+    single = got[got.region == _enc(res, 7, 7)].iloc[0]
     assert single["n_cells"] == 1 and single["n_images"] == 9
 
 
 def test_polygonize_antimeridian_wrap(spark):
     """East neighbor wraps at x = 2^res - 1: cells (7, 3) and (0, 3) at
     res 3 are 4-connected across the antimeridian."""
-    res = 3
-    enc = lambda x, y: res * (2**58) + y * (2**29) + x  # noqa: E731
-    dens = spark.createDataFrame(
-        [(enc(7, 3), 2), (enc(0, 3), 2)], "cell long, n_images long"
-    )
-    got = tiles.polygonize_cells(dens, res=res, threshold=2).toPandas()
+    got = tiles.polygonize_cells(_grid(spark, "wrap"), res=3, threshold=2).toPandas()
     assert len(got) == 1
     assert got.iloc[0]["n_cells"] == 2
     # wrap-aware bbox (RFC 7946): interval crosses ±180 with
@@ -299,14 +312,133 @@ def test_polygonize_antimeridian_wrap(spark):
 def test_polygonize_full_ring_bbox(spark):
     """A region covering every x column at its latitude is a full ring:
     reported as the canonical [-180, 180] interval."""
-    res, n = 3, 8
-    enc = lambda x, y: res * (2**58) + y * (2**29) + x  # noqa: E731
-    dens = spark.createDataFrame(
-        [(enc(x, 2), 2) for x in range(n)], "cell long, n_images long"
-    )
-    got = tiles.polygonize_cells(dens, res=res, threshold=2).toPandas()
+    got = tiles.polygonize_cells(_grid(spark, "full_ring"), res=3, threshold=2).toPandas()
     assert len(got) == 1
     assert got.iloc[0]["bb_w"] == -180.0 and got.iloc[0]["bb_e"] == 180.0
+
+
+def test_polygonize_cell_cap(spark, monkeypatch):
+    monkeypatch.setattr(tiles, "MAX_CELLS", 5)  # the grid has 6 hot cells
+    with pytest.raises(
+        ValueError, match=r"more than 5 rows.*raise the threshold or polygonize at a coarser res"
+    ):
+        tiles.polygonize_cells(_grid(spark, "l_bar_singleton"), res=3, threshold=2)
+
+
+def _spark_polygonize_cells(density, res, threshold):
+    """The Spark plan ``polygonize_cells`` ran before it moved to the
+    driver: arithmetic neighbor equi-joins, the alternating-star
+    connected components, a largest-gap search in windows and a
+    broadcast join — the row-equality reference."""
+    from pyspark.sql import Window
+
+    from batch_geocode_spark.functions.cells import _RES_SHIFT, _Y_SHIFT
+    from batch_geocode_spark.operators.dedup import connected_components
+
+    n = 2**res
+    hot = density.filter(F.col("n_images") >= threshold).select("cell", "n_images")
+    x = F.col("cell") % F.lit(_Y_SHIFT)
+    east = F.col("cell") - x + (x + 1) % F.lit(n)
+    north = F.col("cell") + F.lit(_Y_SHIFT)
+    nbrs = hot.select(
+        F.col("cell").alias("cell_a"),
+        F.explode(F.array(east, north)).alias("cell_b"),
+    )
+    edges = nbrs.join(hot.select(F.col("cell").alias("cell_b")), "cell_b")
+    cc = connected_components(edges, id_a="cell_a", id_b="cell_b")
+    labeled = (
+        hot.join(cc.withColumnRenamed("node", "cell"), "cell", "left")
+        .withColumn("region", F.coalesce("component", F.col("cell")))
+        .withColumn("x", F.col("cell") % F.lit(_Y_SHIFT))
+    )
+    xs = labeled.select("region", "x").distinct()
+    w_x = Window.partitionBy("region").orderBy("x")
+    gap_internal = (
+        xs.withColumn("prev", F.lag("x").over(w_x))
+        .filter(F.col("prev").isNotNull())
+        .select("region", F.col("x").alias("origin"), (F.col("x") - F.col("prev")).alias("gap"))
+    )
+    gap_wrap = xs.groupBy("region").agg(
+        F.min("x").alias("origin"), (F.min("x") - F.max("x") + F.lit(n)).alias("gap")
+    )
+    w_pick = Window.partitionBy("region").orderBy(F.col("gap").desc(), F.col("origin").asc())
+    origins = (
+        gap_internal.unionByName(gap_wrap)
+        .withColumn("rn", F.row_number().over(w_pick))
+        .filter(F.col("rn") == 1)
+        .select("region", "origin")
+    )
+    rot_x = (F.col("x") - F.col("origin") + F.lit(n)) % F.lit(n)
+    yy = F.floor((F.col("cell") % F.lit(_RES_SHIFT)) / F.lit(_Y_SHIFT)).cast("double")
+    full_ring = F.max(rot_x) == n - 1
+    raw_w = F.first("origin").cast("double") / n * 360.0 - 180.0
+    raw_e = (F.first("origin") + F.max(rot_x) + 1).cast("double") / n * 360.0 - 180.0
+    return (
+        labeled.join(F.broadcast(origins), "region")
+        .withColumn("bs", yy / n * 180.0 - 90.0)
+        .withColumn("bn", (yy + 1) / n * 180.0 - 90.0)
+        .groupBy("region")
+        .agg(
+            F.count(F.lit(1)).alias("n_cells"),
+            F.sum("n_images").alias("n_images"),
+            F.round(F.when(full_ring, F.lit(-180.0)).otherwise(raw_w), 6).alias("bb_w"),
+            F.round(F.min("bs"), 6).alias("bb_s"),
+            F.round(
+                F.when(full_ring, F.lit(180.0)).otherwise(
+                    F.when(raw_e > 180.0, raw_e - 360.0).otherwise(raw_e)
+                ),
+                6,
+            ).alias("bb_e"),
+            F.round(F.max("bn"), 6).alias("bb_n"),
+        )
+    )
+
+
+def _random_grid(spark, res=12, seed=0):
+    """Blobs of res-12 cells, two of them on the antimeridian and one
+    on the north edge; bounds there are not multiples of 1e-6."""
+    rng = np.random.default_rng(seed)
+    n = 2**res
+    x, y = [], []
+    for cx, cy in [(0, 700), (n - 1, 2000), (900, n - 1)] + [
+        (int(a), int(b)) for a, b in rng.integers(0, n, (30, 2))
+    ]:
+        k = int(rng.integers(1, 300))
+        x.append((cx + rng.integers(-15, 16, k)) % n)
+        y.append(np.clip(cy + rng.integers(-15, 16, k), 0, n - 1))
+    cell = np.unique(_enc(res, np.concatenate(x), np.concatenate(y)))
+    pdf = pd.DataFrame({"cell": cell, "n_images": rng.integers(1, 4, len(cell))})
+    return spark.createDataFrame(pdf, "cell long, n_images long")
+
+
+@pytest.mark.parametrize(
+    "case", ["l_bar_singleton", "wrap", "full_ring", "no_hot_cells", "random_res12",
+             "g16_sf0.01", "g16_sf0.1"],
+)
+def test_polygonize_matches_the_spark_plan(spark, sf_dir, case):
+    """Equal to the replaced Spark plan, schema and rows, exactly."""
+    res, threshold = 3, 2
+    if case in _GRIDS:
+        density = _grid(spark, case)
+    elif case == "no_hot_cells":
+        density, threshold = _grid(spark, "l_bar_singleton"), 10
+    elif case == "random_res12":
+        density, res = _random_grid(spark), 12
+    else:  # the g16 density, at a sibling scale factor of the test data
+        from batch_geocode_spark.entry_queries import TILE_RES, _geocoded
+
+        _, best = _geocoded(spark, os.path.join(os.path.dirname(sf_dir), case.split("_")[1]))
+        density, res = tiles.cell_density(best, res=TILE_RES), TILE_RES
+    got = tiles.polygonize_cells(density, res=res, threshold=threshold)
+    want = _spark_polygonize_cells(density, res, threshold)
+    assert got.schema == want.schema
+    a = got.toPandas().sort_values("region").reset_index(drop=True)
+    b = want.toPandas().sort_values("region").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+    assert (len(a) == 0) == (case == "no_hot_cells")
+    if case == "random_res12":  # bounds off the 1e-6 grid were rounded
+        col = (a["bb_w"] + 180) / 360 * 2**res
+        assert (col != col.round()).any()
 
 
 def test_zonal_stats(geo, spark):
